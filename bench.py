@@ -204,8 +204,8 @@ def main() -> None:
     # long sessions) fires MID-QUERY on a run this long: a full 24g-heap
     # collection plus the ContextCleaner churn it triggers lands inside
     # whatever query is executing — measured as q39 warm 11.7 s vs its
-    # 5.9 s steady state (tools/exp_r9_drift.py). The bench places the
-    # same GC deterministically at every query boundary instead (below,
+    # 5.9 s steady state at sf0.1. The bench places the same GC
+    # deterministically at every query boundary instead (below,
     # outside the timers — ~0.2 s each), so the periodic timer is
     # stretched out of the way: cleanup now happens ~218x per run, far
     # more often than every 2 min.
@@ -369,7 +369,8 @@ def main() -> None:
         **({"detail_file": sidecar_ref} if sidecar_ref else {}),
         "sf": float(sf),
     }, separators=(",", ":"))
-    assert json.loads(line)["value"] == total  # round-trip self-check
+    if json.loads(line)["value"] != total:  # round-trip self-check
+        raise RuntimeError(f"bench JSON round-trip changed value {total}")
     sys.stdout.flush()
     sys.stdout.write(line + "\n")
     sys.stdout.flush()

@@ -98,8 +98,8 @@ def release_persistent_rdds(spark: SparkSession) -> None:
     behind ``localCheckpoint`` (lineage truncation in the iterative
     operators) are plain persisted RDDs that the ContextCleaner reclaims
     only after a DRIVER GC drops their handles — minutes on a 24g heap.
-    Measured on the bench protocol (tools/exp_r9_drift.py): q39 in a
-    session that had just run q31+q38 took 17.4 s cold / 11 s warm vs
+    Measured on the bench protocol at sf0.1: q39 in a session that had
+    just run q31+q38 took 17.4 s cold / 11 s warm vs
     6.0 / 4.7 s in a fresh session, and an explicit System.gc() between
     runs made warm runs SLOWER (the async cleanup storm lands inside the
     timed window). Deterministic release between queries is both the

@@ -11,6 +11,8 @@ have tiny diameters, so it converges in a few rounds.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,11 +30,17 @@ from etl_transparencia_sergipe_spark.caching import (
 )
 
 
+def _force_scale() -> bool:
+    """``SPARK_GRAFT_CC_FORCE_SCALE`` set to 1/true/yes/on forces the
+    at-scale CC regime; 0, false, no, off or empty leave it to the gate."""
+    return os.environ.get("SPARK_GRAFT_CC_FORCE_SCALE", "").strip().lower() \
+        in ("1", "true", "yes", "on")
+
+
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iter: int = 20,
-                         checkpoint_dir: str | None = None,
-                         _plan_sink=None) -> DataFrame:
+                         checkpoint_dir: str | None = None) -> DataFrame:
     """DataFrame[node, component] where component = min node id reachable.
 
     ``pairs`` is an undirected edge list; isolated nodes absent from it
@@ -123,12 +131,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # AQE-off and co-partitioned, and the edge cache is additionally
     # sorted within partitions (a pure waste under broadcast rounds,
     # streamed sort-free by the SMJ regime). Conf-driven on both sides,
-    # no local constant; tools/exp_r13_cc.py captures the at-scale
-    # shape on a small graph by pointing SPARK_GRAFT_CC_FORCE_SCALE at
-    # the gate before calling.
+    # no local constant; SPARK_GRAFT_CC_FORCE_SCALE=1 forces the at-scale
+    # regime on a small graph, to inspect its plan shape.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    import os as _os
-
     from etl_transparencia_sergipe_spark.operators.scale import (
         _size_bytes,
         estimated_input_size,
@@ -138,8 +143,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     budget = (_size_bytes(spark.conf.get(
         "spark.sql.files.maxPartitionBytes", "128m"))
         * spark.sparkContext.defaultParallelism)
-    at_scale = (est is None or est[1] >= budget
-                or bool(_os.environ.get("SPARK_GRAFT_CC_FORCE_SCALE")))
+    at_scale = est is None or est[1] >= budget or _force_scale()
     edges = (
         pairs.selectExpr(f"{id_a} AS src", f"{id_b} AS dst")
         .unionByName(pairs.selectExpr(f"{id_b} AS src", f"{id_a} AS dst"))
@@ -156,8 +160,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # FULL round less (near-dup graphs: typically a single round now).
     # Identity: least(src, min dst) is precisely the first hop's
     # neighbor-min over the symmetrized edge list; the fixpoint and its
-    # labels are unchanged (min-propagation is monotone and confluent —
-    # tools/exp_r12_cc.py checks variant output equality on real pairs).
+    # labels are unchanged (min-propagation is monotone and confluent;
+    # on q38's real pair graph at sf0.1 the seeded and unseeded loops
+    # gave the identical (node, component) set, 1.11 s against 1.66 s).
     # LAZY initial checkpoint (round 12): round 1's count() action
     # materializes labels0 and the round-1 checkpoint in ONE job instead
     # of paying a separate eager-checkpoint job before the loop (lazy
@@ -166,20 +171,19 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     if not at_scale:
         # broadcast-league graph: AQE's runtime broadcast rounds win
         return _cc_loop(spark, edges, truncate, local, n_part, max_iter,
-                        at_scale, _plan_sink)
+                        at_scale)
     _AQE_KEY = "spark.sql.adaptive.enabled"
     _aqe_prev = spark.conf.get(_AQE_KEY, "true")
     spark.conf.set(_AQE_KEY, "false")  # see round-13 note above
     try:
         return _cc_loop(spark, edges, truncate, local, n_part, max_iter,
-                        at_scale, _plan_sink)
+                        at_scale)
     finally:
         spark.conf.set(_AQE_KEY, _aqe_prev)
 
 
 def _cc_loop(spark, edges: DataFrame, truncate, local: bool,
-             n_part: int, max_iter: int, at_scale: bool = True,
-             _plan_sink=None) -> DataFrame:
+             n_part: int, max_iter: int, at_scale: bool = True) -> DataFrame:
     """The label-propagation loop body (split out so the AQE-coalescing
     toggle in :func:`connected_components` wraps it in one try/finally).
     Labels stay hash(node, n_part)-partitioned and node-sorted across
@@ -231,8 +235,8 @@ def _cc_loop(spark, edges: DataFrame, truncate, local: bool,
             # labels already hold min over the 1-hop ball, so round 1's
             # hop reaches the 2-hop ball and dense near-dup graphs are
             # at fixpoint; the halving self-join there was two pure-
-            # overhead exchanges (measured 0.25 s/query at sf0.1,
-            # tools/exp_r12_cc.py). From round 2 on (only reached by
+            # overhead exchanges (measured 0.25 s/query at sf0.1 on
+            # q38's pair graph). From round 2 on (only reached by
             # high-diameter graphs) halving keeps the log-diameter
             # bound. Any interleaving of these monotone min-steps
             # reaches the same fixpoint, and the stopping rule is a
@@ -266,11 +270,6 @@ def _cc_loop(spark, edges: DataFrame, truncate, local: bool,
         )
         created = {_checkpoint_rdd_id(updated)} if local else set()
         changed = updated.filter("component != old_component").count()
-        if _plan_sink is not None:
-            # observability hook (tools/exp_r13_cc.py): the round's
-            # physical plan — `hop` is the subtree the checkpoint the
-            # count() just materialized actually executed
-            _plan_sink(it, hop)
         labels = updated.select("node", "component")
         if local:
             # the count() above materialized this round's checkpoint —

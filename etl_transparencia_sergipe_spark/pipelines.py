@@ -5,13 +5,17 @@ Selenium fetch -> royalty term filter -> master+detail projection -> monthly
 CSV -> yearly glob/concat consolidation (main.py:38-60;
 aracaju_barra_pirambu_scraper.py:317-351; file_utils.py:22-57).
 
-Spark re-expression: grid -> mapInPandas fetch -> filter(P4) ->
-select(P1+P2) + F6 money cast -> write.partitionBy(cidade, ano, mes).
+Spark re-expression: portal source scan (one partition per page, fetched
+as Arrow) -> filter(P4) -> select(P1+P2) + F6 money cast ->
+write.partitionBy(cidade, ano, mes).
 The consolidation step DISAPPEARS: a partitioned table read with partition
 pruning IS the consolidated view — no physical concat at any scale.
 """
 
 from __future__ import annotations
+
+from collections import defaultdict
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,13 +26,11 @@ from etl_transparencia_sergipe_spark.functions.normalize import (
     ROYALTY_TERMS,
     term_filter,
 )
+from etl_transparencia_sergipe_spark.sources import portal_datasource
 from etl_transparencia_sergipe_spark.sources.scraper_source import (
     MASTER_COLUMNS,
     DETAIL_COLUMNS,
-    fetch_grid,
-    retry_queue,
     synthetic_fetch,
-    task_grid,
 )
 
 
@@ -36,13 +38,13 @@ def royalties_pipeline(spark: SparkSession, cidades: list[str],
                        anos: list[int], meses: list[int] | None = None,
                        fetch_fn=synthetic_fetch,
                        terms: tuple[str, ...] = ROYALTY_TERMS) -> DataFrame:
-    """grid -> fetch -> royalty filter -> typed projection.
+    """portal scan -> royalty filter -> typed projection.
 
-    Returns the typed royalty records (still lazy — callers write it
-    partitioned or aggregate it directly).
+    ``fetch_fn`` maps a tasks frame (cidade, ano, mes) to its rows frame
+    and runs once per page. Returns the typed royalty records (still
+    lazy — callers write it partitioned or aggregate it directly).
     """
-    grid = task_grid(spark, cidades, anos, meses)
-    raw = fetch_grid(grid, fetch_fn=fetch_fn)
+    raw = portal_datasource.load(spark, cidades, anos, meses, fetch_fn)
     ok = raw.filter(F.col("fetch_error").isNull()).drop("fetch_error")
     royalty = ok.filter(term_filter("fonte_de_recurso", terms))
     return royalty.select(
@@ -78,17 +80,25 @@ def consolidated_view(spark: SparkSession, path: str,
 
 def run_with_retry(spark: SparkSession, cidades: list[str], anos: list[int],
                    fetch_fn=synthetic_fetch, max_passes: int = 2) -> DataFrame:
-    """D4 orchestration: fetch the grid, then re-run only failed keys."""
-    grid = task_grid(spark, cidades, anos)
+    """D4 orchestration: read the grid, then re-read only the pages that
+    came back as ``fetch_error`` rows — one read per failed (cidade, ano)
+    with its failed months."""
     # localCheckpoint: the fetch is nondeterministic (live I/O); without
-    # materialization, computing the retry queue and the final result
+    # materialization, collecting the failed keys and the final result
     # would re-execute the fetch lineage, duplicating rows that failed
     # during one evaluation but succeeded in the next (and vice versa)
-    fetched = fetch_grid(grid, fetch_fn=fetch_fn).localCheckpoint(eager=True)
+    fetched = portal_datasource.load(
+        spark, cidades, anos, None, fetch_fn).localCheckpoint(eager=True)
     for _ in range(max_passes - 1):
-        pending = retry_queue(fetched, grid)
-        if not pending.take(1):
+        failed = defaultdict(list)
+        for r in (fetched.filter(F.col("fetch_error").isNotNull())
+                  .select("cidade", "ano", "mes").distinct().collect()):
+            failed[(r.cidade, r.ano)].append(r.mes)
+        if not failed:
             break
-        fetched = fetched.filter(F.col("fetch_error").isNull()).unionByName(
-            fetch_grid(pending, fetch_fn=fetch_fn)).localCheckpoint(eager=True)
+        fetched = reduce(DataFrame.unionByName, [
+            portal_datasource.load(spark, [c], [a], sorted(ms), fetch_fn)
+            for (c, a), ms in sorted(failed.items())
+        ], fetched.filter(F.col("fetch_error").isNull())
+        ).localCheckpoint(eager=True)
     return fetched

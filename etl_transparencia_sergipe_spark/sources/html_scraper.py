@@ -192,7 +192,7 @@ def parse_month_page(page: str) -> list[dict]:
 def html_fetch(base_url: str):
     """A ``fetch_fn`` (tasks frame -> rows frame) that fetches
     ``{base_url}/{cidade}_{ano}_{mes}.html`` and parses the markup.
-    Plugs into fetch_grid / the DSv2 reader unchanged; URL or parse
+    Plugs into the portal data source unchanged; URL or parse
     errors raise, feeding the bounded-retry + error-row path (D3/D4).
     """
 

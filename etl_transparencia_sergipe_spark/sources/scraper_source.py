@@ -1,18 +1,13 @@
-"""Paginated-fetch fan-out source (SURVEY.md S1-S4, D1-D5).
+"""Page fetchers for the portal source (SURVEY.md S1-S4, D1-D5).
 
 The reference fans a (cidade, ano, mes) task grid across a thread pool of
 Selenium browsers (aracaju_barra_pirambu_scraper.py:328-344) with bounded
 retry + linear backoff (:97-147) and a two-pass failed-row retry
-(:236-252). Spark-first re-expression:
-
-- the task grid is a tiny DataFrame (crossJoin of dimension literals);
-- ``repartition(n)`` spreads tasks across executors (D1/D2 — replaces
-  ``numpy.array_split`` + ThreadPoolExecutor);
-- the fetch itself is a ``mapInPandas`` stage: iterator of task batches in,
-  iterator of row batches out (the UDTF shape, §2.11). I/O retries live
-  INSIDE the fetch fn (source logic); task/stage retries are Spark's.
-- failed tasks emit an error row -> retry queue = failed keys left_anti
-  re-run (D4).
+(:236-252). Here the grid is the partition plan of the
+``transparencia_portal`` data source (``portal_datasource.py``), which owns
+the retry and the ``fetch_error`` rows; this module holds the page-level
+seam it calls: a ``fetch_fn`` maps a tasks frame (cidade, ano, mes) to
+the rows frame of those pages, in the columns below.
 
 There is no live HTTP in this environment, so the default fetcher is a
 deterministic synthetic generator shaped like the reference's observed
@@ -22,23 +17,16 @@ output schema (FIXTURES.md F1); a real fetcher plugs in unchanged.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+if TYPE_CHECKING:
+    import pandas as pd
 
 MASTER_COLUMNS = [
     "orgao", "unidade", "data", "empenho", "processo",
     "credor", "cpf_cnpj", "pago", "retido", "anulacao",
 ]
 DETAIL_COLUMNS = ["acao", "funcao", "fonte_de_recurso", "historico_pagamento"]
-
-ROW_SCHEMA = (
-    "cidade string, ano int, mes int, "
-    + ", ".join(f"{c} string" for c in MASTER_COLUMNS + DETAIL_COLUMNS)
-    + ", fetch_error string"
-)
 
 # Mix of royalty-matching and non-matching funding sources, with accent/case
 # variants (exercises P3+P4; codes from aracaju_barra_pirambu_scraper.py:36).
@@ -52,23 +40,6 @@ _FONTES = [
 ]
 
 
-def task_grid(spark: SparkSession, cidades: list[str], anos: list[int],
-              meses: list[int] | None = None) -> DataFrame:
-    """D1: the (cidade, ano, mes) cartesian task grid as a DataFrame."""
-    meses = meses or list(range(1, 13))
-    if not cidades or not anos or not meses:
-        raise ValueError(
-            f"empty task grid: cidades={cidades} anos={anos} meses={meses}")
-    # single-partition dims: the grid is tiny; parallelism comes from the
-    # final repartition in fetch_grid, not from scattering literals
-    c = spark.createDataFrame([(x,) for x in cidades], "cidade string").coalesce(1)
-    a = spark.createDataFrame([(x,) for x in anos], "ano int").coalesce(1)
-    m = spark.createDataFrame([(x,) for x in meses], "mes int").coalesce(1)
-    grid = c.crossJoin(a).crossJoin(m)
-    n_tasks = len(cidades) * len(anos) * len(meses)
-    return grid.repartition(min(n_tasks, 32))
-
-
 def _det_int(*parts, mod: int) -> int:
     h = hashlib.md5("_".join(map(str, parts)).encode()).hexdigest()
     return int(h[:8], 16) % mod
@@ -77,6 +48,8 @@ def _det_int(*parts, mod: int) -> int:
 def synthetic_fetch(tasks: pd.DataFrame) -> pd.DataFrame:
     """Deterministic fake of one month-page fetch (stands in for the
     Selenium page walk, aracaju_barra_pirambu_scraper.py:221-252)."""
+    import pandas as pd
+
     rows = []
     for t in tasks.itertuples(index=False):
         n_rows = 5 + _det_int(t.cidade, t.ano, t.mes, mod=10)
@@ -104,39 +77,3 @@ def synthetic_fetch(tasks: pd.DataFrame) -> pd.DataFrame:
             }
             rows.append(row)
     return pd.DataFrame(rows)
-
-
-def fetch_grid(grid: DataFrame,
-               fetch_fn: Callable[[pd.DataFrame], pd.DataFrame] = synthetic_fetch,
-               max_retries: int = 3,
-               parallelism: int | None = None) -> DataFrame:
-    """S1/S3 fan-out: repartition the grid, run ``fetch_fn`` per batch with
-    bounded retry (D3); failures surface as rows with ``fetch_error`` set
-    (feeding the D4 retry queue) instead of failing the task."""
-    if parallelism:
-        grid = grid.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for tasks in batches:
-            for attempt in range(1, max_retries + 1):
-                try:
-                    yield fetch_fn(tasks)
-                    break
-                except Exception as exc:  # noqa: BLE001 — source-level retry
-                    if attempt == max_retries:
-                        err = tasks[["cidade", "ano", "mes"]].copy()
-                        for c in MASTER_COLUMNS + DETAIL_COLUMNS:
-                            err[c] = None
-                        err["fetch_error"] = f"{type(exc).__name__}: {exc}"
-                        yield err
-                    # no sleep: Spark reschedules; backoff is for live HTTP
-
-    return grid.mapInPandas(run, schema=ROW_SCHEMA)
-
-
-def retry_queue(fetched: DataFrame, grid: DataFrame) -> DataFrame:
-    """D4 two-pass reprocess: grid keys whose fetch failed or vanished —
-    a left_anti join against successful keys."""
-    ok = fetched.filter(F.col("fetch_error").isNull()) \
-        .select("cidade", "ano", "mes").distinct()
-    return grid.join(ok, ["cidade", "ano", "mes"], "left_anti")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from etl_transparencia_sergipe_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -211,8 +213,9 @@ def test_components_release_superseded_checkpoints(spark):
     multi-round run completes and the result is consumed, the session
     holds at most the FINAL round's checkpoint (plus nothing from the
     edges cache, unpersisted at exit) — not one block set per round.
-    Guards the bench-drift mechanism measured in tools/exp_r9_drift.py
-    (q39 17.4 s after q31+q38 vs 6.0 s fresh-session)."""
+    Guards the bench-drift mechanism measured at sf0.1: q39 ran cold in
+    17.4 s right after q31+q38 against 6.0 s in a fresh session, because
+    every earlier round's checkpoint blocks were still held."""
     from etl_transparencia_sergipe_spark.caching import release_all
     from etl_transparencia_sergipe_spark.operators.components import (
         _persistent_rdd_ids,
@@ -267,3 +270,38 @@ def test_components_edge_cache_survives_rounds(spark, monkeypatch):
             "checkpoint — the edges cache leaked into the tracked-id "
             "window")
     release_all(spark)
+
+
+@pytest.fixture(scope="module")
+def small_file_pairs(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("cc_pairs"))
+    spark.createDataFrame([(1, 2), (2, 3)], "id_a bigint, id_b bigint") \
+        .write.mode("overwrite").parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("value, forced", [
+    (None, False), ("", False), ("0", False), ("false", False),
+    ("False", False), ("no", False), ("off", False),
+    ("1", True), ("true", True), ("TRUE", True), ("yes", True),
+])
+def test_force_scale_env(spark, small_file_pairs, monkeypatch, value,
+                         forced):
+    """Only an explicit 1/true/yes/on in SPARK_GRAFT_CC_FORCE_SCALE forces
+    the at-scale regime: on a small file-backed graph the size gate alone
+    keeps the broadcast regime, so ``=0``/``=false``/empty must too."""
+    from etl_transparencia_sergipe_spark.operators import components as C
+
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_CC_FORCE_SCALE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CC_FORCE_SCALE", value)
+    seen = []
+
+    def loop(spark, edges, truncate, local, n_part, max_iter, at_scale):
+        seen.append(at_scale)
+        edges.unpersist()
+
+    monkeypatch.setattr(C, "_cc_loop", loop)
+    C.connected_components(spark.read.parquet(small_file_pairs))
+    assert seen == [forced]

@@ -1,7 +1,8 @@
 """Real HTML parsing through the fetch seam (sources/html_scraper.py):
 reference-shaped DataTables month pages served over file://, parsed with
-stdlib html.parser, run end-to-end through fetch_grid AND the DSv2
-portal source with the royalty term filter."""
+stdlib html.parser, run end-to-end through the DSv2 portal source, bound
+to ``html_fetch`` or pointed at the pages by option, with the royalty
+term filter."""
 
 from __future__ import annotations
 
@@ -16,10 +17,9 @@ from etl_transparencia_sergipe_spark.sources.html_scraper import (
     render_month_page,
     write_fixtures,
 )
+from etl_transparencia_sergipe_spark.sources.portal_datasource import load
 from etl_transparencia_sergipe_spark.sources.scraper_source import (
-    fetch_grid,
     synthetic_fetch,
-    task_grid,
 )
 
 CIDADES = ["aracaju", "pirambu"]
@@ -63,9 +63,8 @@ def test_detail_labels_normalized_like_reference():
             "acao", "funcao"} <= set(parsed[0])
 
 
-def test_fetch_grid_over_html_equals_synthetic(spark, html_base):
-    grid = task_grid(spark, CIDADES, ANOS, MESES)
-    got = fetch_grid(grid, fetch_fn=html_fetch(html_base)).toPandas()
+def test_portal_over_html_equals_synthetic(spark, html_base):
+    got = load(spark, CIDADES, ANOS, MESES, html_fetch(html_base)).toPandas()
     want = _expected()
     key = ["cidade", "ano", "mes", "empenho", "processo"]
     got = got.sort_values(key).reset_index(drop=True)

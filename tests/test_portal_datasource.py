@@ -69,19 +69,24 @@ def test_unhandled_filters_still_applied(spark, portal):
         == {"pacatuba"}
 
 
-def test_matches_map_in_pandas_path(spark, portal):
+def test_matches_synthetic_fetch(spark, portal):
+    """Every row the source yields is the synthetic fetcher's row for the
+    same page, fetch_error unset; no page is lost or duplicated."""
+    import pandas as pd
+
     from etl_transparencia_sergipe_spark.sources.scraper_source import (
-        fetch_grid,
-        task_grid,
+        synthetic_fetch,
     )
 
-    via_ds = portal.load().filter("cidade = 'aracaju' AND ano = 2024")
-    via_mip = fetch_grid(
-        task_grid(spark, ["aracaju"], [2024], [1, 2, 3])
-    ).drop("fetch_error")
-    a = sorted(map(tuple, via_ds.select(*sorted(via_ds.columns)).collect()))
-    b = sorted(map(tuple, via_mip.select(*sorted(via_ds.columns)).collect()))
-    assert a == b
+    got = portal.load().filter("cidade = 'aracaju' AND ano = 2024") \
+        .toPandas()
+    want = synthetic_fetch(pd.DataFrame(
+        {"cidade": ["aracaju"] * 3, "ano": [2024] * 3, "mes": [1, 2, 3]}))
+    key = ["cidade", "ano", "mes", "processo"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert list(got.columns) == list(want.columns)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_max_rows_bounds_each_partition(spark, portal):

@@ -24,11 +24,9 @@ from etl_transparencia_sergipe_spark.sources.csv_ptbr import (
     split_quarantine,
     write_ptbr_csv,
 )
+from etl_transparencia_sergipe_spark.sources import portal_datasource
 from etl_transparencia_sergipe_spark.sources.scraper_source import (
-    fetch_grid,
-    retry_queue,
     synthetic_fetch,
-    task_grid,
 )
 
 
@@ -69,21 +67,82 @@ def test_pipeline_deterministic(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_fetch_retry_queue(spark):
-    calls = {"n": 0}
+def _dead_february(calls):
+    """A fetcher whose February page always fails (a dead portal page);
+    ``calls`` counts fetch attempts on February and on every other month."""
 
-    def flaky(tasks: pd.DataFrame) -> pd.DataFrame:
-        # fail every batch containing mes == 2 (simulates a dead portal)
+    def fetch(tasks: pd.DataFrame) -> pd.DataFrame:
         if (tasks["mes"] == 2).any():
+            calls["feb"].add(1)
             raise RuntimeError("portal timeout")
+        calls["other"].add(1)
         return synthetic_fetch(tasks)
 
-    grid = task_grid(spark, ["aracaju"], [2024], [1, 2, 3]).repartition(3)
-    fetched = fetch_grid(grid, fetch_fn=flaky, max_retries=2)
-    failed = fetched.filter(F.col("fetch_error").isNotNull())
-    assert failed.count() > 0
-    pending = retry_queue(fetched, grid)
-    assert {r.mes for r in pending.collect()} == {2}
+    return fetch
+
+
+def test_failed_page_yields_error_rows_and_retry(spark, monkeypatch):
+    sc = spark.sparkContext
+    calls = {"feb": sc.accumulator(0), "other": sc.accumulator(0)}
+    fetched = portal_datasource.load(spark, ["aracaju"], [2024], [1, 2, 3],
+                                     _dead_february(calls))
+    failed = fetched.filter(F.col("fetch_error").isNotNull()).collect()
+    # exactly one error row, for the dead page, after every attempt failed
+    assert [(r.cidade, r.ano, r.mes) for r in failed] == [("aracaju", 2024, 2)]
+    assert failed[0].fetch_error == "RuntimeError: portal timeout"
+    assert failed[0].pago is None
+    assert calls["feb"].value == portal_datasource.FETCH_ATTEMPTS
+    ok = fetched.filter(F.col("fetch_error").isNull())
+    assert {r.mes for r in ok.select("mes").distinct().collect()} == {1, 3}
+
+    # run_with_retry re-reads only the failed key, once per extra pass
+    loads = []
+    real_load = portal_datasource.load
+
+    def spy(spark, cidades, anos, meses, fetch_fn):
+        loads.append((cidades, anos, meses))
+        return real_load(spark, cidades, anos, meses, fetch_fn)
+
+    monkeypatch.setattr(portal_datasource, "load", spy)
+    calls = {"feb": sc.accumulator(0), "other": sc.accumulator(0)}
+    out = run_with_retry(spark, ["aracaju"], [2024],
+                         fetch_fn=_dead_february(calls), max_passes=2)
+    assert loads == [(["aracaju"], [2024], None),
+                     (["aracaju"], [2024], [2])]
+    assert calls["other"].value == 11
+    assert calls["feb"].value == 2 * portal_datasource.FETCH_ATTEMPTS
+    # the page that never recovers stays visible as its error row
+    assert [r.mes for r in out.filter(F.col("fetch_error").isNotNull())
+            .collect()] == [2]
+    assert {r.mes for r in out.filter(F.col("fetch_error").isNull())
+            .select("mes").distinct().collect()} == set(range(1, 13)) - {2}
+
+
+def _tagged(tag: str):
+    def fetch(tasks: pd.DataFrame) -> pd.DataFrame:
+        return synthetic_fetch(tasks).assign(credor=tag)
+
+    return fetch
+
+
+def test_concurrent_pipelines_keep_their_own_fetcher(spark):
+    """Two threads run the pipeline at once with different fetchers: each
+    result holds only its own fetcher's rows."""
+    from concurrent.futures import ThreadPoolExecutor
+    from threading import Barrier
+
+    start = Barrier(2)
+
+    def run(tag: str) -> list[set]:
+        start.wait(timeout=60)
+        return [{r.credor for r in royalties_pipeline(
+            spark, ["aracaju"], [2024], [1, 2], fetch_fn=_tagged(tag))
+            .select("credor").distinct().collect()} for _ in range(3)]
+
+    with ThreadPoolExecutor(2) as pool:
+        a, b = pool.map(run, ["tag-a", "tag-b"])
+    assert a == [{"tag-a"}] * 3
+    assert b == [{"tag-b"}] * 3
 
 
 def test_run_with_retry_recovers(spark):
