@@ -24,26 +24,66 @@ def _sample_hash(key_expr: str) -> str:
     return SAMPLE_HASH.format(id=key_expr)
 
 
-def scaler_stats(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A4: per-column mean/std (the StandardScaler fit), computed from
-    exact decimal sums so results are engine-independent.
+# Scaler stats from exact integer moments. Each value is taken in
+# integer units of 1e-6 (its DECIMAL(28,6) cast), so n, s1 = sum(x) and
+# s2 = sum(x^2) are exact. The textbook s2/n - (s1/n)^2 in DOUBLE cancels
+# catastrophically when the mean is large and the spread small; instead
+# the centred sum is recovered exactly from the moments: for any integer
+# q (here ~ the mean) and rem = s1 - q*n, sum((x - q)^2) =
+# s2 - q^2*n - 2*q*rem, and d = n*sum((x - q)^2) - rem^2 = n^2 var_pop.
+# That is the two-pass centred sum about q without the second pass; every
+# intermediate is bounded by max(s2, d), so it fits wherever s2 does,
+# while n*s2 - s1^2 would overflow DECIMAL(38) once s1 passes 1e19
+# units. Integer results become doubles through two 1e18 limbs (each
+# limb's BIGINT -> DOUBLE is correctly rounded on both engines, while
+# DuckDB's wide DECIMAL -> DOUBLE cast is not), then the same IEEE
+# operations run on both engines.
+_UNITS = 1000000
+_LIMB = 1000000000000000000
 
-    std is the sample standard deviation (ddof=1, sklearn's default is
-    ddof=0 for StandardScaler but stddev_samp for analytics; we expose
-    both).
-    """
-    aggs = []
-    for c in cols:
-        s1 = F.sum(F.col(c).cast("decimal(28,6)")).cast("double")
-        s2 = F.sum((F.col(c) * F.col(c)).cast("decimal(28,6)")).cast("double")
-        n = F.count(c)
-        mean = (s1 / n)
-        var_pop = (s2 / n) - (s1 / n) * (s1 / n)
-        aggs += [
-            mean.alias(f"{c}_mean"),
-            F.sqrt(var_pop).alias(f"{c}_std_pop"),
-        ]
-    return df.agg(*aggs)
+
+def _scaler_sql(c: str, wide: str, div) -> tuple[list[str], list[str]]:
+    """(moment aggregates, stat expressions over them) for column ``c``
+    in one SQL dialect: ``wide`` is its exact 38-digit integer type,
+    ``div(a, b)`` its truncating integer division."""
+    x = f"CAST(CAST({c} AS DECIMAL(28,6)) * {_UNITS} AS {wide})"
+    n, s1, s2 = f"{c}_n", f"{c}_s1", f"{c}_s2"
+
+    def dbl(v):
+        return (f"(CAST(CAST({div(v, _LIMB)} AS BIGINT) AS DOUBLE)"
+                f" * CAST({_LIMB} AS DOUBLE)"
+                f" + CAST(CAST({v} % {_LIMB} AS BIGINT) AS DOUBLE))")
+
+    q = f"CAST({div(s1, n)} AS {wide})"
+    rem = f"({s1} - {q} * {n})"
+    d = f"({n} * ({s2} - {q} * {q} * {n} - 2 * {q} * {rem}) - {rem} * {rem})"
+    units = f"CAST({_UNITS} AS DOUBLE)"
+    return (
+        [f"COUNT({c}) AS {n}", f"SUM({x}) AS {s1}",
+         f"SUM({x} * {x}) AS {s2}"],
+        [f"{dbl(s1)} / {n} / {units} AS {c}_mean",
+         f"sqrt({dbl(d)} / {n} / {n}) / {units} AS {c}_std_pop"],
+    )
+
+
+def scaler_stats(df: DataFrame, cols: list[str]) -> DataFrame:
+    """A4: per-column mean and population std (the StandardScaler fit,
+    ddof=0), computed from exact integer moments so results are
+    engine-independent and free of cancellation."""
+    parts = [_scaler_sql(c, "DECIMAL(38,0)", lambda a, b: f"({a} DIV {b})")
+             for c in cols]
+    return (df.agg(*[F.expr(m) for moments, _ in parts for m in moments])
+            .selectExpr(*[e for _, stats in parts for e in stats]))
+
+
+def scaler_stats_duck(table: str, cols: list[str]) -> str:
+    """DuckDB twin of :func:`scaler_stats` (same integer moments, same
+    double operations)."""
+    parts = [_scaler_sql(c, "HUGEINT", lambda a, b: f"({a} // {b})")
+             for c in cols]
+    moments = ", ".join(m for ms, _ in parts for m in ms)
+    stats = ", ".join(e for _, es in parts for e in es)
+    return f"SELECT {stats} FROM (SELECT {moments} FROM {table})"
 
 
 def kmeans_clusters(df: DataFrame, feature_cols: list[str], k: int = 3,

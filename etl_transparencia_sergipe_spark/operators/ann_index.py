@@ -32,9 +32,9 @@ centroid — cells stop discriminating and ADC quality decays, so
 retrain + re-encode (rebuild) is warranted. This is the standard
 IVF maintenance signal (mean quantization error drift).
 
-Encode/search math is shared bit-for-bit with q102/q103
-(similarity.residual_assign_codes / residual_query_luts), so an
-append-built index returns IDENTICAL search results to a fresh
+Encode/search math is shared bit-for-bit with q102/q103 (the encode
+pass, LUTs, ADC scorer and exact refine of similarity.ivf_adc_search),
+so an append-built index returns IDENTICAL search results to a fresh
 full-corpus encode under the same quantizer —
 tests/test_ann_index.py pins that equality.
 """
@@ -43,14 +43,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from etl_transparencia_sergipe_spark.operators import quantizer_store
 from etl_transparencia_sergipe_spark.operators.similarity import (
+    _query_matrix,
+    _rank_topk,
     _train_sample,
-    ivfpq_residual_train,
-    residual_assign_codes,
-    residual_query_luts,
+    adc_scores,
+    encode_frame,
+    encode_vectors,
+    query_luts,
+    refine_l2,
+    train_quantizers,
 )
 
 
@@ -69,32 +73,12 @@ def _load_quantizer(path: str):
 
 def _encode(df: DataFrame, cmat, books, id_col: str,
             vec_col: str) -> DataFrame:
-    """Assign-only encode: [vec_id, cell, c0..c{m-1}, resid_sq] via one
-    mapInPandas pass — the exact q102 encode math, no training."""
-    m = books.shape[0]
-    schema = ("vec_id bigint, cell bigint, "
-              + ", ".join(f"c{mm} int" for mm in range(m))
-              + ", resid_sq double")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["cv"]])
-            dist, amin, codes = residual_assign_codes(M, cmat, books)
-            cols = {"vec_id": pdf["vec_id"], "cell": amin.astype("int64")}
-            for mm in range(m):
-                cols[f"c{mm}"] = codes[mm]
-            # coarse quantization error per vector — the drift signal
-            cols["resid_sq"] = dist[np.arange(len(M)), amin]
-            yield pd.DataFrame(cols)
-
-    return (df.selectExpr(f"{id_col} AS vec_id", f"{vec_col} AS cv")
-            .mapInPandas(enc, schema=schema))
+    """Assign-only encode: [vec_id, cell, c0..c{m-1}, resid_sq] — the
+    search's residual encode pass, no training. ``resid_sq`` is each
+    vector's coarse quantization error, the drift signal."""
+    return (encode_frame(df, cmat, books, True, id_col, vec_col)
+            .withColumnRenamed("neighbor_id", "vec_id")
+            .withColumnRenamed("cell_dist", "resid_sq"))
 
 
 def build_ivfpq_index(corpus: DataFrame, path: str, n_cells: int = 16,
@@ -115,15 +99,15 @@ def build_ivfpq_index(corpus: DataFrame, path: str, n_cells: int = 16,
 
     X = _train_sample(corpus, id_col, vec_col, 65536)
     if constants is None:
-        cmat, books = ivfpq_residual_train(X, n_cells=n_cells, m=m,
-                                           ksub=ksub, seed=seed)
+        q = train_quantizers(X, n_cells=n_cells, m=m, ksub=ksub,
+                             residual=True, seed=seed)
+        cmat, books = q["cmat"], q["books"]
     else:
         cmat, books = constants
     # baseline = mean squared coarse-residual norm of the training
     # sample under these centroids (same sequential math as encode)
-    dist, amin, _ = residual_assign_codes(
-        np.asarray(X, dtype=np.float64), cmat, books)
-    baseline = float(dist[np.arange(len(X)), amin].mean())
+    dist, cell, _ = encode_vectors(X, cmat, residual=True)
+    baseline = float(dist[np.arange(len(X)), cell].mean())
 
     from pathlib import Path
 
@@ -405,52 +389,19 @@ def search_ivfpq_index(corpus: DataFrame, path: str, k: int = 5,
 
     Returns [query_id, neighbor_id, rank, l2sq].
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
     cmat, books, _ = _load_quantizer(path)
     m = books.shape[0]
-    ksub = books.shape[1]
-
-    qrows = [(row["_id"], row["_v"]) for row in
-             corpus.selectExpr(f"{id_col} AS _id", f"{vec_col} AS _v")
-             .filter(query_pred).collect()]
-    lut_rows = residual_query_luts(qrows, cmat, books, nprobe)
-    luts = spark.createDataFrame(
+    qids, Q = _query_matrix(corpus, id_col, vec_col, query_pred)
+    lut_rows = query_luts(qids, Q, cmat, books, nprobe, residual=True)
+    luts = corpus.sparkSession.createDataFrame(
         lut_rows, "query_id bigint, cell bigint, l array<double>")
     probed = sorted({int(c) for _, c, _ in lut_rows})
 
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probed))
-    adc_expr = " + ".join(
-        f"element_at(l, {mm * ksub} + c{mm} + 1)" for mm in range(m))
-    shortlist_w = W.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id"))
-    shortlist = (
-        idx.selectExpr("vec_id AS neighbor_id", "cell",
-                       *[f"c{mm}" for mm in range(m)])
-        .join(F.broadcast(luts), "cell")
-        .filter("query_id != neighbor_id")
-        .selectExpr("query_id", "neighbor_id", f"({adc_expr}) AS adc")
-        .withColumn("_r", F.row_number().over(shortlist_w))
-        .filter(F.col("_r") <= r)
-        .select("query_id", "neighbor_id")
-    )
-    # exact refine: raw vectors only for the r x |Q| shortlist
-    qdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in np.asarray(v, dtype=np.float64)])
-         for i, v in qrows],
-        f"query_id bigint, qv array<double>")
-    vecs = corpus.selectExpr(f"{id_col} AS neighbor_id",
-                             f"{vec_col} AS nv")
-    l2 = ("aggregate(zip_with(qv, nv, (a, b) -> CAST((a - b) * (a - b) "
-          "AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-    refine_w = W.partitionBy("query_id").orderBy(
-        F.asc("l2sq"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(vecs, "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .selectExpr("query_id", "neighbor_id", f"({l2}) AS l2sq")
-        .withColumn("rank", F.row_number().over(refine_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "l2sq")
-    )
+    codes = (corpus.sparkSession.read.parquet(path)
+             .filter(F.col("cell").isin(probed))
+             .selectExpr("vec_id AS neighbor_id", "cell",
+                         *[f"c{mm}" for mm in range(m)]))
+    shortlist = _rank_topk(adc_scores(codes, luts, books), "adc", r)
+    return (refine_l2(shortlist.select("query_id", "neighbor_id"), corpus,
+                      k, id_col, vec_col, query_pred)
+            .withColumnRenamed("l2", "l2sq"))

@@ -24,6 +24,10 @@ Design notes:
   hash mismatch at the correctness gate rather than passing silently.
 
 Store location: $SPARK_GRAFT_ARTIFACTS or <repo>/.artifacts/quantizers.
+Every other piece of state the queries keep between runs (q106's
+incremental index, q73's merge target, the q81/q107 signature stores,
+the CC oracle cache) lives beside it under ``state_dir``, so the one
+variable relocates all of it.
 """
 
 from __future__ import annotations
@@ -41,6 +45,12 @@ def _store_dir() -> Path:
     if env:
         return Path(env)
     return Path(__file__).resolve().parents[2] / ".artifacts" / "quantizers"
+
+
+def state_dir(name: str) -> Path:
+    """``<artifacts root>/<name>`` — the directory of one piece of
+    persistent query state, beside the quantizer store."""
+    return _store_dir().parent / name
 
 
 def _fingerprint(source_path: str) -> list:

@@ -1,14 +1,18 @@
 """Similarity search over embedding columns (J6 / ANN [EXT] surface).
 
-Two tiers:
-- ``cosine_topk``: brute-force cosine top-k — the exact baseline. The query
-  set is broadcast (it's small by construction); the corpus side streams
-  through a codegen'd dot-product expression, and top-k per query is a
-  window rank. At 100 TB the scan is embarrassingly parallel and the only
-  shuffle is the final per-query top-k (tiny).
-- ``lsh_bucket_topk``: sign-random-projection LSH — hyperplanes derived
-  from the deterministic hash family, so buckets are reproducible across
-  engines. Candidates only search their own bucket (the scale path).
+Three tiers:
+- ``cosine_topk`` / ``l2_topk``: brute-force top-k — the exact baselines.
+  The query set is small by construction and ships to every task; the
+  corpus streams through once, and top-k per query is a window rank. At
+  100 TB the scan is embarrassingly parallel and the only shuffle is the
+  final per-query top-k (tiny).
+- ``lsh_topk``: sign-random-projection LSH — hyperplanes derived from
+  the deterministic hash family, so buckets are reproducible across
+  engines. Candidates only search their own bucket.
+- ``ivf_adc_search``: the trained-quantizer search (FAISS IndexIVFPQ):
+  coarse cells, optional PQ codes (plain or residual) and an optional
+  exact refine, all settings of one search; ``ivf_adc_sql`` is its
+  DuckDB twin.
 
 Dot products use double-precision left folds (``aggregate``/``zip_with``),
 which are bit-identical to DuckDB's ``list_sum``/``list_transform`` fold —
@@ -120,12 +124,19 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     c = corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
     scored = c.mapInPandas(
         score, schema="query_id bigint, neighbor_id bigint, cos double")
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(scored, "cos", k, descending=True)
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int,
+               descending: bool = False) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, score) ->
+    [query_id, neighbor_id, rank, score]; ties go to the lower
+    neighbor_id, as in every DuckDB twin's ROW_NUMBER order."""
+    order = F.desc(score) if descending else F.asc(score)
+    w = W.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank", score))
 
 
 def cosine_block_pairs(df: DataFrame, block_col: str,
@@ -290,10 +301,7 @@ def lsh_topk(corpus: DataFrame, k: int = 5, n_planes: int = 8,
     scored = joined.select(
         "query_id", "neighbor_id",
         cosine_pairs_udf()(F.col("qv"), F.col("cv")).alias("cos"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos"))
+    return _rank_topk(scored, "cos", k, descending=True)
 
 
 def lsh_topk_duck(table: str, k: int = 5, n_planes: int = 8,
@@ -334,40 +342,28 @@ def lsh_topk_duck(table: str, k: int = 5, n_planes: int = 8,
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the centroid-partitioned scale path
+# IVF-ADC search — one parameterised search over trained constants
 # ---------------------------------------------------------------------------
-
-
-def ivf_topk(corpus: DataFrame, k: int = 5, n_cells: int = 16,
-             nprobe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             query_pred: str = "vec_id < 8") -> DataFrame:
-    """Approximate top-k via an IVF index: partition the corpus into
-    ``n_cells`` Voronoi cells around coarse centroids, then search only the
-    ``nprobe`` cells nearest to each query.
-
-    Coarse centroids are the embeddings of the ``n_cells`` lowest ids — a
-    deterministic sample, so the whole index is reproducible in the DuckDB
-    oracle (a trained k-means quantizer drops in unchanged; see ml.py).
-
-    Scale shape: centroids broadcast to every executor; cell assignment is
-    a broadcast expansion (n x C rows, narrow) collapsed by partial-agg
-    ``min(struct(dist, cell))`` before the exchange, so the shuffle carries
-    n rows. The candidate join touches nprobe/n_cells of the corpus per
-    query instead of all of it.
-
-    Returns DataFrame[query_id, neighbor_id, rank, cos] (no self-pairs).
-    """
-    from etl_transparencia_sergipe_spark.caching import persist_scoped
-
-    # persist the (tiny) centroid frame: its TakeOrdered corpus scan
-    # otherwise re-executes for each of the two broadcast consumers below
-    cent = (corpus.orderBy(id_col).limit(n_cells)
-            .selectExpr(f"{id_col} AS cell", f"{vec_col} AS cvec")
-            .transform(persist_scoped))
-    return _ivf_cell_search(corpus, cent, k=k, nprobe=nprobe,
-                            id_col=id_col, vec_col=vec_col,
-                            query_pred=query_pred)
+#
+# Every trained-ANN query is a setting of the FAISS IndexIVFPQ search:
+#
+#   query  cmat  books  residual  r     scorer
+#   q46    yes   -      -         -     exact cosine in probed cells
+#   q63    yes   -      -         -     exact cosine in probed cells
+#   q98    -     yes    -         -     ADC over the whole corpus
+#   q99    -     yes    -         50    ADC shortlist + exact L2
+#   q101   yes   yes    -         -     ADC in probed cells
+#   q102   yes   yes    yes       -     residual ADC in probed cells
+#   q103   yes   yes    yes       100   residual ADC shortlist + exact L2
+#
+# The coarse stage runs iff ``cmat`` is given, ADC iff ``books`` is, the
+# refine iff ``r`` is. ``residual`` sets the cell metric too: cosine for
+# the non-residual settings, L2 for by_residual (the recall target is the
+# exact-L2 top-k, so probe geometry and ground truth agree). Every
+# distance accumulates dimension by dimension in the same sequential
+# order as the DuckDB fold of :func:`ivf_adc_sql`, and ties go to the
+# lowest cell / code / id on both engines, so every double is
+# bit-identical across the two.
 
 
 def lloyd_float(X, n_cells: int, seed: int = 42, max_iter: int = 20):
@@ -454,109 +450,140 @@ def _train_sample(corpus: DataFrame, id_col: str, vec_col: str,
     return X
 
 
-def kmeans_centroids(corpus: DataFrame, n_cells: int = 16,
-                     vec_col: str = "embedding",
-                     seed: int = 42, id_col: str = "vec_id",
-                     max_train_rows: int = 65536,
-                     max_iter: int = 20) -> DataFrame:
-    """Trained coarse quantizer -> DataFrame[cell, cvec]. The
-    real-pipeline replacement for ``ivf_topk``'s lowest-id seeding;
-    reference k-means precedent is data_science.ipynb:99 (k=3,
-    random_state=42).
-
-    Training follows the FAISS posture: the coarse quantizer is fit on a
-    bounded DETERMINISTIC sample (ordered by the portable multiplicative
-    hash ``SAMPLE_HASH`` with an id tiebreak, first ``max_train_rows``
-    rows — stable across partitionings, cluster sizes, and engines),
-    collected driver-side, and Lloyd-iterated in numpy (``lloyd_float``).
-    At 100 TB nobody trains a C-centroid quantizer with distributed Lloyd
-    passes over the full corpus: the sample bound makes training
-    O(sample x dim) on the driver — milliseconds — while assignment (the
-    part that IS corpus-sized) stays distributed in ``_ivf_cell_search``.
-    The previous MLlib KMeans formulation spent ~6 s of q63's 8.6 s sf1
-    wall on k-means|| init + per-iteration job overhead for the same 16
-    centroids. Seeded numpy init + fixed iteration cap keep the result
-    reproducible.
-    """
-    X = _train_sample(corpus, id_col, vec_col, max_train_rows)
-    cent = lloyd_float(X, n_cells=n_cells, seed=seed, max_iter=max_iter)
-    rows = [(i, [float(x) for x in cent[i]]) for i in range(n_cells)]
-    return corpus.sparkSession.createDataFrame(
-        rows, "cell bigint, cvec array<double>")
-
-
-def ivf_topk_trained(corpus: DataFrame, k: int = 5, n_cells: int = 16,
-                     nprobe: int = 4, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     query_pred: str = "vec_id < 8",
-                     seed: int = 42, cmat=None) -> DataFrame:
-    """IVF ANN with a TRAINED k-means coarse quantizer (seed fixed): same
-    cell-search plan as :func:`ivf_topk`, but cells are Voronoi regions of
-    learned centroids instead of lowest-id samples — balanced cell sizes,
-    which is what keeps nprobe/n_cells pruning effective on clustered
-    real-world embedding distributions. KMeans assignments aren't
-    SQL-expressible, so this tier is rows-only in the driver check; the
-    oracle-checked ivf_topk shares every line of the search plan.
-    ``cmat`` optionally injects pre-trained centroids (the artifact-
-    store cold-start path)."""
-    if cmat is not None:
-        rows = [(i, [float(x) for x in cmat[i]]) for i in range(len(cmat))]
-        cent = corpus.sparkSession.createDataFrame(
-            rows, "cell bigint, cvec array<double>")
-    else:
-        cent = kmeans_centroids(corpus, n_cells=n_cells, vec_col=vec_col,
-                                seed=seed)
-    return _ivf_cell_search(corpus, cent, k=k, nprobe=nprobe,
-                            id_col=id_col, vec_col=vec_col,
-                            query_pred=query_pred)
-
-
-def _ivf_cell_search(corpus: DataFrame, cent: DataFrame, k: int,
-                     nprobe: int, id_col: str, vec_col: str,
-                     query_pred: str) -> DataFrame:
-    """Shared IVF search: assign each vector to its nearest centroid cell,
-    probe the nprobe nearest cells per query, exact-rank the candidates.
-    ``cent`` is DataFrame[cell, cvec] (tiny — collected driver-side and
-    closed over as a numpy constant, the FAISS coarse-quantizer shape).
-
-    Round-5 plan rewrite: the previous formulation cross-joined corpus x
-    centroids (n x C rows, each carrying the 64-dim vector) and collapsed
-    the expansion with a min(struct) aggregate — at sf1 that is a 320k-row
-    persisted frame plus interpreted per-row cosine folds, 6.8 s of wall
-    for what is arithmetically a (20k x 64)@(64 x 16) matmul. Now ONE
-    mapInPandas pass per corpus partition computes every vector's full
-    centroid-distance row vectorized, emits the argmin cell and (for
-    query rows) the nprobe-nearest cell list — no row expansion, no
-    assignment shuffle, and the quantizer travels in the UDF closure like
-    any broadcast constant. Distances accumulate per-dimension in the
-    same sequential order as ``cosine_pairs_udf``/the DuckDB fold, so
-    hashes are unchanged (verified at sf0.01 and sf1); ties on d resolve
-    to the smallest cell on both engines (columns sorted by cell,
-    argmin/lexsort are first-match/stable).
-
-    Scale shape at 100 TB: the corpus streams through once (narrow), the
-    quantizer is O(C x dim) bytes per executor, and the only shuffles are
-    the tiny probe broadcast and the final per-query top-k.
-    """
+def _query_matrix(corpus: DataFrame, id_col: str, vec_col: str,
+                  query_pred: str):
+    """The (contract-small) query set in one Arrow crossing ->
+    (ids, (n, dim) float64 matrix), ordered by id."""
     import numpy as np
 
-    from etl_transparencia_sergipe_spark.caching import persist_scoped
+    qs = corpus.filter(query_pred).selectExpr(
+        f"{id_col} AS qid", f"{vec_col} AS qv").toArrow()
+    ids = qs.column("qid").to_numpy()
+    col = qs.column("qv").combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False) \
+        .astype(np.float64, copy=False)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], flat.reshape(len(ids), -1)[order]
 
-    cent_rows = sorted(cent.collect(), key=lambda r: r["cell"])
-    cells_np = np.array([int(r["cell"]) for r in cent_rows], dtype=np.int64)
-    cmat = np.stack([np.asarray(r["cvec"], dtype=np.float64)
-                     for r in cent_rows])
+
+def train_quantizers(X, n_cells: int = 0, m: int = 0, ksub: int = 16,
+                     residual: bool = False, seed: int = 42,
+                     max_iter: int = 20) -> dict:
+    """Train the IVF-ADC constants from a sample -> {"cmat", "books"}.
+
+    ``n_cells`` > 0 trains the coarse quantizer: full-dim seeded Lloyd
+    -> ``cmat`` (n_cells, dim). ``m`` > 0 trains PQ codebooks: an
+    independent seeded Lloyd per subspace -> ``books`` (m, ksub, dim/m),
+    over the raw vectors or, with ``residual``, over the residuals
+    x - c(x) of the L2-assigned sample (FAISS by_residual=True:
+    residuals have far smaller spread, so the same code budget quantizes
+    much finer).
+
+    The FAISS posture: training is O(sample x dim) on the driver over a
+    bounded deterministic sample (``_train_sample``; reference k-means
+    precedent data_science.ipynb:99, k=3, random_state=42), while
+    encoding — the corpus-sized part — stays distributed. The Spark
+    queries and their DuckDB twins call THIS function on the same
+    sample, so the constants are bit-identical on both sides."""
+    import numpy as np
+
+    out = {}
+    if n_cells:
+        out["cmat"] = lloyd_float(X, n_cells=n_cells, seed=seed,
+                                  max_iter=max_iter)
+    if m:
+        dim = X.shape[1]
+        if dim % m:
+            raise ValueError(f"dim {dim} does not split into m={m} "
+                             "equal subspaces")
+        dsub = dim // m
+        R = X
+        if residual:
+            _, cell, _ = encode_vectors(X, out["cmat"], residual=True)
+            R = X - out["cmat"][cell]
+        out["books"] = np.stack([
+            lloyd_float(R[:, mm * dsub:(mm + 1) * dsub], n_cells=ksub,
+                        seed=seed, max_iter=max_iter)
+            for mm in range(m)
+        ])
+    return out
+
+
+def cell_distances(M, cmat, residual: bool):
+    """(n, dim) vectors x (C, dim) centroids -> (n, C) distances: squared
+    L2 when ``residual``, else cosine distance 1 - cos. Per-dimension
+    sequential accumulation — the order the DuckDB fold replays."""
+    import numpy as np
+
     ncells, dim = cmat.shape
-    # centroid norms, accumulated per-dimension like cosine_pairs_udf
+    if residual:
+        dist = np.zeros((len(M), ncells))
+        for d in range(dim):
+            diff = M[:, d:d + 1] - cmat[None, :, d]
+            dist = dist + diff * diff
+        return dist
     cnorm = np.zeros(ncells)
     for d in range(dim):
         cnorm += cmat[:, d] * cmat[:, d]
     cnorm = np.sqrt(cnorm)
+    dot = np.zeros((len(M), ncells))
+    vnorm = np.zeros(len(M))
+    for d in range(dim):
+        dot += M[:, d:d + 1] * cmat[None, :, d]
+        vnorm += M[:, d] * M[:, d]
+    return 1.0 - dot / (np.sqrt(vnorm)[:, None] * cnorm[None, :])
 
-    assign_schema = ("neighbor_id bigint, cv array<double>, "
-                     "is_query boolean, cell bigint, probes array<bigint>")
 
-    def assign_cells(batches):
+def encode_vectors(M, cmat=None, books=None, residual: bool = False):
+    """The IVF-ADC encode math -> (dist, cell, codes).
+
+    ``dist`` is the (n, C) cell-distance matrix (None without ``cmat``),
+    ``cell`` the nearest cell per vector (argmin takes the first, i.e.
+    lowest, cell; all zeros without ``cmat``), and ``codes`` the m int32
+    PQ code arrays of the vector — or of its residual x - c(x) — (empty
+    without ``books``). Shared by the search's encode pass, training and
+    the incremental index's appends (operators/ann_index.py), so every
+    path encodes bit-identically."""
+    import numpy as np
+
+    dist = None
+    cell = np.zeros(len(M), dtype=np.int64)
+    if cmat is not None:
+        dist = cell_distances(M, cmat, residual)
+        cell = dist.argmin(axis=1)
+    codes = []
+    if books is not None:
+        R = M - cmat[cell] if residual else M
+        m, ksub, dsub = books.shape
+        for mm in range(m):
+            d2 = np.zeros((len(M), ksub))
+            for d in range(dsub):
+                diff = R[:, mm * dsub + d:mm * dsub + d + 1] \
+                    - books[mm][None, :, d]
+                d2 = d2 + diff * diff
+            codes.append(d2.argmin(axis=1).astype("int32"))
+    return dist, cell, codes
+
+
+def encode_frame(corpus: DataFrame, cmat=None, books=None,
+                 residual: bool = False, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """The encode pass: ONE mapInPandas over the corpus ->
+    DataFrame[neighbor_id, cell, c0..c{m-1}, cell_dist], where
+    ``cell_dist`` is each vector's distance to its own cell (the drift
+    signal of the incremental index). The constants travel in the UDF
+    closure — O(C x dim + m x ksub x dsub) bytes per executor — so there
+    is no shuffle and no row expansion, and the raw-vector column is
+    scanned exactly once. The result is the persistable compressed
+    index: m ints per vector instead of dim floats."""
+    import numpy as np
+
+    m = 0 if books is None else books.shape[0]
+    schema = ("neighbor_id bigint, cell bigint, "
+              + "".join(f"c{mm} int, " for mm in range(m))
+              + "cell_dist double")
+
+    def enc(batches):
         import pandas as pd
 
         for pdf in batches:
@@ -564,60 +591,115 @@ def _ivf_cell_search(corpus: DataFrame, cent: DataFrame, k: int,
                 continue
             M = np.stack([np.asarray(v, dtype=np.float64)
                           for v in pdf["cv"]])
-            dot = np.zeros((len(pdf), ncells))
-            vnorm = np.zeros(len(pdf))
-            for d in range(dim):
-                dot += M[:, d:d + 1] * cmat[None, :, d]
-                vnorm += M[:, d] * M[:, d]
-            dist = 1.0 - dot / (np.sqrt(vnorm)[:, None] * cnorm[None, :])
-            # argmin -> first occurrence of the min; columns are cell-asc,
-            # so ties resolve to the smallest cell (min(struct) semantics)
-            amin = dist.argmin(axis=1)
-            probes = [None] * len(pdf)
-            for i, isq in enumerate(pdf["is_query"]):
-                if isq:
-                    # stable sort by (d, cell): lexsort's last key is
-                    # primary; cells ascending breaks exact-d ties
-                    order = np.lexsort((cells_np, dist[i]))[:nprobe]
-                    probes[i] = [int(cells_np[j]) for j in order]
-            yield pd.DataFrame({
-                "neighbor_id": pdf["neighbor_id"],
-                "cv": pdf["cv"],
-                "is_query": pdf["is_query"],
-                "cell": cells_np[amin],
-                "probes": probes,
-            })
+            dist, cell, codes = encode_vectors(M, cmat, books, residual)
+            cols = {"neighbor_id": pdf["neighbor_id"], "cell": cell}
+            for mm in range(m):
+                cols[f"c{mm}"] = codes[mm]
+            cols["cell_dist"] = (np.zeros(len(M)) if dist is None
+                                 else dist[np.arange(len(M)), cell])
+            yield pd.DataFrame(cols)
 
-    assigned = (
-        corpus.selectExpr(
-            f"{id_col} AS neighbor_id", f"{vec_col} AS cv",
-            f"({query_pred}) AS is_query")
-        .mapInPandas(assign_cells, schema=assign_schema)
-        # both join sides derive from this frame; materialize so the
-        # quantizer pass runs once per vector
-        .transform(persist_scoped)
+    return (corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
+            .mapInPandas(enc, schema=schema))
+
+
+def query_probes(Q, cmat, nprobe: int, residual: bool):
+    """The ``nprobe`` nearest cells per query row, nearest first; exact-
+    distance ties go to the lower cell (lexsort's last key is primary,
+    cells ascending break ties). A single cell 0 without ``cmat``."""
+    import numpy as np
+
+    if cmat is None:
+        return [[0] for _ in range(len(Q))]
+    dist = cell_distances(Q, cmat, residual)
+    cells = np.arange(len(cmat), dtype=np.int64)
+    return [[int(c) for c in np.lexsort((cells, dist[i]))[:nprobe]]
+            for i in range(len(Q))]
+
+
+def query_luts(qids, Q, cmat, books, nprobe: int, residual: bool):
+    """ADC lookup tables for the (contract-small, collected) query set ->
+    rows (query_id, cell, l) per probed cell, l the m*ksub table
+    flattened in (m, j) order: l[m*ksub + j] = ||q_m - b_{m,j}||^2, over
+    the query's residual q - c with ``residual``, so adc =
+    ||(q - c) - r̂(x)||^2 ~ ||q - x||^2 and the centroid drops out."""
+    import numpy as np
+
+    m, ksub, dsub = books.shape
+    rows = []
+    for qid, q, probes in zip(qids, Q, query_probes(Q, cmat, nprobe,
+                                                    residual)):
+        for cell in probes:
+            rq = q - cmat[cell] if residual else q
+            flat = []
+            for mm in range(m):
+                lut = np.zeros(ksub)
+                for d in range(dsub):
+                    diff = rq[mm * dsub + d] - books[mm][:, d]
+                    lut = lut + diff * diff
+                flat.extend(float(x) for x in lut)
+            rows.append((int(qid), int(cell), flat))
+    return rows
+
+
+def adc_scores(codes: DataFrame, luts: DataFrame, books) -> DataFrame:
+    """Asymmetric distance of every code row against the LUTs of the
+    queries probing its cell -> DataFrame[query_id, neighbor_id, adc].
+    The LUT frame is |Q| x nprobe tiny rows, broadcast; the score is the
+    LUT indexed by each code, summed left to right in pure codegen
+    (element_at + adds; no UDF on the corpus-sized path)."""
+    m, ksub, _ = books.shape
+    adc = " + ".join(
+        f"element_at(l, {mm * ksub} + c{mm} + 1)" for mm in range(m))
+    return (codes.join(F.broadcast(luts), "cell")
+            .filter("query_id != neighbor_id")
+            .selectExpr("query_id", "neighbor_id", f"({adc}) AS adc"))
+
+
+L2_SPARK = ("aggregate(zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) - "
+            "CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
+            ", 0.0D, (acc, v) -> acc + v)")
+L2_DUCK = ("list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]),"
+           " p -> (p[1] - p[2]) * (p[1] - p[2])))")
+
+
+def refine_l2(shortlist: DataFrame, corpus: DataFrame, k: int,
+              id_col: str = "vec_id", vec_col: str = "embedding",
+              query_pred: str = "vec_id < 8") -> DataFrame:
+    """Exact-L2 re-rank of a (query_id, neighbor_id) shortlist -> top-k
+    [query_id, neighbor_id, rank, l2] (the FAISS RefineFlat step). Raw
+    vectors are read for ONLY the r x |Q| shortlist rows: both the
+    shortlist and the query set are broadcast, so the fetch is a
+    map-side semi-join over the corpus scan, no shuffle."""
+    q = corpus.filter(query_pred).selectExpr(f"{id_col} AS query_id",
+                                             f"{vec_col} AS qv")
+    c = corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
+    rescored = (
+        c.join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .selectExpr("query_id", "neighbor_id",
+                    L2_SPARK.format(a="qv", b="cv") + " AS l2")
     )
-    # Round-6: the query set is contract-small (the cosine_topk/l2_topk
-    # precedent), so ship it in the scorer's closure instead of
-    # broadcast-joining (query, cell) probe rows against the corpus —
-    # that join re-crossed both 64-dim arrays through Arrow per
-    # candidate PAIR and left a per-pair pandas-UDF; scoring inside one
-    # mapInPandas pass reads each candidate vector once and emits only
-    # (query_id, neighbor_id, cos). Measured at sf1: 1.10 -> 0.72 s
-    # warm; the only remaining exchange is the per-query top-k window.
-    # Cosine accumulates per-dimension in cosine_pairs_udf's exact
-    # sequential order (dot += q_d*c_d; norms likewise; denominator
-    # sqrt(nq)*sqrt(nc)), so hashes are unchanged (re-verified at
-    # sf0.01 and sf1).
-    qrows = sorted(assigned.filter("is_query")
-                   .select("neighbor_id", "cv", "probes").collect(),
-                   key=lambda r: r["neighbor_id"])
-    qids = np.array([int(r["neighbor_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in qrows])
-    qcells = [frozenset(int(c) for c in r["probes"]) for r in qrows]
-    qnorm = np.zeros(len(qrows))
+    return _rank_topk(rescored, "l2", k)
+
+
+def _cosine_scores(corpus: DataFrame, cmat, residual: bool, qids, Q,
+                   probes, id_col: str, vec_col: str) -> DataFrame:
+    """Exact cosine of every corpus vector against the queries probing
+    its cell -> DataFrame[query_id, neighbor_id, cos] (the IVF-Flat
+    scorer). ONE mapInPandas pass assigns each vector's cell and scores
+    it against the query set shipped in the closure (contract-small,
+    like cosine_topk): each candidate vector crosses Arrow once, no
+    assignment shuffle, no per-pair join; the only exchange left is the
+    per-query top-k window. Cosine accumulates per dimension in
+    cosine_pairs_udf's exact order (denominator sqrt(nq) * sqrt(nc))."""
+    import numpy as np
+
+    dim = Q.shape[1]
+    qcells = [frozenset(p) for p in probes]
+    qnorm = np.zeros(len(qids))
     for d in range(dim):
-        qnorm += qmat[:, d] * qmat[:, d]
+        qnorm += Q[:, d] * Q[:, d]
 
     def score(batches):
         import pandas as pd
@@ -628,7 +710,7 @@ def _ivf_cell_search(corpus: DataFrame, cent: DataFrame, k: int,
             M = np.stack([np.asarray(v, dtype=np.float64)
                           for v in pdf["cv"]])
             ids = pdf["neighbor_id"].to_numpy()
-            cell = pdf["cell"].to_numpy()
+            _, cell, _ = encode_vectors(M, cmat, residual=residual)
             cnorm2 = np.zeros(len(pdf))
             for d in range(dim):
                 cnorm2 += M[:, d] * M[:, d]
@@ -642,7 +724,7 @@ def _ivf_cell_search(corpus: DataFrame, cent: DataFrame, k: int,
                 sub = M[mask]
                 dot = np.zeros(len(sub))
                 for d in range(dim):
-                    dot += qmat[qi, d] * sub[:, d]
+                    dot += Q[qi, d] * sub[:, d]
                 cos = dot / (np.sqrt(qnorm[qi]) * np.sqrt(cnorm2[mask]))
                 out_q.append(np.full(len(sub), qids[qi], dtype=np.int64))
                 out_n.append(ids[mask])
@@ -655,239 +737,68 @@ def _ivf_cell_search(corpus: DataFrame, cent: DataFrame, k: int,
                 "cos": np.concatenate(out_c),
             })
 
-    out = (assigned.select("neighbor_id", "cv", "cell")
-           .mapInPandas(score,
-                        schema="query_id bigint, neighbor_id bigint, "
-                               "cos double"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (out.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos"))
+    return (corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
+            .mapInPandas(score, schema="query_id bigint, neighbor_id bigint, "
+                                       "cos double"))
 
 
-def ivf_topk_duck(table: str, k: int = 5, n_cells: int = 16,
-                  nprobe: int = 4, id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  query_pred: str = "vec_id < 8",
-                  cent_sql: str | None = None) -> str:
-    """DuckDB oracle SQL equivalent of :func:`ivf_topk`. ``cent_sql``
-    overrides the centroid CTE body (q63 injects trained centroids as
-    literals; default is ivf_topk's lowest-id seeding)."""
-    d_assign = f"1.0 - ({cosine_expr_duck('b.cv', 'ct.cvec')})"
-    d_probe = f"1.0 - ({cosine_expr_duck('q.cv', 'ct.cvec')})"
-    cos = cosine_expr_duck("p.qv", "a.cv")
-    if cent_sql is None:
-        cent_sql = (f"SELECT {id_col} AS cell, {vec_col} AS cvec "
-                    f"FROM {table} ORDER BY {id_col} LIMIT {n_cells}")
-    return f"""
-    WITH cent AS (
-        {cent_sql}
-    ), b AS (
-        SELECT {id_col} AS neighbor_id, {vec_col} AS cv,
-               ({query_pred}) AS is_query
-        FROM {table}
-    ), assign AS (
-        SELECT neighbor_id, cell, cv FROM (
-            SELECT b.neighbor_id, ct.cell, b.cv,
-                   ROW_NUMBER() OVER (PARTITION BY b.neighbor_id
-                                      ORDER BY {d_assign}, ct.cell) AS rn
-            FROM b CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ), probes AS (
-        SELECT query_id, qv, cell FROM (
-            SELECT q.neighbor_id AS query_id, q.cv AS qv, ct.cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {d_probe}, ct.cell) AS rn
-            FROM b q CROSS JOIN cent ct WHERE q.is_query
-        ) WHERE rn <= {nprobe}
-    ), scored AS (
-        SELECT p.query_id, a.neighbor_id, {cos} AS cos
-        FROM assign a JOIN probes p ON a.cell = p.cell
-        WHERE p.query_id != a.neighbor_id
-    ), ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id ASC) AS rank
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {k}
+def ivf_adc_search(corpus: DataFrame, k: int = 5, cmat=None, books=None,
+                   nprobe: int = 4, residual: bool = False,
+                   r: int | None = None, id_col: str = "vec_id",
+                   vec_col: str = "embedding",
+                   query_pred: str = "vec_id < 8") -> DataFrame:
+    """Approximate top-k for the ``query_pred`` rows — the IVF-ADC search.
+
+    Inputs are trained constants (``train_quantizers``, or any (C, dim)
+    array such as q46's lowest-id vectors):
+    - ``cmat`` given: a coarse stage assigns every vector to its nearest
+      cell and each query searches only its ``nprobe`` nearest cells
+      (nprobe/C of the corpus instead of all of it);
+    - ``books`` given: candidates are scored by PQ asymmetric distance
+      over their m codes (``adc``); without books, by exact cosine
+      (``cos``, the IVF-Flat scorer);
+    - ``r`` given: the top-``r`` shortlist per query is re-ranked by
+      exact L2 over the raw vectors (``l2``).
+    ``residual`` encodes x - c(x) and probes by L2 (FAISS by_residual).
+
+    Returns DataFrame[query_id, neighbor_id, rank, cos|adc|l2] with no
+    self-pairs. Scale shape: the query set is collected (small by
+    contract) and its probes and LUTs are built driver-side with the
+    encode math; the corpus streams once through one mapInPandas pass;
+    the only corpus-sized exchange is the skinny per-query top-k window.
     """
-
-
-def cosine_topk_duck(table: str, k: int = 5, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     query_pred: str = "vec_id < 8") -> str:
-    """DuckDB oracle SQL equivalent of :func:`cosine_topk` for a query set
-    selected by ``query_pred`` from the same table."""
-    cos = cosine_expr_duck("q.qv", "c.cv")
-    return f"""
-    WITH q AS (SELECT {id_col} AS query_id, {vec_col} AS qv
-               FROM {table} WHERE {query_pred}),
-         c AS (SELECT {id_col} AS neighbor_id, {vec_col} AS cv FROM {table}),
-         scored AS (
-            SELECT query_id, neighbor_id, {cos} AS cos
-            FROM c, q WHERE query_id != neighbor_id
-         ),
-         ranked AS (
-            SELECT query_id, neighbor_id, cos,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, neighbor_id ASC) AS rank
-            FROM scored
-         )
-    SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {k}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — compressed-domain ANN
-# ---------------------------------------------------------------------------
-
-
-def pq_codebooks(corpus: DataFrame, m: int = 8, ksub: int = 16,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 seed: int = 42, max_train_rows: int = 65536):
-    """Train PQ codebooks -> numpy (m, ksub, dim/m) float64.
-
-    The FAISS PQ posture: split the vector into ``m`` subspaces and run
-    an independent k-means (``lloyd_float``, seeded) per subspace over
-    the same bounded portable-hash-ordered sample ``kmeans_centroids``
-    uses — training is a shared deterministic constant the DuckDB twin
-    reproduces exactly, and it is O(sample x dim) on the driver
-    regardless of corpus size."""
-    import numpy as np
-
-    X = _train_sample(corpus, id_col, vec_col, max_train_rows)
-    dim = X.shape[1]
-    assert dim % m == 0, (dim, m)
-    dsub = dim // m
-    return np.stack([
-        lloyd_float(X[:, mm * dsub:(mm + 1) * dsub], n_cells=ksub,
-                    seed=seed)
-        for mm in range(m)
-    ])
-
-
-def pq_encode(corpus: DataFrame, books, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
-    """Encode each vector to m uint8 codes -> DataFrame[vec_id, c0..c{m-1}].
-
-    One vectorized mapInPandas pass per corpus partition (the codebooks
-    travel in the UDF closure — O(m x ksub x dsub) bytes per executor);
-    no shuffle, no row expansion. This frame is the PERSISTABLE compressed
-    index: m bytes per vector vs m*dsub floats raw (64x at dim=64, m=8) —
-    at 100 TB the ADC search scans THIS, column-pruned, never the raw
-    vectors. Subspace distances accumulate per-dimension sequentially so
-    ties and floats are bit-identical to the DuckDB twin; argmin takes the
-    first (lowest-j) minimum, matching ROW_NUMBER ... ORDER BY d, j.
-    """
-    import numpy as np
-
-    m, ksub, dsub = books.shape
-
-    schema = (f"{id_col} bigint, "
-              + ", ".join(f"c{mm} int" for mm in range(m)))
-
-    def enc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["_v"]])
-            cols = {id_col: pdf["_id"]}
-            for mm in range(m):
-                d2 = np.zeros((len(pdf), ksub))
-                for d in range(dsub):
-                    diff = M[:, mm * dsub + d:mm * dsub + d + 1] \
-                        - books[mm][None, :, d]
-                    d2 = d2 + diff * diff
-                cols[f"c{mm}"] = d2.argmin(axis=1).astype("int32")
-            yield pd.DataFrame(cols)
-
-    return (corpus.selectExpr(f"{id_col} AS _id", f"{vec_col} AS _v")
-            .mapInPandas(enc, schema=schema))
-
-
-def pq_query_luts(spark, queries, books):
-    """ADC lookup tables for a (small, collected) query set ->
-    DataFrame[query_id, l array<double>] where l is the m*ksub distance
-    table flattened in (m, j) order: l[m*ksub + j] = ||q_m - c_{m,j}||^2.
-    Accumulation order matches pq_encode / the DuckDB twin."""
-    import numpy as np
-
-    m, ksub, dsub = books.shape
-    rows = []
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        flat = []
-        for mm in range(m):
-            lut = np.zeros(ksub)
-            for d in range(dsub):
-                diff = q[mm * dsub + d] - books[mm][:, d]
-                lut = lut + diff * diff
-            flat.extend(float(x) for x in lut)
-        rows.append((int(qid), flat))
-    return spark.createDataFrame(rows, "query_id bigint, l array<double>")
-
-
-def pq_topk(corpus: DataFrame, k: int = 5, m: int = 8, ksub: int = 16,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            query_pred: str = "vec_id < 8", seed: int = 42,
-            books=None) -> DataFrame:
-    """PQ-ADC approximate top-k: encode the corpus to m-byte codes, then
-    rank candidates by asymmetric distance — the query's per-subspace
-    lookup table indexed by each code, summed left-to-right in pure
-    codegen (element_at + adds; no UDF on the corpus-sized path).
-
-    Returns DataFrame[query_id, neighbor_id, rank, adc] (no self-pairs).
-    Scale shape: the scan reads m ints per vector (the compressed index),
-    the LUT frame is |Q| rows broadcast, and the only corpus-sized
-    exchange is the skinny (query_id, neighbor_id, adc) top-k window —
-    composable with the IVF cells of q63 (scan only probed cells' codes)
-    for the full IVFPQ posture."""
-    from etl_transparencia_sergipe_spark.caching import persist_scoped
-
-    spark = corpus.sparkSession
+    if cmat is None and books is None:
+        raise ValueError("ivf_adc_search needs cmat and/or books "
+                         "(brute force is cosine_topk / l2_topk)")
+    qids, Q = _query_matrix(corpus, id_col, vec_col, query_pred)
     if books is None:
-        books = pq_codebooks(corpus, m=m, ksub=ksub, id_col=id_col,
-                             vec_col=vec_col, seed=seed)
-    qrows = [(r["_id"], r["_v"]) for r in
-             corpus.selectExpr(f"{id_col} AS _id", f"{vec_col} AS _v")
-             .filter(query_pred).collect()]
-    luts = pq_query_luts(spark, qrows, books)
-    codes = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col) \
-        .withColumnRenamed(id_col, "neighbor_id") \
-        .transform(persist_scoped)
-    adc_expr = " + ".join(
-        f"element_at(l, {mm * ksub} + c{mm} + 1)" for mm in range(m))
-    scored = (
-        codes.crossJoin(F.broadcast(luts))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", f"({adc_expr}) AS adc")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "adc"))
-
-
-L2_SPARK = ("aggregate(zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) - "
-            "CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
-            ", 0.0D, (acc, v) -> acc + v)")
-L2_DUCK = ("list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]),"
-           " p -> (p[1] - p[2]) * (p[1] - p[2])))")
+        probes = query_probes(Q, cmat, nprobe, residual)
+        top = _rank_topk(_cosine_scores(corpus, cmat, residual, qids, Q,
+                                        probes, id_col, vec_col),
+                         "cos", r or k, descending=True)
+    else:
+        luts = corpus.sparkSession.createDataFrame(
+            query_luts(qids, Q, cmat, books, nprobe, residual),
+            "query_id bigint, cell bigint, l array<double>")
+        codes = encode_frame(corpus, cmat, books, residual, id_col,
+                             vec_col).drop("cell_dist")
+        top = _rank_topk(adc_scores(codes, luts, books), "adc", r or k)
+    if r is None:
+        return top
+    return refine_l2(top.select("query_id", "neighbor_id"), corpus, k,
+                     id_col, vec_col, query_pred)
 
 
 def l2_topk(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
             vec_col: str = "embedding",
             query_pred: str = "vec_id < 8") -> DataFrame:
-    """Exact L2 top-k (brute force) — the recall baseline for pq_topk.
-    Same single-Arrow-crossing shape as cosine_topk: the (small) query
-    set ships in the UDF closure, each corpus batch is scored vectorized
-    with the dimension-sequential accumulation that is bit-exact vs the
-    L2_DUCK fold (the L2_SPARK interpreted fold measured 2.7 s for sf1's
-    160k pairs; this does the same work in ~0.5 s)."""
+    """Exact L2 top-k (brute force) — the recall baseline of the ADC
+    settings. Same single-Arrow-crossing shape as cosine_topk: the
+    (small) query set ships in the UDF closure, each corpus batch is
+    scored vectorized with the dimension-sequential accumulation that is
+    bit-exact vs the L2_DUCK fold (the L2_SPARK interpreted fold
+    measured 2.7 s for sf1's 160k pairs; this does the same work in
+    ~0.5 s)."""
     import numpy as np
     import pandas as pd
 
@@ -915,875 +826,187 @@ def l2_topk(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
     c = corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
     scored = c.mapInPandas(
         score, schema="query_id bigint, neighbor_id bigint, l2 double")
-    w = W.partitionBy("query_id").orderBy(F.asc("l2"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "l2"))
+    return _rank_topk(scored, "l2", k)
 
 
-def pq_topk_duck(table: str, books, k: int = 5,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 query_pred: str = "vec_id < 8") -> str:
-    """DuckDB twin of :func:`pq_topk` + recall flag vs exact L2: the
-    trained codebooks are injected as literals (shared deterministic
-    constant, the q63 posture) and ENCODE, LUT, ADC, top-k and the
-    recall join all run in SQL. Distance terms are written left-assoc
-    in the same (subspace, dim) order the numpy side accumulates, so
-    every double is bit-identical."""
-    import numpy as np  # noqa: F401
-
-    m, ksub, dsub = books.shape
-    cb_vals = ", ".join(
-        f"({mm}, {j}, [{', '.join(repr(float(x)) for x in books[mm][j])}]"
-        "::DOUBLE[])"
-        for mm in range(m) for j in range(ksub))
-    # per-(vector, m, j) subspace distance, left-assoc in dim order
-    d_terms = " + ".join(
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - cb.cvec[{d + 1}]) * "
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - cb.cvec[{d + 1}])"
-        for d in range(dsub))
-    adc = " + ".join(
-        f"p.l[{mm * ksub} + c.c{mm} + 1]" for mm in range(m))
-    code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {mm} THEN j END) AS c{mm}" for mm in range(m))
-    l2 = L2_DUCK.format(a="q.cv", b="b.cv")
+def cosine_topk_duck(table: str, k: int = 5, id_col: str = "vec_id",
+                     vec_col: str = "embedding",
+                     query_pred: str = "vec_id < 8") -> str:
+    """DuckDB oracle SQL equivalent of :func:`cosine_topk` for a query set
+    selected by ``query_pred`` from the same table."""
+    cos = cosine_expr_duck("q.qv", "c.cv")
     return f"""
-    WITH cb(m, j, cvec) AS (VALUES {cb_vals}),
-    b AS (
-        SELECT {id_col} AS neighbor_id, {vec_col}::DOUBLE[] AS cv,
-               ({query_pred}) AS is_query
-        FROM {table}
-    ),
-    dists AS (
-        SELECT v.neighbor_id, cb.m, cb.j, {d_terms} AS d
-        FROM b v CROSS JOIN cb
-    ),
-    enc AS (
-        SELECT neighbor_id, m, j FROM (
-            SELECT neighbor_id, m, j,
-                   ROW_NUMBER() OVER (PARTITION BY neighbor_id, m
-                                      ORDER BY d, j) AS rn
-            FROM dists
-        ) WHERE rn = 1
-    ),
-    codes AS (
-        SELECT neighbor_id, {code_cols} FROM enc GROUP BY neighbor_id
-    ),
-    qd AS (
-        SELECT v.neighbor_id AS query_id, cb.m, cb.j, {d_terms} AS d
-        FROM b v CROSS JOIN cb WHERE v.is_query
-    ),
-    luts AS (
-        SELECT query_id, list(d ORDER BY m, j) AS l
-        FROM qd GROUP BY query_id
-    ),
-    scored AS (
-        SELECT p.query_id, c.neighbor_id, {adc} AS adc
-        FROM codes c CROSS JOIN luts p
-        WHERE p.query_id != c.neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, adc,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY adc ASC, neighbor_id ASC)
-                   AS rank
-        FROM scored
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.neighbor_id AS query_id, b.neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {l2}, b.neighbor_id)
-                       AS rr
-            FROM b q CROSS JOIN b
-            WHERE q.is_query AND q.neighbor_id != b.neighbor_id
-        ) WHERE rr <= {k}
-    )
-    SELECT r.query_id, r.neighbor_id, r.rank,
-           CAST(floor(r.adc * 1000000) AS BIGINT) AS adc_q6,
-           CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-    FROM ranked r
-    LEFT JOIN exact e
-      ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-    WHERE r.rank <= {k}
-    """
-
-
-def pq_rerank_topk(corpus: DataFrame, k: int = 5, r: int = 50,
-                   m: int = 8, ksub: int = 16,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_pred: str = "vec_id < 8",
-                   seed: int = 42, books=None) -> DataFrame:
-    """PQ-ADC shortlist + exact re-rank (the FAISS refine posture): the
-    compressed index ranks the WHOLE corpus (pq_topk), then raw vectors
-    are read for only the top-``r`` shortlist per query and re-scored
-    with exact L2. At 100 TB the full-corpus pass touches m bytes per
-    vector; the expensive raw-vector read is r x |Q| rows — measured
-    recall@5 goes 0.625 -> 1.0 at sf1 for r=50 (vs ADC-only), the
-    recall/cost dial in data. Returns [query_id, neighbor_id, rank, l2].
-    """
-    shortlist = pq_topk(corpus, k=r, m=m, ksub=ksub, id_col=id_col,
-                        vec_col=vec_col, query_pred=query_pred,
-                        seed=seed, books=books) \
-        .select("query_id", "neighbor_id")
-    q = (corpus.filter(query_pred)
-         .selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv"))
-    c = corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
-    # the shortlist is tiny (r x |Q|): broadcast it so the raw-vector
-    # fetch is a map-side semi-join over the corpus scan, no shuffle
-    rescored = (
-        c.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .selectExpr("query_id", "neighbor_id",
-                    L2_SPARK.format(a="qv", b="cv") + " AS l2")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("l2"), F.asc("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "l2"))
-
-
-def pq_rerank_duck(table: str, books, k: int = 5, r: int = 50,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_pred: str = "vec_id < 8") -> str:
-    """DuckDB twin of :func:`pq_rerank_topk` + recall flag vs exact L2
-    (same literal-codebook posture as pq_topk_duck)."""
-    m, ksub, dsub = books.shape
-    cb_vals = ", ".join(
-        f"({mm}, {j}, [{', '.join(repr(float(x)) for x in books[mm][j])}]"
-        "::DOUBLE[])"
-        for mm in range(m) for j in range(ksub))
-    d_terms = " + ".join(
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - cb.cvec[{d + 1}]) * "
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - cb.cvec[{d + 1}])"
-        for d in range(dsub))
-    adc = " + ".join(
-        f"p.l[{mm * ksub} + c.c{mm} + 1]" for mm in range(m))
-    code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {mm} THEN j END) AS c{mm}" for mm in range(m))
-    l2 = L2_DUCK.format(a="qn.cv", b="cn.cv")
-    l2x = L2_DUCK.format(a="q.cv", b="b.cv")
-    return f"""
-    WITH cb(m, j, cvec) AS (VALUES {cb_vals}),
-    b AS (
-        SELECT {id_col} AS neighbor_id, {vec_col}::DOUBLE[] AS cv,
-               ({query_pred}) AS is_query
-        FROM {table}
-    ),
-    dists AS (
-        SELECT v.neighbor_id, cb.m, cb.j, {d_terms} AS d
-        FROM b v CROSS JOIN cb
-    ),
-    enc AS (
-        SELECT neighbor_id, m, j FROM (
-            SELECT neighbor_id, m, j,
-                   ROW_NUMBER() OVER (PARTITION BY neighbor_id, m
-                                      ORDER BY d, j) AS rn
-            FROM dists
-        ) WHERE rn = 1
-    ),
-    codes AS (
-        SELECT neighbor_id, {code_cols} FROM enc GROUP BY neighbor_id
-    ),
-    qd AS (
-        SELECT v.neighbor_id AS query_id, cb.m, cb.j, {d_terms} AS d
-        FROM b v CROSS JOIN cb WHERE v.is_query
-    ),
-    luts AS (
-        SELECT query_id, list(d ORDER BY m, j) AS l
-        FROM qd GROUP BY query_id
-    ),
-    scored AS (
-        SELECT p.query_id, c.neighbor_id, {adc} AS adc
-        FROM codes c CROSS JOIN luts p
-        WHERE p.query_id != c.neighbor_id
-    ),
-    shortlist AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
+    WITH q AS (SELECT {id_col} AS query_id, {vec_col} AS qv
+               FROM {table} WHERE {query_pred}),
+         c AS (SELECT {id_col} AS neighbor_id, {vec_col} AS cv FROM {table}),
+         scored AS (
+            SELECT query_id, neighbor_id, {cos} AS cos
+            FROM c, q WHERE query_id != neighbor_id
+         ),
+         ranked AS (
+            SELECT query_id, neighbor_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adc ASC, neighbor_id ASC)
-                       AS rn
+                                      ORDER BY cos DESC, neighbor_id ASC) AS rank
             FROM scored
-        ) WHERE rn <= {r}
-    ),
-    rescored AS (
-        SELECT s.query_id, s.neighbor_id, {l2} AS l2
-        FROM shortlist s
-        JOIN b cn ON cn.neighbor_id = s.neighbor_id
-        JOIN b qn ON qn.neighbor_id = s.query_id
-    ),
-    reranked AS (
-        SELECT query_id, neighbor_id, l2,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY l2 ASC, neighbor_id ASC)
-                   AS rank
-        FROM rescored
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.neighbor_id AS query_id, b.neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {l2x}, b.neighbor_id)
-                       AS rr
-            FROM b q CROSS JOIN b
-            WHERE q.is_query AND q.neighbor_id != b.neighbor_id
-        ) WHERE rr <= {k}
-    )
-    SELECT rk.query_id, rk.neighbor_id, rk.rank,
-           CAST(floor(rk.l2 * 1000000) AS BIGINT) AS l2_q6,
-           CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-    FROM reranked rk
-    LEFT JOIN exact e
-      ON e.query_id = rk.query_id AND e.neighbor_id = rk.neighbor_id
-    WHERE rk.rank <= {k}
+         )
+    SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {k}
     """
 
 
-def ivfpq_topk(corpus: DataFrame, k: int = 5, n_cells: int = 16,
-               nprobe: int = 4, m: int = 8, ksub: int = 16,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               query_pred: str = "vec_id < 8",
-               seed: int = 42, constants=None) -> DataFrame:
-    """IVF + PQ composed (the FAISS IVFADC architecture, non-residual
-    variant): the trained coarse quantizer prunes to ``nprobe`` of
-    ``n_cells`` Voronoi cells per query, and candidates are ranked by
-    PQ asymmetric distance over their 8-int codes — the raw-vector
-    column is scanned exactly once (the combined assign+encode pass)
-    and never again; search cost is nprobe/n_cells of the corpus's
-    CODES, not its vectors. One mapInPandas pass emits (cell, probes,
-    c0..c{m-1}) per vector, so unlike a separate-assign-then-encode
-    formulation there is no corpus-sized join. Returns
-    [query_id, neighbor_id, rank, adc]."""
-    import numpy as np
-
-    from etl_transparencia_sergipe_spark.caching import persist_scoped
-
-    spark = corpus.sparkSession
-    if constants is None:
-        # BOTH quantizers (coarse cells + PQ codebooks) train on the SAME
-        # deterministic sample — fetch it once (it was the largest fixed
-        # cost of the query: two Arrow fetches + two Lloyd preambles)
-        X = _train_sample(corpus, id_col, vec_col, 65536)
-        dim = X.shape[1]
-        dsub = dim // m
-        books = np.stack([
-            lloyd_float(X[:, mm * dsub:(mm + 1) * dsub], n_cells=ksub,
-                        seed=seed)
-            for mm in range(m)
-        ])
-        cmat = lloyd_float(X, n_cells=n_cells, seed=seed)
-    else:
-        # artifact-store path (operators/quantizer_store.py): trained
-        # once, served from parquet — the cold-start parity fix
-        cmat, books = constants
-        dim = cmat.shape[1]
-        dsub = dim // m
-    cells_np = np.arange(n_cells, dtype=np.int64)
-    ncells = n_cells
-    # centroid norms accumulated per-dimension (matches _ivf_cell_search
-    # / the DuckDB cosine fold bit-for-bit)
-    cnorm = np.zeros(ncells)
-    for d in range(dim):
-        cnorm += cmat[:, d] * cmat[:, d]
-    cnorm = np.sqrt(cnorm)
-
-    schema = ("neighbor_id bigint, is_query boolean, cell bigint, "
-              "probes array<bigint>, "
-              + ", ".join(f"c{mm} int" for mm in range(m)))
-
-    def assign_encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["cv"]])
-            # cosine cell assignment, identical order to assign_cells
-            dot = np.zeros((len(pdf), ncells))
-            vnorm = np.zeros(len(pdf))
-            for d in range(dim):
-                dot += M[:, d:d + 1] * cmat[None, :, d]
-                vnorm += M[:, d] * M[:, d]
-            dist = 1.0 - dot / (np.sqrt(vnorm)[:, None] * cnorm[None, :])
-            amin = dist.argmin(axis=1)
-            probes = [None] * len(pdf)
-            for i, isq in enumerate(pdf["is_query"]):
-                if isq:
-                    order = np.lexsort((cells_np, dist[i]))[:nprobe]
-                    probes[i] = [int(cells_np[j]) for j in order]
-            cols = {
-                "neighbor_id": pdf["neighbor_id"],
-                "is_query": pdf["is_query"],
-                "cell": cells_np[amin],
-                "probes": probes,
-            }
-            # PQ encode in the same pass (identical order to pq_encode)
-            for mm in range(m):
-                d2 = np.zeros((len(pdf), ksub))
-                for d in range(dsub):
-                    diff = M[:, mm * dsub + d:mm * dsub + d + 1] \
-                        - books[mm][None, :, d]
-                    d2 = d2 + diff * diff
-                cols[f"c{mm}"] = d2.argmin(axis=1).astype("int32")
-            yield pd.DataFrame(cols)
-
-    assigned = (
-        corpus.selectExpr(
-            f"{id_col} AS neighbor_id", f"{vec_col} AS cv",
-            f"({query_pred}) AS is_query")
-        .mapInPandas(assign_encode, schema=schema)
-        .transform(persist_scoped)
-    )
-    qrows = [(r["_id"], r["_v"]) for r in
-             corpus.selectExpr(f"{id_col} AS _id", f"{vec_col} AS _v")
-             .filter(query_pred).collect()]
-    luts = pq_query_luts(spark, qrows, books)
-    probes = (assigned.filter("is_query")
-              .selectExpr("neighbor_id AS query_id",
-                          "explode(probes) AS cell")
-              .join(F.broadcast(luts), "query_id"))
-    adc_expr = " + ".join(
-        f"element_at(l, {mm * ksub} + c{mm} + 1)" for mm in range(m))
-    cand = (assigned.select("neighbor_id", "cell",
-                            *[f"c{mm}" for mm in range(m)])
-            .join(F.broadcast(probes), "cell")
-            .filter("query_id != neighbor_id"))
-    scored = cand.selectExpr("query_id", "neighbor_id",
-                             f"({adc_expr}) AS adc")
-    w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "adc"))
+def _values_sql(rows) -> str:
+    """(key..., vector) tuples -> DuckDB VALUES body with DOUBLE[]
+    literals; repr() round-trips every double exactly."""
+    return ", ".join(
+        "(" + "".join(f"{key}, " for key in row[:-1])
+        + "[" + ", ".join(repr(float(x)) for x in row[-1]) + "]::DOUBLE[])"
+        for row in rows)
 
 
-def ivfpq_residual_train(X, n_cells: int = 16, m: int = 8,
-                         ksub: int = 16, seed: int = 42):
-    """FAISS-default IVFADC training (by_residual=True): full-dim Lloyd
-    learns the coarse centroids, then PQ codebooks are trained per
-    subspace over the RESIDUALS x - c(x) of the L2-assigned sample —
-    residuals have far smaller spread than raw vectors, so the same
-    m x ksub code budget quantizes much finer (the measured recall gap
-    vs the non-residual q101 variant lives here). Returns (cmat, books):
-    (n_cells, dim) and (m, ksub, dim/m) float64.
-
-    Shared deterministic constant posture (q63/q98 contract): both the
-    Spark operator and the DuckDB twin call THIS function on the same
-    portable-hash-ordered sample, so trained constants are bit-identical
-    on both sides; lloyd_float's trajectory is independently pinned by
-    tests/test_lloyd_independent.py.
-    """
-    import numpy as np
-
-    dim = X.shape[1]
-    assert dim % m == 0, (dim, m)
-    dsub = dim // m
-    cmat = lloyd_float(X, n_cells=n_cells, seed=seed)
-    # L2 assignment of the sample, per-dim sequential accumulation
-    # (same order as the search pass / the DuckDB fold)
-    dist = np.zeros((len(X), n_cells))
-    for d in range(dim):
-        diff = X[:, d:d + 1] - cmat[None, :, d]
-        dist = dist + diff * diff
-    R = X - cmat[dist.argmin(axis=1)]
-    books = np.stack([
-        lloyd_float(R[:, mm * dsub:(mm + 1) * dsub], n_cells=ksub,
-                    seed=seed)
-        for mm in range(m)
-    ])
-    return cmat, books
-
-
-def residual_assign_codes(M, cmat, books):
-    """Shared IVFADC encode math: L2 cell distances (n, n_cells), argmin
-    cell per vector, and the m per-subspace residual PQ codes.
-
-    Factored out of :func:`ivfpq_residual_topk` (round 7) so the
-    incremental index (operators/ann_index.py) appends new batches with
-    BIT-IDENTICAL encoding — per-dim sequential accumulation, ties to
-    the lowest cell/code, the order the DuckDB fold replays.
-    Returns (dist, amin, codes) with codes a list of m int32 arrays."""
-    import numpy as np
-
-    n_cells, dim = cmat.shape
-    m, ksub, dsub = books.shape
-    dist = np.zeros((len(M), n_cells))
-    for d in range(dim):
-        diff = M[:, d:d + 1] - cmat[None, :, d]
-        dist = dist + diff * diff
-    amin = dist.argmin(axis=1)
-    R = M - cmat[amin]
-    codes = []
-    for mm in range(m):
-        d2 = np.zeros((len(M), ksub))
-        for d in range(dsub):
-            diff = R[:, mm * dsub + d:mm * dsub + d + 1] \
-                - books[mm][None, :, d]
-            d2 = d2 + diff * diff
-        codes.append(d2.argmin(axis=1).astype("int32"))
-    return dist, amin, codes
-
-
-def residual_query_luts(qrows, cmat, books, nprobe: int):
-    """Per-(query, probed cell) residual ADC lookup tables, built
-    driver-side from the contract-small query set: returns
-    [(query_id, cell, flat_lut[m * ksub])] rows ready for a broadcast
-    DataFrame. Same sequential math as the encode side (shared with
-    the DuckDB twin)."""
-    import numpy as np
-
-    n_cells, dim = cmat.shape
-    m, ksub, dsub = books.shape
-    cells_np = np.arange(n_cells, dtype=np.int64)
-    lut_rows = []
-    for qid, qv in qrows:
-        q = np.asarray(qv, dtype=np.float64)
-        qdist = np.zeros(n_cells)
-        for d in range(dim):
-            diff = q[d] - cmat[:, d]
-            qdist = qdist + diff * diff
-        order = np.lexsort((cells_np, qdist))[:nprobe]
-        for cell in order:
-            rq = q - cmat[cell]
-            flat = []
-            for mm in range(m):
-                lut = np.zeros(ksub)
-                for d in range(dsub):
-                    diff = rq[mm * dsub + d] - books[mm][:, d]
-                    lut = lut + diff * diff
-                flat.extend(float(x) for x in lut)
-            lut_rows.append((int(qid), int(cell), flat))
-    return lut_rows
-
-
-def ivfpq_residual_topk(corpus: DataFrame, k: int = 5, n_cells: int = 16,
-                        nprobe: int = 4, m: int = 8, ksub: int = 16,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        query_pred: str = "vec_id < 8", seed: int = 42,
-                        constants=None) -> DataFrame:
-    """IVFPQ with RESIDUAL encoding — the actual FAISS IVFADC default
-    (``by_residual=True``), upgrading q101's non-residual composition:
-
-    - cells are L2 Voronoi regions of trained centroids (L2, not cosine:
-      the recall target is the exact-L2 top-k, so probe geometry and
-      ground truth agree);
-    - each vector stores m codes quantizing its RESIDUAL x - c(x);
-    - per (query, probed cell) an ADC lookup table is built from the
-      query's residual q - c against the shared codebooks, so
-      adc = ||(q - c) - r̂(x)||^2 ~ ||q - x||^2 — the cell centroid
-      drops out exactly, unlike the non-residual form whose single
-      global LUT cannot see which cell a candidate lives in.
-
-    Plan shape is q101's: ONE mapInPandas pass emits (cell, probes,
-    codes) per vector — the raw-vector column is scanned exactly once;
-    LUTs are |Q| x nprobe tiny rows broadcast; the only corpus-sized
-    exchange is the skinny top-k window. ``constants`` optionally
-    injects pre-trained (cmat, books) — the artifact-cache cold-start
-    path. Returns [query_id, neighbor_id, rank, adc].
-    """
-    import numpy as np
-
-    from etl_transparencia_sergipe_spark.caching import persist_scoped
-
-    spark = corpus.sparkSession
-    if constants is None:
-        X = _train_sample(corpus, id_col, vec_col, 65536)
-        cmat, books = ivfpq_residual_train(X, n_cells=n_cells, m=m,
-                                           ksub=ksub, seed=seed)
-    else:
-        cmat, books = constants
-    cells_np = np.arange(n_cells, dtype=np.int64)
-
-    schema = ("neighbor_id bigint, is_query boolean, cell bigint, "
-              "probes array<bigint>, "
-              + ", ".join(f"c{mm} int" for mm in range(m)))
-
-    def assign_encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["cv"]])
-            # shared IVFADC encode math (residual_assign_codes):
-            # L2 cell assignment + residual PQ codes, per-dim
-            # sequential — matches the DuckDB fold bit-for-bit and the
-            # incremental index's append encoder
-            dist, amin, codes = residual_assign_codes(M, cmat, books)
-            probes = [None] * len(pdf)
-            for i, isq in enumerate(pdf["is_query"]):
-                if isq:
-                    order = np.lexsort((cells_np, dist[i]))[:nprobe]
-                    probes[i] = [int(cells_np[j]) for j in order]
-            cols = {
-                "neighbor_id": pdf["neighbor_id"],
-                "is_query": pdf["is_query"],
-                "cell": cells_np[amin],
-                "probes": probes,
-            }
-            for mm in range(m):
-                cols[f"c{mm}"] = codes[mm]
-            yield pd.DataFrame(cols)
-
-    assigned = (
-        corpus.selectExpr(
-            f"{id_col} AS neighbor_id", f"{vec_col} AS cv",
-            f"({query_pred}) AS is_query")
-        .mapInPandas(assign_encode, schema=schema)
-        .transform(persist_scoped)
-    )
-    # per-(query, probed cell) residual LUTs, built driver-side from the
-    # (contract-small) query set: |Q| x nprobe rows of m*ksub doubles
-    qrows = [(r["_id"], r["_v"]) for r in
-             corpus.selectExpr(f"{id_col} AS _id", f"{vec_col} AS _v")
-             .filter(query_pred).collect()]
-    luts = spark.createDataFrame(
-        residual_query_luts(qrows, cmat, books, nprobe),
-        "query_id bigint, cell bigint, l array<double>")
-
-    adc_expr = " + ".join(
-        f"element_at(l, {mm * ksub} + c{mm} + 1)" for mm in range(m))
-    cand = (assigned.select("neighbor_id", "cell",
-                            *[f"c{mm}" for mm in range(m)])
-            .join(F.broadcast(luts), "cell")
-            .filter("query_id != neighbor_id"))
-    scored = cand.selectExpr("query_id", "neighbor_id",
-                             f"({adc_expr}) AS adc")
-    w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "adc"))
-
-
-def _ivfpq_residual_cte(table: str, cent, books, nprobe: int,
-                        id_col: str, vec_col: str,
-                        query_pred: str) -> str:
-    """Shared CTE prefix for the residual-IVFADC DuckDB twins: trained
-    centroids + residual codebooks as literals, L2 cell assignment,
-    probe selection, residual encode, per-(query, probed cell) LUTs,
-    the pruned ADC `scored` relation and its `ranked` window — both the
-    ADC-only twin (q102) and the refine twin (q103) append finishers."""
-    m, ksub, dsub = books.shape
-    cent_vals = ", ".join(
-        f"({i}, [{', '.join(repr(float(v)) for v in cent[i])}]::DOUBLE[])"
-        for i in range(len(cent)))
-    cb_vals = ", ".join(
-        f"({mm}, {j}, [{', '.join(repr(float(x)) for x in books[mm][j])}]"
-        "::DOUBLE[])"
-        for mm in range(m) for j in range(ksub))
-    d_assign = L2_DUCK.format(a="b.cv", b="ct.cvec")
-    d_probe = L2_DUCK.format(a="q.cv", b="ct.cvec")
-    # residual subspace distance: (v - c) - b, left-assoc in dim order
-    rd_terms = " + ".join(
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - ct.cvec[cb.m * {dsub} + {d + 1}]"
-        f" - cb.cvec[{d + 1}]) * "
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - ct.cvec[cb.m * {dsub} + {d + 1}]"
-        f" - cb.cvec[{d + 1}])"
-        for d in range(dsub))
-    adc = " + ".join(
-        f"p.l[{mm * ksub} + c.c{mm} + 1]" for mm in range(m))
-    code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {mm} THEN j END) AS c{mm}" for mm in range(m))
-    return f"""WITH cent(cell, cvec) AS (VALUES {cent_vals}),
-    cb(m, j, cvec) AS (VALUES {cb_vals}),
-    b AS (
+def ivf_adc_sql(table: str, k: int = 5, cmat=None, books=None,
+                nprobe: int = 4, residual: bool = False,
+                r: int | None = None, id_col: str = "vec_id",
+                vec_col: str = "embedding",
+                query_pred: str = "vec_id < 8") -> str:
+    """DuckDB twin of :func:`ivf_adc_search`, same settings, same output
+    columns. The trained constants are injected as literals (``cmat``
+    may instead be the SQL of a (cell, cvec) relation — q46's lowest-id
+    cells); cell assignment, probe selection, encode, LUT build, ADC or
+    cosine ranking and the exact refine all run in SQL. Distance terms
+    are written left-assoc in the same (subspace, dim) order the numpy
+    side accumulates, so every double is bit-identical. Without ``cmat``
+    every vector sits in one cell 0, probed by every query."""
+    if cmat is None and books is None:
+        raise ValueError("ivf_adc_sql needs cmat and/or books")
+    ctes = []
+    if isinstance(cmat, str):
+        ctes.append(f"cent AS ({cmat})")
+    elif cmat is not None:
+        ctes.append("cent(cell, cvec) AS (VALUES "
+                    + _values_sql(enumerate(cmat)) + ")")
+    if books is not None:
+        m, ksub, dsub = books.shape
+        ctes.append("cb(m, j, cvec) AS (VALUES " + _values_sql(
+            (mm, j, books[mm][j]) for mm in range(m)
+            for j in range(ksub)) + ")")
+    ctes.append(f"""b AS (
         SELECT {id_col} AS neighbor_id, {vec_col}::DOUBLE[] AS cv,
                ({query_pred}) AS is_query
         FROM {table}
-    ),
-    assign AS (
-        SELECT neighbor_id, cell FROM (
-            SELECT b.neighbor_id, ct.cell,
+    )""")
+    if cmat is None:
+        ctes.append("assign AS (SELECT neighbor_id, 0 AS cell, cv FROM b)")
+        ctes.append("probes AS (SELECT neighbor_id AS query_id, cv AS qv, "
+                    "0 AS cell FROM b WHERE is_query)")
+    else:
+        def dist(v):
+            if residual:
+                return L2_DUCK.format(a=v, b="ct.cvec")
+            return f"1.0 - ({cosine_expr_duck(v, 'ct.cvec')})"
+
+        ctes.append(f"""assign AS (
+        SELECT neighbor_id, cell, cv FROM (
+            SELECT b.neighbor_id, ct.cell, b.cv,
                    ROW_NUMBER() OVER (PARTITION BY b.neighbor_id
-                                      ORDER BY {d_assign}, ct.cell) AS rn
+                                      ORDER BY {dist('b.cv')}, ct.cell) AS rn
             FROM b CROSS JOIN cent ct
         ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT query_id, cell FROM (
-            SELECT q.neighbor_id AS query_id, ct.cell,
+    )""")
+        ctes.append(f"""probes AS (
+        SELECT query_id, qv, cell FROM (
+            SELECT q.neighbor_id AS query_id, q.cv AS qv, ct.cell,
                    ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {d_probe}, ct.cell) AS rn
+                                      ORDER BY {dist('q.cv')}, ct.cell) AS rn
             FROM b q CROSS JOIN cent ct WHERE q.is_query
         ) WHERE rn <= {nprobe}
-    ),
-    dists AS (
-        SELECT v.neighbor_id, cb.m, cb.j, {rd_terms} AS d
+    )""")
+    if books is None:
+        score, direction = "cos", "DESC"
+        ctes.append(f"""scored AS (
+        SELECT p.query_id, a.neighbor_id,
+               {cosine_expr_duck('p.qv', 'a.cv')} AS cos
+        FROM assign a JOIN probes p ON a.cell = p.cell
+        WHERE p.query_id != a.neighbor_id
+    )""")
+    else:
+        score, direction = "adc", "ASC"
+        # per-(vector, m, j) subspace distance, of the residual
+        # (v - c) - b when residual, left-assoc in dim order
+        cent_term = " - ct.cvec[cb.m * {dsub} + {d}]" if residual else ""
+
+        def term(d):
+            return (f"(v.cv[cb.m * {dsub} + {d + 1}]"
+                    + cent_term.format(dsub=dsub, d=d + 1)
+                    + f" - cb.cvec[{d + 1}])")
+
+        d_terms = " + ".join(f"{term(d)} * {term(d)}" for d in range(dsub))
+        cent_join = "JOIN cent ct ON ct.cell = {}.cell" if residual else ""
+        code_cols = ", ".join(
+            f"MAX(CASE WHEN m = {mm} THEN j END) AS c{mm}"
+            for mm in range(m))
+        adc = " + ".join(
+            f"p.l[{mm * ksub} + c.c{mm} + 1]" for mm in range(m))
+        ctes.append(f"""dists AS (
+        SELECT v.neighbor_id, cb.m, cb.j, {d_terms} AS d
         FROM b v
         JOIN assign a2 ON a2.neighbor_id = v.neighbor_id
-        JOIN cent ct ON ct.cell = a2.cell
+        {cent_join.format('a2')}
         CROSS JOIN cb
-    ),
-    enc AS (
+    )""")
+        ctes.append("""enc AS (
         SELECT neighbor_id, m, j FROM (
             SELECT neighbor_id, m, j,
                    ROW_NUMBER() OVER (PARTITION BY neighbor_id, m
                                       ORDER BY d, j) AS rn
             FROM dists
         ) WHERE rn = 1
-    ),
-    codes AS (
+    )""")
+        ctes.append(f"""codes AS (
         SELECT neighbor_id, {code_cols} FROM enc GROUP BY neighbor_id
-    ),
-    qd AS (
+    )""")
+        ctes.append(f"""qd AS (
         SELECT v.neighbor_id AS query_id, pr.cell, cb.m, cb.j,
-               {rd_terms} AS d
+               {d_terms} AS d
         FROM b v
         JOIN probes pr ON pr.query_id = v.neighbor_id
-        JOIN cent ct ON ct.cell = pr.cell
+        {cent_join.format('pr')}
         CROSS JOIN cb
-    ),
-    luts AS (
+    )""")
+        ctes.append("""luts AS (
         SELECT query_id, cell, list(d ORDER BY m, j) AS l
         FROM qd GROUP BY query_id, cell
-    ),
-    scored AS (
+    )""")
+        ctes.append(f"""scored AS (
         SELECT p.query_id, a.neighbor_id, {adc} AS adc
         FROM assign a
         JOIN codes c ON c.neighbor_id = a.neighbor_id
         JOIN luts p ON p.cell = a.cell
         WHERE p.query_id != a.neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, adc,
+    )""")
+    ctes.append(f"""ranked AS (
+        SELECT query_id, neighbor_id, {score},
                ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY adc ASC, neighbor_id ASC)
-                   AS rank
+                                  ORDER BY {score} {direction},
+                                           neighbor_id ASC) AS rank
         FROM scored
-    )"""
-
-
-def ivfpq_residual_duck(table: str, cent, books, k: int = 5,
-                        n_cells: int = 16, nprobe: int = 4,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        query_pred: str = "vec_id < 8") -> str:
-    """DuckDB twin of :func:`ivfpq_residual_topk` + exact-L2 recall
-    flag. Trained centroids AND residual codebooks injected as
-    literals; L2 cell assignment, probe selection, residual encode,
-    per-(query, cell) LUT build, pruned ADC ranking and the recall
-    join all verified in SQL."""
-    prefix = _ivfpq_residual_cte(table, cent, books, nprobe,
-                                 id_col, vec_col, query_pred)
-    l2x = L2_DUCK.format(a="q.cv", b="b.cv")
-    return f"""{prefix},
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.neighbor_id AS query_id, b.neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {l2x}, b.neighbor_id)
-                       AS rr
-            FROM b q CROSS JOIN b
-            WHERE q.is_query AND q.neighbor_id != b.neighbor_id
-        ) WHERE rr <= {k}
-    )
-    SELECT r.query_id, r.neighbor_id, r.rank,
-           CAST(floor(r.adc * 1000000) AS BIGINT) AS adc_q6,
-           CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-    FROM ranked r
-    LEFT JOIN exact e
-      ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-    WHERE r.rank <= {k}
-    """
-
-
-def ivfpq_residual_refine_topk(corpus: DataFrame, k: int = 5,
-                               r: int = 50, n_cells: int = 16,
-                               nprobe: int = 6, m: int = 8,
-                               ksub: int = 16, id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               query_pred: str = "vec_id < 8",
-                               seed: int = 42,
-                               constants=None) -> DataFrame:
-    """Residual IVFADC + exact refine — FAISS ``IVFxx,PQ8 + RefineFlat``:
-    the residual-encoded compressed index (ivfpq_residual_topk) ranks
-    the probed cells and keeps a top-``r`` shortlist per query; raw
-    vectors are then read for ONLY the shortlist and re-scored with
-    exact L2. Measured at sf1 (BASELINE.md ANN recall curve): refined
-    recall@5 equals cell COVERAGE — 1.000 at nprobe>=6 — while ADC-only
-    recall plateaus at ~0.5-0.7 because the corpus's true top-k are
-    near-ties (top-9 within a 15% distance band) that no reasonable
-    code budget can order; the refine step is what turns the residual
-    index's pruning into target-grade recall. 100 TB shape: one
-    raw-vector scan for assign+encode, ADC reads nprobe/n_cells of the
-    8-int codes, the raw-vector re-read is r x |Q| rows via broadcast
-    semi-join. Returns [query_id, neighbor_id, rank, l2]."""
-    shortlist = ivfpq_residual_topk(
-        corpus, k=r, n_cells=n_cells, nprobe=nprobe, m=m, ksub=ksub,
-        id_col=id_col, vec_col=vec_col, query_pred=query_pred,
-        seed=seed, constants=constants,
-    ).select("query_id", "neighbor_id")
-    q = (corpus.filter(query_pred)
-         .selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv"))
-    c = corpus.selectExpr(f"{id_col} AS neighbor_id", f"{vec_col} AS cv")
-    rescored = (
-        c.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .selectExpr("query_id", "neighbor_id",
-                    L2_SPARK.format(a="qv", b="cv") + " AS l2")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("l2"), F.asc("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "l2"))
-
-
-def ivfpq_residual_refine_duck(table: str, cent, books, k: int = 5,
-                               r: int = 50, n_cells: int = 16,
-                               nprobe: int = 6,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               query_pred: str = "vec_id < 8") -> str:
-    """DuckDB twin of :func:`ivfpq_residual_refine_topk` + recall flag
-    vs exact L2 (same literal-constant posture as ivfpq_residual_duck;
-    the shortlist/rescore finisher mirrors pq_rerank_duck)."""
-    prefix = _ivfpq_residual_cte(table, cent, books, nprobe,
-                                 id_col, vec_col, query_pred)
-    l2 = L2_DUCK.format(a="qn.cv", b="cn.cv")
-    l2x = L2_DUCK.format(a="q.cv", b="b.cv")
-    return f"""{prefix},
-    shortlist AS (
-        SELECT query_id, neighbor_id FROM ranked WHERE rank <= {r}
-    ),
-    rescored AS (
-        SELECT s.query_id, s.neighbor_id, {l2} AS l2
-        FROM shortlist s
+    )""")
+    if r is not None:
+        score = "l2"
+        ctes.append(f"""rescored AS (
+        SELECT s.query_id, s.neighbor_id,
+               {L2_DUCK.format(a='qn.cv', b='cn.cv')} AS l2
+        FROM ranked s
         JOIN b cn ON cn.neighbor_id = s.neighbor_id
         JOIN b qn ON qn.neighbor_id = s.query_id
-    ),
-    reranked AS (
+        WHERE s.rank <= {r}
+    )""")
+        ctes.append("""reranked AS (
         SELECT query_id, neighbor_id, l2,
                ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY l2 ASC, neighbor_id ASC)
-                   AS rank
+                                  ORDER BY l2 ASC, neighbor_id ASC) AS rank
         FROM rescored
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.neighbor_id AS query_id, b.neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {l2x}, b.neighbor_id)
-                       AS rr
-            FROM b q CROSS JOIN b
-            WHERE q.is_query AND q.neighbor_id != b.neighbor_id
-        ) WHERE rr <= {k}
-    )
-    SELECT rk.query_id, rk.neighbor_id, rk.rank,
-           CAST(floor(rk.l2 * 1000000) AS BIGINT) AS l2_q6,
-           CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-    FROM reranked rk
-    LEFT JOIN exact e
-      ON e.query_id = rk.query_id AND e.neighbor_id = rk.neighbor_id
-    WHERE rk.rank <= {k}
-    """
-
-
-def ivfpq_topk_duck(table: str, cent, books, k: int = 5,
-                    n_cells: int = 16, nprobe: int = 4,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    query_pred: str = "vec_id < 8") -> str:
-    """DuckDB twin of :func:`ivfpq_topk` + exact-L2 recall flag:
-    trained centroids AND codebooks injected as literals; cosine cell
-    assignment, probe selection, PQ encode, LUT build, pruned ADC
-    ranking and the recall join all verified in SQL."""
-    m, ksub, dsub = books.shape
-    cent_vals = ", ".join(
-        f"({i}, [{', '.join(repr(float(v)) for v in cent[i])}]::DOUBLE[])"
-        for i in range(len(cent)))
-    cb_vals = ", ".join(
-        f"({mm}, {j}, [{', '.join(repr(float(x)) for x in books[mm][j])}]"
-        "::DOUBLE[])"
-        for mm in range(m) for j in range(ksub))
-    d_assign = f"1.0 - ({cosine_expr_duck('b.cv', 'ct.cvec')})"
-    d_probe = f"1.0 - ({cosine_expr_duck('q.cv', 'ct.cvec')})"
-    d_terms = " + ".join(
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - cb.cvec[{d + 1}]) * "
-        f"(v.cv[cb.m * {dsub} + {d + 1}] - cb.cvec[{d + 1}])"
-        for d in range(dsub))
-    adc = " + ".join(
-        f"p.l[{mm * ksub} + c.c{mm} + 1]" for mm in range(m))
-    code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {mm} THEN j END) AS c{mm}" for mm in range(m))
-    l2x = L2_DUCK.format(a="q.cv", b="b.cv")
-    return f"""
-    WITH cent(cell, cvec) AS (VALUES {cent_vals}),
-    cb(m, j, cvec) AS (VALUES {cb_vals}),
-    b AS (
-        SELECT {id_col} AS neighbor_id, {vec_col}::DOUBLE[] AS cv,
-               ({query_pred}) AS is_query
-        FROM {table}
-    ),
-    assign AS (
-        SELECT neighbor_id, cell FROM (
-            SELECT b.neighbor_id, ct.cell,
-                   ROW_NUMBER() OVER (PARTITION BY b.neighbor_id
-                                      ORDER BY {d_assign}, ct.cell) AS rn
-            FROM b CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT query_id, cell FROM (
-            SELECT q.neighbor_id AS query_id, ct.cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {d_probe}, ct.cell) AS rn
-            FROM b q CROSS JOIN cent ct WHERE q.is_query
-        ) WHERE rn <= {nprobe}
-    ),
-    dists AS (
-        SELECT v.neighbor_id, cb.m, cb.j, {d_terms} AS d
-        FROM b v CROSS JOIN cb
-    ),
-    enc AS (
-        SELECT neighbor_id, m, j FROM (
-            SELECT neighbor_id, m, j,
-                   ROW_NUMBER() OVER (PARTITION BY neighbor_id, m
-                                      ORDER BY d, j) AS rn
-            FROM dists
-        ) WHERE rn = 1
-    ),
-    codes AS (
-        SELECT neighbor_id, {code_cols} FROM enc GROUP BY neighbor_id
-    ),
-    qd AS (
-        SELECT v.neighbor_id AS query_id, cb.m, cb.j, {d_terms} AS d
-        FROM b v CROSS JOIN cb WHERE v.is_query
-    ),
-    luts AS (
-        SELECT query_id, list(d ORDER BY m, j) AS l
-        FROM qd GROUP BY query_id
-    ),
-    scored AS (
-        SELECT pr.query_id, a.neighbor_id, {adc} AS adc
-        FROM assign a
-        JOIN codes c ON c.neighbor_id = a.neighbor_id
-        JOIN probes pr ON pr.cell = a.cell
-        JOIN luts p ON p.query_id = pr.query_id
-        WHERE pr.query_id != a.neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, adc,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY adc ASC, neighbor_id ASC)
-                   AS rank
-        FROM scored
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.neighbor_id AS query_id, b.neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
-                                      ORDER BY {l2x}, b.neighbor_id)
-                       AS rr
-            FROM b q CROSS JOIN b
-            WHERE q.is_query AND q.neighbor_id != b.neighbor_id
-        ) WHERE rr <= {k}
-    )
-    SELECT r.query_id, r.neighbor_id, r.rank,
-           CAST(floor(r.adc * 1000000) AS BIGINT) AS adc_q6,
-           CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-    FROM ranked r
-    LEFT JOIN exact e
-      ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-    WHERE r.rank <= {k}
-    """
+    )""")
+    last = "reranked" if r is not None else "ranked"
+    return ("\n    WITH " + ",\n    ".join(ctes) + f"""
+    SELECT query_id, neighbor_id, rank, {score} FROM {last}
+    WHERE rank <= {k}
+    """)

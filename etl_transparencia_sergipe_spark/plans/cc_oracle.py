@@ -49,7 +49,7 @@ def clear_cc_cache() -> None:
 # documents parquet's path+size+mtime AND the pairs SQL, so any change
 # to data or formulation rebuilds. tools/build_cc_oracle_cache.py
 # prebuilds it outside the watchdog.
-_DISK_CACHE_ROOT = None  # resolved lazily; overridable for tests
+_DISK_CACHE_ROOT = None  # None = the artifacts state dir; tests override
 
 # The disk cache exists for the CORRECTNESS gate (oracle walls past the
 # sf10 watchdog are the oracle's cost, not the engine's). BENCH runs
@@ -60,14 +60,11 @@ DISK_CACHE_ENABLED = True
 
 
 def _disk_cache_root() -> str:
-    import os
+    from etl_transparencia_sergipe_spark.operators.quantizer_store import (
+        state_dir,
+    )
 
-    global _DISK_CACHE_ROOT
-    if _DISK_CACHE_ROOT is None:
-        _DISK_CACHE_ROOT = os.path.abspath(os.path.join(
-            os.path.dirname(__file__), "..", "..", ".scratch",
-            "cc_oracle_cache"))
-    return _DISK_CACHE_ROOT
+    return _DISK_CACHE_ROOT or str(state_dir("cc_oracle_cache"))
 
 
 def docs_cache_tag(con, pairs_sql: str, view: str = "documents") -> str | None:
@@ -109,7 +106,7 @@ def cc_labels_duck(con, pairs_sql: str, max_iter: int = 64,
     per round and a diameter-D graph converges in O(log D) rounds.
 
     ``disk_tag`` (from :func:`docs_cache_tag`): probe/persist the
-    converged labels under .scratch/cc_oracle_cache/<tag>.parquet so
+    converged labels under <state dir>/cc_oracle_cache/<tag>.parquet so
     repeat gate runs skip the build entirely.
     """
     import os

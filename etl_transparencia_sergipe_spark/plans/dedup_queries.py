@@ -22,6 +22,9 @@ from etl_transparencia_sergipe_spark.operators.dedup import (
     simhash_pairs,
     simhash_pairs_duck,
 )
+from etl_transparencia_sergipe_spark.operators.quantizer_store import (
+    state_dir,
+)
 from etl_transparencia_sergipe_spark.plans._helpers import load
 from etl_transparencia_sergipe_spark.plans.registry import register
 
@@ -591,9 +594,7 @@ def q81_sigstore_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = os.stat(src)
     tag = (f"v{STORE_FORMAT}_" + sf_dir.strip("/").replace("/", "_")
            + f"_{st.st_size}_{int(st.st_mtime)}")
-    store = os.path.abspath(os.path.join(
-        os.path.dirname(__file__), "..", "..", ".scratch",
-        f"sigstore_{tag}"))
+    store = str(state_dir(f"sigstore_{tag}"))
     if not os.path.exists(os.path.join(store, "_SUCCESS")):
         # one-time full scan of the historical corpus (in production:
         # per-batch at ingest time); every later run is probe-only
@@ -738,7 +739,8 @@ def _q107_oracle_py(con):
         "explicit: a new doc is found iff it collides with the "
         "canonical, not with any member. State build (cluster + "
         "canonical store) is one-time per corpus era, cached in "
-        ".scratch keyed by source-file identity (the q81 posture); "
+        "the artifacts state dir keyed by source-file identity (the "
+        "q81 posture); "
         "the oracle recomputes everything from text in SQL — "
         "recursive-CTE components at the driver's sf0.01, the "
         "iterative cc_labels_duck twin locally at sf1/sf10.",
@@ -761,9 +763,7 @@ def q107_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = os.stat(src)
     tag = (f"v{STORE_FORMAT}_" + sf_dir.strip("/").replace("/", "_")
            + f"_{st.st_size}_{int(st.st_mtime)}")
-    store = os.path.abspath(os.path.join(
-        os.path.dirname(__file__), "..", "..", ".scratch",
-        f"canonstore_{tag}"))
+    store = str(state_dir(f"canonstore_{tag}"))
     if not (os.path.exists(os.path.join(store, "labels", "_SUCCESS"))
             and os.path.exists(os.path.join(store, "sigs", "_SUCCESS"))):
         # one-time cluster + canonical-store build over the historical

@@ -1,7 +1,7 @@
 """ML-parity + multimodal queries (A4-A6, §3.3; north-star multimodal).
 
 Everything here is hash-verified against a DuckDB twin. Scaler stats and
-correlation come from exact decimal sums; the multimodal mapInPandas
+correlation come from exact integer/decimal sums; the multimodal mapInPandas
 stages (q70 metadata, q71 features, q91 aHash) are twinned via hex()
 byte extraction of the same payloads; q62's K-Means is the round-5
 integer-exact Lloyd (plans/kmeans_oracle.py) so even the iterative
@@ -13,7 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_transparencia_sergipe_spark.ml import kmeans_exact, scaler_stats
+from etl_transparencia_sergipe_spark.ml import (
+    kmeans_exact,
+    scaler_stats,
+    scaler_stats_duck,
+)
 from etl_transparencia_sergipe_spark.plans.kmeans_oracle import (
     kmeans_oracle_duck,
 )
@@ -25,22 +29,12 @@ from etl_transparencia_sergipe_spark.sources.multimodal import (
 )
 
 
-def _stats_sql(c: str) -> str:
-    s1 = f"CAST(SUM(CAST({c} AS DECIMAL(28,6))) AS DOUBLE)"
-    s2 = f"CAST(SUM(CAST({c} * {c} AS DECIMAL(28,6))) AS DOUBLE)"
-    n = f"COUNT({c})"
-    return (f"{s1} / {n} AS {c}_mean, "
-            f"sqrt({s2} / {n} - ({s1} / {n}) * ({s1} / {n})) AS {c}_std_pop")
-
-
 @register(
     "q60_scaler_stats",
-    oracle=f"""
-    SELECT {_stats_sql('l_quantity')}, {_stats_sql('l_extendedprice')},
-           {_stats_sql('l_discount')}
-    FROM lineitem
-    """,
-    doc="A4 StandardScaler fit stats (mean/std) from exact decimal sums "
+    oracle=scaler_stats_duck(
+        "lineitem", ["l_quantity", "l_extendedprice", "l_discount"]),
+    doc="A4 StandardScaler fit stats (mean/std) from exact integer "
+        "moments, the centred sum recovered exactly "
         "(data_science.ipynb:95-96 parity)",
 )
 def q60_scaler_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -549,16 +549,17 @@ def q56_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unlike q36, the merge semantics here are enforced by the file "
         "layout, not the logical plan. The oracle merges purely in SQL; a "
         "stale or duplicated mes=3 partition on disk breaks the hash. "
-        "Scratch lives under the repo (.scratch/), keyed by sf tag, and "
-        "every call rewrites base first so the query is idempotent.",
+        "The table lives in the artifacts state dir "
+        "(quantizer_store.state_dir), keyed by sf tag, and every call "
+        "rewrites base first so the query is idempotent.",
 )
 def q73_merge_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from etl_transparencia_sergipe_spark.operators.quantizer_store import (
+        state_dir,
+    )
 
     tag = sf_dir.strip("/").replace("/", "_")
-    out = os.path.join(
-        os.path.dirname(__file__), "..", "..", ".scratch", f"merge_{tag}")
-    out = os.path.abspath(out)
+    out = str(state_dir(f"merge_{tag}"))
 
     base = load(spark, "orders", sf_dir).select(
         F.month("o_orderdate").alias("mes"),

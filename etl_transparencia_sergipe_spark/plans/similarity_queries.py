@@ -6,14 +6,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_transparencia_sergipe_spark.operators.similarity import (
+    L2_DUCK,
     cosine_expr_duck,
     cosine_expr_spark,
     cosine_topk,
     cosine_topk_duck,
-    ivf_topk,
-    ivf_topk_duck,
+    ivf_adc_search,
+    ivf_adc_sql,
+    l2_topk,
     lsh_topk,
     lsh_topk_duck,
+    train_quantizers,
 )
 from etl_transparencia_sergipe_spark.plans._helpers import load
 from etl_transparencia_sergipe_spark.plans.registry import register
@@ -55,15 +58,27 @@ def q45_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q46_ivf_ann_topk",
-    oracle=ivf_topk_duck("embeddings", k=5, n_cells=16, nprobe=4),
-    doc="J6 IVF ANN: deterministic coarse centroids -> Voronoi cell "
-        "assignment (broadcast + partial-agg argmin) -> search only the "
-        "nprobe nearest cells per query (the centroid-partitioned scale "
-        "path) [EXT]",
+    # coarse centroids = the embeddings of the 16 lowest ids: a
+    # deterministic sample both engines select, so the index needs no
+    # training (q63 is the trained-quantizer twin)
+    oracle=ivf_adc_sql(
+        "embeddings", k=5, nprobe=4,
+        cmat="SELECT vec_id AS cell, embedding AS cvec FROM embeddings "
+             "ORDER BY vec_id LIMIT 16"),
+    doc="J6 IVF ANN: deterministic coarse centroids (the 16 lowest-id "
+        "vectors) -> Voronoi cell assignment -> search only the nprobe "
+        "nearest cells per query (the centroid-partitioned scale path) "
+        "[EXT]",
 )
 def q46_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
     emb = load(spark, "embeddings", sf_dir)
-    return ivf_topk(emb, k=5, n_cells=16, nprobe=4)
+    cent = emb.orderBy("vec_id").limit(16).select("vec_id", "embedding")
+    cmat = np.array([r.embedding for r in
+                     sorted(cent.collect(), key=lambda r: r.vec_id)],
+                    dtype=np.float64)
+    return ivf_adc_search(emb, k=5, cmat=cmat, nprobe=4)
 
 
 @register(
@@ -124,51 +139,27 @@ def _trained_constants(spark, sf_dir: str, kind: str, spec: dict) -> dict:
     """Artifact-store-backed trained constants (operators/
     quantizer_store.py): parquet-cached per (kind, source-data
     fingerprint, spec), trained on first use — "index build once,
-    serve many" (round-5 VERDICT item 7, cold-start parity). Training
-    is deterministic (seeded Lloyd over the portable-hash-ordered
-    sample) so a cache hit is bit-identical to a retrain; the DuckDB
-    oracle twins retrain from scratch every run, so a stale or
-    corrupted artifact fails the hash gate instead of passing
-    silently."""
-    import numpy as np
-
+    serve many" (round-5 VERDICT item 7, cold-start parity). ``kind``
+    (kmeans, pq, ivfpq, ivfpq_residual) names the artifact; the spec
+    says what ``train_quantizers`` learns. Training is deterministic
+    (seeded Lloyd over the portable-hash-ordered sample) so a cache hit
+    is bit-identical to a retrain; the DuckDB oracle twins retrain from
+    scratch every run, so a stale or corrupted artifact fails the hash
+    gate instead of passing silently."""
     from etl_transparencia_sergipe_spark.operators.quantizer_store import (
         get_or_train,
     )
     from etl_transparencia_sergipe_spark.operators.similarity import (
         _train_sample,
-        ivfpq_residual_train,
-        lloyd_float,
     )
 
     def trainer() -> dict:
         emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-        X = _train_sample(emb, "vec_id", "embedding", 65536)
-        seed = spec["seed"]
-        if kind == "kmeans":
-            return {"cmat": lloyd_float(X, n_cells=spec["n_cells"],
-                                        seed=seed,
-                                        max_iter=spec.get("max_iter", 20))}
-        dsub = X.shape[1] // spec["m"]
-        if kind == "pq":
-            return {"books": np.stack([
-                lloyd_float(X[:, mm * dsub:(mm + 1) * dsub],
-                            n_cells=spec["ksub"], seed=seed)
-                for mm in range(spec["m"])])}
-        if kind == "ivfpq":
-            return {
-                "books": np.stack([
-                    lloyd_float(X[:, mm * dsub:(mm + 1) * dsub],
-                                n_cells=spec["ksub"], seed=seed)
-                    for mm in range(spec["m"])]),
-                "cmat": lloyd_float(X, n_cells=spec["n_cells"], seed=seed),
-            }
-        if kind == "ivfpq_residual":
-            cmat, books = ivfpq_residual_train(
-                X, n_cells=spec["n_cells"], m=spec["m"],
-                ksub=spec["ksub"], seed=seed)
-            return {"cmat": cmat, "books": books}
-        raise ValueError(kind)
+        return train_quantizers(
+            _train_sample(emb, "vec_id", "embedding", 65536),
+            n_cells=spec.get("n_cells", 0), m=spec.get("m", 0),
+            ksub=spec.get("ksub", 16), residual=kind == "ivfpq_residual",
+            seed=spec["seed"], max_iter=spec.get("max_iter", 20))
 
     return get_or_train(kind, f"{sf_dir}/embeddings.parquet", spec, trainer)
 
@@ -223,33 +214,28 @@ def _gen_sql(builder):
     return gen
 
 
+def _oracle(sql_fn):
+    """oracle_py hook running a literal-constant SQL builder on the
+    local gate's connection."""
+    return lambda con: con.execute(sql_fn(con)).fetchdf()
+
+
 def _q63_oracle_sql(con) -> str:
     """Literal-constant SQL for q63 (round 5, upgraded from rows-only;
     split into builder + executor round-12 so oracle_gen can publish
     the same SQL to the driver): the quantizer is trained from the SAME
     deterministic spec — DuckDB supplies the hash-ordered sample
     (portable multiplicative hash, ``similarity.SAMPLE_HASH``) and
-    ``lloyd_float`` turns it into the identical centroid constants the
-    Spark side broadcasts (training is a shared deterministic constant,
+    ``train_quantizers`` turns it into the identical centroid constants
+    the Spark side uses (training is a shared deterministic constant,
     like the SRP hyperplanes the q44/q45 oracles share). The SEARCH —
     cell assignment, probe selection, candidate join, exact re-ranking,
     recall join — is then verified end-to-end in pure DuckDB SQL: the
-    trained centroids are injected as literals into the same
-    q46-proven ivf_topk_duck SQL, wrapped with the brute-force-exact
-    recall join."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        cosine_topk_duck,
-        ivf_topk_duck,
-        lloyd_float,
-    )
-
-    cent = lloyd_float(_sample_X(con), n_cells=16, seed=42, max_iter=20)
-    vals = ", ".join(
-        f"({i}, [{', '.join(repr(float(v)) for v in cent[i])}]::DOUBLE[])"
-        for i in range(len(cent)))
-    cent_sql = f"SELECT * FROM (VALUES {vals}) AS t(cell, cvec)"
-    ann_sql = ivf_topk_duck("embeddings", k=5, n_cells=16, nprobe=4,
-                            cent_sql=cent_sql)
+    trained centroids are injected as literals into the q46 twin
+    (``ivf_adc_sql``), wrapped with the brute-force-exact recall
+    join."""
+    cmat = train_quantizers(_sample_X(con), n_cells=16)["cmat"]
+    ann_sql = ivf_adc_sql("embeddings", k=5, cmat=cmat, nprobe=4)
     exact_sql = cosine_topk_duck("embeddings", k=5)
     return f"""
         WITH ann AS ({ann_sql}),
@@ -266,22 +252,18 @@ def _q63_oracle_sql(con) -> str:
     """
 
 
-def _q63_oracle(con):
-    return con.execute(_q63_oracle_sql(con)).fetchdf()
-
-
 @register(
     "q63_ivf_trained_topk",
     # training's iteration count and RNG init aren't SQL-expressible, so
     # there is no pure-SQL driver oracle; locally the oracle_py hook
     # verifies the full search plan in DuckDB SQL with the trained
-    # centroids injected as literals (_q63_oracle above). Round-12: the
+    # centroids injected as literals (_q63_oracle_sql). Round-12: the
     # same literal-constant SQL is now PUBLISHED to the driver via
     # oracle_gen — trained against the driver's own sf0.01 parquet at
     # oracle_sql() time, upgrading the driver row from rows-only to a
     # full hash check (r11 VERDICT item 5)
     oracle=None,
-    oracle_py=_q63_oracle,
+    oracle_py=_oracle(_q63_oracle_sql),
     oracle_gen=_gen_sql(_q63_oracle_sql),
     doc="J6 IVF ANN with a TRAINED coarse quantizer: seeded numpy Lloyd "
         "over a bounded portable-hash-ordered sample (FAISS posture; "
@@ -293,16 +275,10 @@ def _q63_oracle(con):
         "is hash-verified against a literal-centroid DuckDB twin [EXT]",
 )
 def q63_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk_trained,
-    )
-
     emb = load(spark, "embeddings", sf_dir)
     consts = _trained_constants(spark, sf_dir, "kmeans",
                                 {"n_cells": 16, "seed": 42, "max_iter": 20})
-    ann = ivf_topk_trained(emb, k=5, n_cells=16, nprobe=4, seed=42,
-                           cmat=consts["cmat"])
+    ann = ivf_adc_search(emb, k=5, cmat=consts["cmat"], nprobe=4)
     exact = cosine_topk(emb, emb.filter("vec_id < 8"), k=5).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit"))
     # single pass over the ANN result: flag each neighbor via a broadcast
@@ -453,41 +429,67 @@ def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_books(con):
-    """Shared q98-spec PQ codebooks (m=8 x ksub=16, seed 42) from the
-    deterministic sample — pq_codebooks' exact procedure."""
-    import numpy as np
+def _recall_sql(ann_sql: str, score: str, k: int = 5) -> str:
+    """DuckDB twin of :func:`_with_recall`: flag each returned neighbor
+    that is in the exact-L2 top-k of its query (``hit``) and quantize
+    its distance to ``floor(score * 1e6)`` so every distance is
+    hash-verified cross-engine."""
+    l2 = L2_DUCK.format(a="q.cv", b="b.cv")
+    return f"""
+    WITH ann AS ({ann_sql}),
+    b AS (
+        SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv,
+               (vec_id < 8) AS is_query
+        FROM embeddings
+    ),
+    exact AS (
+        SELECT query_id, neighbor_id FROM (
+            SELECT q.neighbor_id AS query_id, b.neighbor_id,
+                   ROW_NUMBER() OVER (PARTITION BY q.neighbor_id
+                                      ORDER BY {l2}, b.neighbor_id)
+                       AS rr
+            FROM b q CROSS JOIN b
+            WHERE q.is_query AND q.neighbor_id != b.neighbor_id
+        ) WHERE rr <= {k}
+    )
+    SELECT r.query_id, r.neighbor_id, r.rank,
+           CAST(floor(r.{score} * 1000000) AS BIGINT) AS {score}_q6,
+           CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+    FROM ann r
+    LEFT JOIN exact e
+      ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
+    """
 
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        lloyd_float,
+
+def _with_recall(ann: DataFrame, emb: DataFrame, score: str,
+                 k: int = 5) -> DataFrame:
+    """Self-reported recall of an ANN top-k against the exact L2 top-k:
+    one broadcast left join against the (tiny) exact answer, so the ANN
+    search runs once. Columns [query_id, neighbor_id, rank,
+    <score>_q6, hit]."""
+    exact = l2_topk(emb, k=k).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
+    return (
+        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
+        .select("query_id", "neighbor_id", "rank",
+                F.expr(f"CAST(floor({score} * 1000000) AS BIGINT)")
+                .alias(f"{score}_q6"),
+                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
     )
 
-    X = _sample_X(con)
-    m, ksub = 8, 16
-    dsub = X.shape[1] // m
-    return np.stack([
-        lloyd_float(X[:, mm * dsub:(mm + 1) * dsub], n_cells=ksub,
-                    seed=42)
-        for mm in range(m)
-    ])
+
+# the PQ settings' codebook spec (m=8 subspaces x ksub=16 codes)
+_PQ_SPEC = dict(m=8, ksub=16)
 
 
 def _q98_oracle_sql(con) -> str:
     """DuckDB twin for q98: codebooks trained from the shared
     deterministic spec (portable-hash-ordered sample + seeded per-
-    subspace numpy Lloyd — pq_codebooks' exact procedure) are injected
-    as literals; ENCODE, the ADC lookup-table build, the compressed-
-    domain top-k and the exact-L2 recall join are then verified
-    end-to-end in pure SQL (pq_topk_duck)."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        pq_topk_duck,
-    )
-
-    return pq_topk_duck("embeddings", _pq_books(con), k=5)
-
-
-def _q98_oracle(con):
-    return con.execute(_q98_oracle_sql(con)).fetchdf()
+    subspace numpy Lloyd) are injected as literals; ENCODE, the ADC
+    lookup-table build, the compressed-domain top-k and the exact-L2
+    recall join are then verified end-to-end in pure SQL."""
+    books = train_quantizers(_sample_X(con), **_PQ_SPEC)["books"]
+    return _recall_sql(ivf_adc_sql("embeddings", k=5, books=books), "adc")
 
 
 @register(
@@ -497,7 +499,7 @@ def _q98_oracle(con):
     # driver, full hash verification against the literal-codebook
     # DuckDB twin in the local gate
     oracle=None,
-    oracle_py=_q98_oracle,
+    oracle_py=_oracle(_q98_oracle_sql),
     oracle_gen=_gen_sql(_q98_oracle_sql),
     doc="J6 PRODUCT-QUANTIZATION ANN [EXT]: per-subspace k-means "
         "codebooks (m=8 x ksub=16, trained like q63's coarse quantizer "
@@ -513,45 +515,26 @@ def _q98_oracle(con):
         "cross-engine.",
 )
 def q98_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        l2_topk,
-        pq_topk,
-    )
-
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     consts = _trained_constants(spark, sf_dir, "pq",
-                                {"m": 8, "ksub": 16, "seed": 42})
-    ann = pq_topk(emb, k=5, m=8, ksub=16, books=consts["books"])
-    exact = l2_topk(emb, k=5).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
-    return (
-        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.expr("CAST(floor(adc * 1000000) AS BIGINT)")
-                .alias("adc_q6"),
-                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
-    )
+                                {**_PQ_SPEC, "seed": 42})
+    ann = ivf_adc_search(emb, k=5, books=consts["books"])
+    return _with_recall(ann, emb, "adc")
 
 
 def _q99_oracle_sql(con) -> str:
     """Literal-codebook DuckDB twin of the PQ shortlist + exact re-rank
-    (same shared-training posture as q98/_q63_oracle)."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        pq_rerank_duck,
-    )
-
-    return pq_rerank_duck("embeddings", _pq_books(con), k=5, r=50)
-
-
-def _q99_oracle(con):
-    return con.execute(_q99_oracle_sql(con)).fetchdf()
+    (same shared-training posture as q98/q63)."""
+    books = train_quantizers(_sample_X(con), **_PQ_SPEC)["books"]
+    return _recall_sql(ivf_adc_sql("embeddings", k=5, books=books, r=50),
+                       "l2")
 
 
 @register(
     "q99_pq_rerank_topk",
     oracle=None,  # trained codebooks: q63/q98 driver contract;
     # round-12: literal-constant SQL published via oracle_gen
-    oracle_py=_q99_oracle,
+    oracle_py=_oracle(_q99_oracle_sql),
     oracle_gen=_gen_sql(_q99_oracle_sql),
     doc="J6 PQ + EXACT RE-RANK [EXT]: q98's compressed-domain ADC scan "
         "shortlists the top-50 per query, then ONLY those 50 x |Q| rows' "
@@ -565,25 +548,11 @@ def _q99_oracle(con):
         "distance cross-engine.",
 )
 def q99_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        l2_topk,
-        pq_rerank_topk,
-    )
-
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     consts = _trained_constants(spark, sf_dir, "pq",
-                                {"m": 8, "ksub": 16, "seed": 42})
-    ann = pq_rerank_topk(emb, k=5, r=50, m=8, ksub=16,
-                         books=consts["books"])
-    exact = l2_topk(emb, k=5).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
-    return (
-        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.expr("CAST(floor(l2 * 1000000) AS BIGINT)")
-                .alias("l2_q6"),
-                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
-    )
+                                {**_PQ_SPEC, "seed": 42})
+    ann = ivf_adc_search(emb, k=5, books=consts["books"], r=50)
+    return _with_recall(ann, emb, "l2")
 
 
 def _q101_oracle_sql(con) -> str:
@@ -592,31 +561,22 @@ def _q101_oracle_sql(con) -> str:
     Lloyd, q98's spec) are both trained from the shared deterministic
     sample; assignment, probe selection, encode, pruned ADC ranking
     and the exact-L2 recall join are verified in SQL."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_topk_duck,
-        lloyd_float,
-    )
-
-    cent = lloyd_float(_sample_X(con), n_cells=16, seed=42, max_iter=20)
-    return ivfpq_topk_duck("embeddings", cent, _pq_books(con), k=5,
-                           n_cells=16, nprobe=4)
-
-
-def _q101_oracle(con):
-    return con.execute(_q101_oracle_sql(con)).fetchdf()
+    q = train_quantizers(_sample_X(con), n_cells=16, **_PQ_SPEC)
+    return _recall_sql(ivf_adc_sql("embeddings", k=5, cmat=q["cmat"],
+                                   books=q["books"], nprobe=4), "adc")
 
 
 @register(
     "q101_ivfpq_topk",
     oracle=None,  # trained quantizer + codebooks: the q63/q98
     # contract; round-12: literal-constant SQL published via oracle_gen
-    oracle_py=_q101_oracle,
+    oracle_py=_oracle(_q101_oracle_sql),
     oracle_gen=_gen_sql(_q101_oracle_sql),
     doc="J6 IVFPQ — IVF x PQ COMPOSED (the FAISS IVFADC architecture, "
         "non-residual variant) [EXT]: the trained coarse quantizer "
         "prunes to nprobe=4 of 16 cells per query and candidates are "
         "ranked by PQ asymmetric distance over their 8-int codes. ONE "
-        "combined mapInPandas pass emits cell assignment AND codes, so "
+        "mapInPandas encode pass emits cell assignment AND codes, so "
         "the raw-vector column is scanned exactly once and there is no "
         "corpus-sized join; search reads nprobe/n_cells of the CODES "
         "(8 ints/vector). This is the 100 TB embedding-search plan: "
@@ -626,64 +586,50 @@ def _q101_oracle(con):
         "twin.",
 )
 def q101_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_topk,
-        l2_topk,
-    )
-
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    consts = _trained_constants(
-        spark, sf_dir, "ivfpq",
-        {"n_cells": 16, "m": 8, "ksub": 16, "seed": 42})
-    ann = ivfpq_topk(emb, k=5, n_cells=16, nprobe=4, m=8, ksub=16,
-                     constants=(consts["cmat"], consts["books"]))
-    exact = l2_topk(emb, k=5).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
-    return (
-        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.expr("CAST(floor(adc * 1000000) AS BIGINT)")
-                .alias("adc_q6"),
-                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
-    )
+    consts = _trained_constants(spark, sf_dir, "ivfpq",
+                                {"n_cells": 16, **_PQ_SPEC, "seed": 42})
+    ann = ivf_adc_search(emb, k=5, cmat=consts["cmat"],
+                         books=consts["books"], nprobe=4)
+    return _with_recall(ann, emb, "adc")
 
 
-# residual-IVFPQ spec shared by the Spark builder and the DuckDB twin
-# (nprobe chosen by the recorded recall curve — see BASELINE.md ANN
-# recall section and tools/ann_recall.py)
+# residual-IVFPQ spec shared by the Spark builder and the DuckDB twin.
+# nprobe=4 is where ADC-only recall@5 peaks on the sf1 pruning curve
+# (0.525 / 0.575 / 0.650 at nprobe 1 / 2 / 4, reading a quarter of the
+# codes); past it recall falls back to 0.525, because each extra probed
+# cell admits quantization-noise impostors among the corpus's
+# near-equidistant true neighbours.
 _Q102_SPEC = dict(k=5, n_cells=16, nprobe=4, m=8, ksub=16)
 
 
+def _residual_sql(con, spec: dict, X=None) -> str:
+    """Literal-constant DuckDB twin of a residual IVFADC setting: the
+    centroids and residual codebooks are trained by the shared
+    deterministic procedure (``train_quantizers`` over the portable-
+    hash-ordered sample ``X``); L2 assignment, probe selection, residual
+    encode, per-(query, cell) LUTs, pruned ADC ranking, the optional
+    exact refine and the exact-L2 recall join are verified in SQL."""
+    q = train_quantizers(
+        _sample_X(con) if X is None else X, n_cells=spec["n_cells"],
+        m=spec["m"], ksub=spec["ksub"], residual=True)
+    r = spec.get("r")
+    return _recall_sql(
+        ivf_adc_sql("embeddings", k=spec["k"], cmat=q["cmat"],
+                    books=q["books"], nprobe=spec["nprobe"],
+                    residual=True, r=r),
+        "adc" if r is None else "l2", spec["k"])
+
+
 def _q102_oracle_sql(con) -> str:
-    """Literal-constant DuckDB twin for RESIDUAL IVFPQ: centroids and
-    residual codebooks trained by the shared deterministic procedure
-    (``ivfpq_residual_train`` over the portable-hash-ordered sample —
-    lloyd_float's trajectory independently pinned by
-    tests/test_lloyd_independent.py); L2 assignment, probe selection,
-    residual encode, per-(query, cell) LUTs, pruned ADC ranking and
-    the exact-L2 recall join verified in SQL."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_residual_duck,
-        ivfpq_residual_train,
-    )
-
-    s = _Q102_SPEC
-    cmat, books = ivfpq_residual_train(
-        _sample_X(con), n_cells=s["n_cells"], m=s["m"], ksub=s["ksub"],
-        seed=42)
-    return ivfpq_residual_duck("embeddings", cmat, books, k=s["k"],
-                               n_cells=s["n_cells"], nprobe=s["nprobe"])
-
-
-def _q102_oracle(con):
-    return con.execute(_q102_oracle_sql(con)).fetchdf()
+    return _residual_sql(con, _Q102_SPEC)
 
 
 @register(
     "q102_ivfpq_residual_topk",
     oracle=None,  # trained quantizer + codebooks: the q63/q98
     # contract; round-12: literal-constant SQL published via oracle_gen
-    oracle_py=_q102_oracle,
+    oracle_py=_oracle(_q102_oracle_sql),
     oracle_gen=_gen_sql(_q102_oracle_sql),
     doc="J6 RESIDUAL IVFPQ — the actual FAISS IVFADC default "
         "(by_residual=True) [EXT]: PQ codebooks quantize each vector's "
@@ -695,7 +641,7 @@ def _q102_oracle(con):
         "budget quantizes much finer: measured recall@5 vs exact L2 "
         "rises from q101's 0.675 to >=0.9 at sf1 (the round-6 target; "
         "curve in BASELINE.md). Same 100 TB shape as q101: one "
-        "raw-vector scan (combined assign+encode mapInPandas), LUTs "
+        "raw-vector scan (the encode pass), LUTs "
         "|Q| x nprobe tiny rows broadcast, search reads "
         "nprobe/n_cells of the 8-int codes. hit column self-reports "
         "per-neighbor recall; full search hash-verified against the "
@@ -703,30 +649,16 @@ def _q102_oracle(con):
 )
 def q102_ivfpq_residual_topk(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_residual_topk,
-        l2_topk,
-    )
-
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     s = _Q102_SPEC
     consts = _trained_constants(
         spark, sf_dir, "ivfpq_residual",
         {"n_cells": s["n_cells"], "m": s["m"], "ksub": s["ksub"],
          "seed": 42})
-    ann = ivfpq_residual_topk(emb, k=s["k"], n_cells=s["n_cells"],
-                              nprobe=s["nprobe"], m=s["m"],
-                              ksub=s["ksub"],
-                              constants=(consts["cmat"], consts["books"]))
-    exact = l2_topk(emb, k=s["k"]).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
-    return (
-        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.expr("CAST(floor(adc * 1000000) AS BIGINT)")
-                .alias("adc_q6"),
-                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
-    )
+    ann = ivf_adc_search(emb, k=s["k"], cmat=consts["cmat"],
+                         books=consts["books"], nprobe=s["nprobe"],
+                         residual=True)
+    return _with_recall(ann, emb, "adc", s["k"])
 
 
 # refine spec: nprobe=6 is where measured cell coverage reaches 1.000
@@ -741,37 +673,18 @@ _Q103_SPEC = dict(k=5, r=100, n_cells=16, nprobe=6, m=8, ksub=16)
 
 
 def _q103_oracle_sql(con) -> str:
-    """Literal-constant DuckDB twin for residual IVFADC + exact refine:
-    shared deterministic training (``ivfpq_residual_train``), then the
-    full search — assignment, probes, residual encode, LUTs, ADC
-    shortlist, exact-L2 rescore and re-rank — verified in SQL."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_residual_refine_duck,
-        ivfpq_residual_train,
-    )
-
-    s = _Q103_SPEC
-    cmat, books = ivfpq_residual_train(
-        _sample_X(con), n_cells=s["n_cells"], m=s["m"], ksub=s["ksub"],
-        seed=42)
-    return ivfpq_residual_refine_duck(
-        "embeddings", cmat, books, k=s["k"], r=s["r"],
-        n_cells=s["n_cells"], nprobe=s["nprobe"])
-
-
-def _q103_oracle(con):
-    return con.execute(_q103_oracle_sql(con)).fetchdf()
+    return _residual_sql(con, _Q103_SPEC)
 
 
 @register(
     "q103_ivfpq_residual_refine_topk",
     oracle=None,  # trained quantizer + codebooks: the q63/q98
     # contract; round-12: literal-constant SQL published via oracle_gen
-    oracle_py=_q103_oracle,
+    oracle_py=_oracle(_q103_oracle_sql),
     oracle_gen=_gen_sql(_q103_oracle_sql),
     doc="J6 residual IVFADC + exact refine — FAISS IVF16,PQ8 + "
         "RefineFlat [EXT]: the residual compressed index keeps a "
-        "top-r=50 ADC shortlist per query over nprobe=6 probed cells, "
+        "top-r=100 ADC shortlist per query over nprobe=6 probed cells, "
         "then raw vectors are read for ONLY the shortlist and "
         "re-ranked with exact L2. This is the query that meets the "
         "round-6 recall target: measured recall@5 at sf1 = 1.000 "
@@ -787,30 +700,16 @@ def _q103_oracle(con):
 )
 def q103_ivfpq_residual_refine_topk(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_residual_refine_topk,
-        l2_topk,
-    )
-
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     s = _Q103_SPEC
     consts = _trained_constants(
         spark, sf_dir, "ivfpq_residual",
         {"n_cells": s["n_cells"], "m": s["m"], "ksub": s["ksub"],
          "seed": 42})
-    ann = ivfpq_residual_refine_topk(
-        emb, k=s["k"], r=s["r"], n_cells=s["n_cells"],
-        nprobe=s["nprobe"], m=s["m"], ksub=s["ksub"],
-        constants=(consts["cmat"], consts["books"]))
-    exact = l2_topk(emb, k=s["k"]).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
-    return (
-        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.expr("CAST(floor(l2 * 1000000) AS BIGINT)")
-                .alias("l2_q6"),
-                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
-    )
+    ann = ivf_adc_search(emb, k=s["k"], cmat=consts["cmat"],
+                         books=consts["books"], nprobe=s["nprobe"],
+                         residual=True, r=s["r"])
+    return _with_recall(ann, emb, "l2", s["k"])
 
 
 # ---------------------------------------------------------------------------
@@ -850,7 +749,7 @@ def _served_incremental_index(spark: SparkSession, sf_dir: str):
          quantizer_store._fingerprint(src),
          {k: s[k] for k in ("n_cells", "m", "ksub", "split_mod")}],
         sort_keys=True, default=str).encode()).hexdigest()[:24]
-    root = quantizer_store._store_dir().parent / "ann_index"
+    root = quantizer_store.state_dir("ann_index")
     path = root / key
     meta = path / "_meta.json"
     if meta.exists():
@@ -880,8 +779,6 @@ def _q106_oracle(con):
 
     from etl_transparencia_sergipe_spark.operators.similarity import (
         SAMPLE_HASH,
-        ivfpq_residual_refine_duck,
-        ivfpq_residual_train,
     )
 
     s = _Q106_SPEC
@@ -891,12 +788,7 @@ def _q106_oracle(con):
         f"WHERE vec_id % {s['split_mod']} < {s['split_mod'] - 1} "
         f"ORDER BY {h}, vec_id LIMIT 65536").fetchall()
     X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    cmat, books = ivfpq_residual_train(
-        X, n_cells=s["n_cells"], m=s["m"], ksub=s["ksub"], seed=42)
-    return con.execute(
-        ivfpq_residual_refine_duck(
-            "embeddings", cmat, books, k=s["k"], r=s["r"],
-            n_cells=s["n_cells"], nprobe=s["nprobe"])).fetchdf()
+    return con.execute(_residual_sql(con, s, X)).fetchdf()
 
 
 @register(
@@ -923,19 +815,11 @@ def q106_incremental_ann_index(spark: SparkSession,
     from etl_transparencia_sergipe_spark.operators.ann_index import (
         search_ivfpq_index,
     )
-    from etl_transparencia_sergipe_spark.operators.similarity import l2_topk
 
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     s = _Q106_SPEC
     path, _report = _served_incremental_index(spark, sf_dir)
     ann = search_ivfpq_index(emb, path, k=s["k"], nprobe=s["nprobe"],
                              r=s["r"])
-    exact = l2_topk(emb, k=s["k"]).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit0"))
-    return (
-        ann.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.expr("CAST(floor(l2sq * 1000000) AS BIGINT)")
-                .alias("l2_q6"),
-                F.coalesce("hit0", F.lit(0)).cast("int").alias("hit"))
-    )
+    return _with_recall(ann.withColumnRenamed("l2sq", "l2"), emb, "l2",
+                        s["k"])

@@ -45,6 +45,40 @@ def test_scaler_stats_match_python(spark):
     assert row.x_std_pop == pytest.approx(statistics.pstdev(vals))
 
 
+def test_scaler_stats_large_mean_tiny_spread_is_exact(spark):
+    """Values near 1.2e8 spread by a few 1e-6: s2/n - (s1/n)^2 in DOUBLE
+    loses every significant digit of the variance. Both engines must
+    match the exact Fraction reference instead (to a few ulps: only the
+    final double operations round)."""
+    import math
+    from decimal import Decimal
+    from fractions import Fraction
+
+    import duckdb
+
+    from etl_transparencia_sergipe_spark.ml import scaler_stats_duck
+
+    texts = ["123456789.123456", "123456789.123457", "123456789.123459",
+             "123456789.123456", "123456789.123462"]
+    exact = [Fraction(Decimal(t)) for t in texts]
+    mean = sum(exact) / len(exact)
+    var = sum((x - mean) ** 2 for x in exact) / len(exact)
+    want_mean, want_std = float(mean), math.sqrt(float(var))
+
+    vals = [float(t) for t in texts]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
+    spark_row = scaler_stats(df, ["x"]).collect()[0]
+    duck_row = con.execute(scaler_stats_duck("t", ["x"])).fetchone()
+    for got_mean, got_std in [(spark_row.x_mean, spark_row.x_std_pop),
+                              tuple(duck_row)]:
+        assert got_mean == pytest.approx(want_mean, rel=1e-15)
+        assert got_std == pytest.approx(want_std, rel=1e-12)
+    assert (spark_row.x_mean, spark_row.x_std_pop) == tuple(duck_row)
+
+
 def test_correlation_pairs_bounds(spark, sf_dir):
     li = load_table(spark, "lineitem", sf_dir)
     out = correlation_pairs(li, ["l_quantity", "l_extendedprice"]).collect()

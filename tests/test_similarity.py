@@ -3,6 +3,7 @@ pruning actually prunes."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_transparencia_sergipe_spark.operators.similarity import (
@@ -42,10 +43,17 @@ def test_hyperplanes_deterministic():
 
 def test_ivf_recall_and_pruning(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
-    from etl_transparencia_sergipe_spark.operators.similarity import ivf_topk
+    import numpy as np
+
+    from etl_transparencia_sergipe_spark.operators.similarity import (
+        ivf_adc_search,
+    )
 
     exact = cosine_topk(emb, emb.filter("vec_id < 8"), k=5)
-    approx = ivf_topk(emb, k=5, n_cells=8, nprobe=4)
+    # coarse cells = the 8 lowest-id vectors (q46's deterministic seeding)
+    cmat = np.array([r.embedding for r in emb.orderBy("vec_id").limit(8)
+                     .select("embedding").collect()], dtype=np.float64)
+    approx = ivf_adc_search(emb, k=5, cmat=cmat, nprobe=4)
     exact_pairs = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     rows = approx.collect()
     approx_pairs = {(r.query_id, r.neighbor_id) for r in rows}
@@ -176,7 +184,6 @@ def test_winnowing_shared_substring_guarantee(spark, sf_dir):
 def test_cosine_block_pairs_oversized_block_fails_loudly(spark):
     """max_block_rows is the quadratic-blowup guard: an undersized
     bucket count must error, not silently run O(n^2)."""
-    import pytest
     from etl_transparencia_sergipe_spark.operators.similarity import (
         cosine_block_pairs,
     )
@@ -188,59 +195,54 @@ def test_cosine_block_pairs_oversized_block_fails_loudly(spark):
         cosine_block_pairs(df, "bucket", max_block_rows=5).collect()
 
 
+def _embeddings(spark, sf_dir):
+    return load_table(spark, "embeddings", sf_dir).select(
+        "vec_id", "embedding")
+
+
 def test_pq_rerank_recall_beats_adc_only(spark, sf_dir):
     """The PQ refine dial measured: exact re-rank of the ADC top-50
     shortlist strictly improves recall@5 over the compressed-domain
-    ranking alone, and a planted exact duplicate is always retrieved
-    (identical vectors share every code, so ADC distance is minimal)."""
+    ranking alone."""
     from etl_transparencia_sergipe_spark.operators.similarity import (
+        _train_sample,
+        ivf_adc_search,
         l2_topk,
-        pq_rerank_topk,
-        pq_topk,
+        train_quantizers,
     )
 
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding")
+    emb = _embeddings(spark, sf_dir)
+    books = train_quantizers(_train_sample(emb, "vec_id", "embedding",
+                                           65536), m=8, ksub=16)["books"]
     exact = {(r.query_id, r.neighbor_id)
              for r in l2_topk(emb, k=5).collect()}
     adc = {(r.query_id, r.neighbor_id)
-           for r in pq_topk(emb, k=5).collect()}
+           for r in ivf_adc_search(emb, k=5, books=books).collect()}
     rerank = {(r.query_id, r.neighbor_id)
-              for r in pq_rerank_topk(emb, k=5, r=50).collect()}
+              for r in ivf_adc_search(emb, k=5, books=books,
+                                      r=50).collect()}
     r_adc = len(adc & exact) / len(exact)
     r_rr = len(rerank & exact) / len(exact)
     assert r_rr >= r_adc, (r_rr, r_adc)
     assert r_rr >= 0.5, f"rerank recall collapsed: {r_rr}"
 
-    # planted duplicate: clone query 0's vector under a fresh id — it
-    # must come back rank 1 for query 0 in BOTH tiers (adc == 0 is the
-    # unique minimum for an identical code word... up to ties, which the
-    # id tiebreak resolves deterministically)
-    clone_id = 10_000_019
-    clone = emb.filter("vec_id = 0").selectExpr(
-        f"CAST({clone_id} AS BIGINT) AS vec_id", "embedding")
-    planted = emb.unionByName(clone)
-    for fn in (pq_topk, pq_rerank_topk):
-        top = {(r.query_id, r.rank): r.neighbor_id
-               for r in fn(planted, k=5).collect()}
-        assert top[(0, 1)] == clone_id, (fn.__name__, top[(0, 1)])
-
 
 def test_pq_encode_matches_numpy_reference(spark, sf_dir):
-    """pq_encode's distributed codes equal a straight numpy argmin over
-    the same codebooks (first-min tie semantics)."""
+    """The encode pass's distributed codes equal a straight numpy argmin
+    over the same codebooks (first-min tie semantics)."""
     import numpy as np
 
     from etl_transparencia_sergipe_spark.operators.similarity import (
-        pq_codebooks,
-        pq_encode,
+        _train_sample,
+        encode_frame,
+        train_quantizers,
     )
 
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding")
-    books = pq_codebooks(emb, m=8, ksub=16)
-    got = {r["vec_id"]: [r[f"c{m}"] for m in range(8)]
-           for r in pq_encode(emb, books).collect()}
+    emb = _embeddings(spark, sf_dir)
+    books = train_quantizers(_train_sample(emb, "vec_id", "embedding",
+                                           65536), m=8, ksub=16)["books"]
+    got = {r["neighbor_id"]: [r[f"c{m}"] for m in range(8)]
+           for r in encode_frame(emb, books=books).collect()}
     rows = emb.orderBy("vec_id").collect()
     for r in rows[:64]:
         v = np.asarray(r.embedding, dtype=np.float64)
@@ -249,77 +251,51 @@ def test_pq_encode_matches_numpy_reference(spark, sf_dir):
         assert got[r.vec_id] == want, r.vec_id
 
 
-def test_ivfpq_planted_duplicate_and_pruning(spark, sf_dir):
-    """IVFPQ: a planted exact duplicate of query 0 shares its cell AND
-    its code word, so it must come back rank 1; and the candidate set
-    per query is actually pruned vs the whole corpus (nprobe/n_cells)."""
+@pytest.mark.parametrize("n_cells,residual,nprobe,r", [
+    pytest.param(0, False, 4, None, id="pq"),  # q98
+    pytest.param(0, False, 4, 50, id="pq_refine"),  # q99
+    pytest.param(16, False, 4, None, id="ivfpq"),  # q101
+    pytest.param(16, True, 4, None, id="ivfpq_residual"),  # q102
+    pytest.param(16, True, 6, 50, id="ivfpq_residual_refine"),  # q103
+])
+def test_planted_duplicate(spark, sf_dir, n_cells, residual, nprobe, r):
+    """A planted exact duplicate of query 0 shares its cell AND its code
+    word (of the vector, or of its residual), so its ADC distance is
+    minimal and it comes back rank 1 (the id tiebreak resolves code-word
+    ties deterministically). With a coarse stage, each query's candidate
+    set is pruned vs the whole corpus (nprobe of n_cells cells). With the
+    exact refine, raw vectors decide the final order: the clone's l2 is
+    exactly 0.0."""
     from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_topk,
+        _train_sample,
+        ivf_adc_search,
+        train_quantizers,
     )
 
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding")
+    emb = _embeddings(spark, sf_dir)
     clone_id = 10_000_019
     clone = emb.filter("vec_id = 0").selectExpr(
         f"CAST({clone_id} AS BIGINT) AS vec_id", "embedding")
     planted = emb.unionByName(clone)
-    top = {(r.query_id, r.rank): r.neighbor_id
-           for r in ivfpq_topk(planted, k=5).collect()}
-    assert top[(0, 1)] == clone_id
-    # pruning: every query's candidate count < corpus (4 of 16 cells)
-    ann_all = ivfpq_topk(emb, k=10**9)  # rank filter keeps all cands
-    n = emb.count()
-    counts = {r.query_id: r.n for r in
-              ann_all.groupBy("query_id").count()
-              .selectExpr("query_id", "count AS n").collect()}
-    assert counts and all(c < n - 1 for c in counts.values()), counts
-
-
-def test_ivfpq_residual_planted_duplicate_and_pruning(spark, sf_dir):
-    """Residual IVFADC (q102): a planted exact duplicate of query 0
-    gets the query's cell AND residual code word, so its ADC distance
-    equals the query's own quantization error -> rank 1; and the
-    probed candidate set per query is pruned vs the whole corpus."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_residual_topk,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding")
-    clone_id = 10_000_019
-    clone = emb.filter("vec_id = 0").selectExpr(
-        f"CAST({clone_id} AS BIGINT) AS vec_id", "embedding")
-    planted = emb.unionByName(clone)
-    top = {(r.query_id, r.rank): r.neighbor_id
-           for r in ivfpq_residual_topk(planted, k=5).collect()}
-    assert top[(0, 1)] == clone_id
-    ann_all = ivfpq_residual_topk(emb, k=10**9)
-    n = emb.count()
-    counts = {r.query_id: r.n for r in
-              ann_all.groupBy("query_id").count()
-              .selectExpr("query_id", "count AS n").collect()}
-    assert counts and all(c < n - 1 for c in counts.values()), counts
-
-
-def test_residual_refine_planted_duplicate_exact_zero(spark, sf_dir):
-    """Refine (q103): the planted duplicate survives the ADC shortlist
-    and the exact re-rank returns it at rank 1 with l2 == 0.0 exactly
-    (raw vectors, not quantized, decide the final order)."""
-    from etl_transparencia_sergipe_spark.operators.similarity import (
-        ivfpq_residual_refine_topk,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding")
-    clone_id = 10_000_019
-    clone = emb.filter("vec_id = 0").selectExpr(
-        f"CAST({clone_id} AS BIGINT) AS vec_id", "embedding")
-    planted = emb.unionByName(clone)
-    rows = {(r.query_id, r.rank): r
-            for r in ivfpq_residual_refine_topk(planted, k=5).collect()}
+    consts = train_quantizers(
+        _train_sample(planted, "vec_id", "embedding", 65536),
+        n_cells=n_cells, m=8, ksub=16, residual=residual)
+    settings = dict(nprobe=nprobe, residual=residual, **consts)
+    rows = {(row.query_id, row.rank): row
+            for row in ivf_adc_search(planted, k=5, r=r,
+                                      **settings).collect()}
     hit = rows[(0, 1)]
     assert hit.neighbor_id == clone_id
-    assert hit.l2 == 0.0
+    if r is not None:
+        assert hit.l2 == 0.0
+    elif n_cells:
+        # rank filter keeps all candidates
+        ann_all = ivf_adc_search(emb, k=10**9, **settings)
+        n = emb.count()
+        counts = {row.query_id: row.n for row in
+                  ann_all.groupBy("query_id").count()
+                  .selectExpr("query_id", "count AS n").collect()}
+        assert counts and all(c < n - 1 for c in counts.values()), counts
 
 
 def test_residual_encoding_reconstructs_better_than_raw(spark, sf_dir):
@@ -332,12 +308,10 @@ def test_residual_encoding_reconstructs_better_than_raw(spark, sf_dir):
 
     from etl_transparencia_sergipe_spark.operators.similarity import (
         _train_sample,
-        ivfpq_residual_train,
-        lloyd_float,
+        train_quantizers,
     )
 
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding")
+    emb = _embeddings(spark, sf_dir)
     X = _train_sample(emb, "vec_id", "embedding", 65536)
     m, ksub = 8, 16
     dim = X.shape[1]
@@ -351,13 +325,12 @@ def test_residual_encoding_reconstructs_better_than_raw(spark, sf_dir):
             out[:, mm * dsub:(mm + 1) * dsub] = books[mm][d2.argmin(1)]
         return out
 
-    cmat, res_books = ivfpq_residual_train(X, n_cells=16, m=m, ksub=ksub)
+    q = train_quantizers(X, n_cells=16, m=m, ksub=ksub, residual=True)
+    cmat, res_books = q["cmat"], q["books"]
     d2c = ((X[:, None, :] - cmat[None, :, :]) ** 2).sum(-1)
     C = cmat[d2c.argmin(1)]
     res_err = ((X - (C + encode_decode(X - C, res_books))) ** 2).sum(1)
 
-    raw_books = np.stack([
-        lloyd_float(X[:, mm * dsub:(mm + 1) * dsub], n_cells=ksub,
-                    seed=42) for mm in range(m)])
+    raw_books = train_quantizers(X, m=m, ksub=ksub)["books"]
     raw_err = ((X - encode_decode(X, raw_books)) ** 2).sum(1)
     assert res_err.mean() < raw_err.mean()

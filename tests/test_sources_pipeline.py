@@ -231,9 +231,11 @@ def test_merge_materialized_idempotent_and_partition_scoped(spark, sf_dir):
     # plant a bogus partition, re-run, and confirm it is gone
     import os
 
-    out = os.path.abspath(os.path.join(
-        os.path.dirname(__file__), "..", ".scratch",
-        f"merge_{sf_dir.strip('/').replace('/', '_')}"))
+    from etl_transparencia_sergipe_spark.operators.quantizer_store import (
+        state_dir,
+    )
+
+    out = str(state_dir(f"merge_{sf_dir.strip('/').replace('/', '_')}"))
     spark.range(1).selectExpr(
         "CAST(99 AS INT) AS mes", "id AS o_orderkey", "id AS o_custkey",
         "'X' AS o_orderstatus",

@@ -11,8 +11,9 @@ Round-6 additions: the PQ tier (q98/q99/q101/q102/q103) is measured
 from its own ``hit`` self-report column (exact-L2 ground truth), and
 ``--curve`` records the pruning-vs-recall curve for the residual
 IVFADC index: per nprobe, ADC-only recall@5 and refined recall@5
-(shortlist r=50 + exact re-rank). The curve is the evidence behind
-q103's nprobe=6 spec and the BASELINE.md ANN recall section.
+(shortlist r=100 + exact re-rank), both through ``ivf_adc_search``.
+The curve is the evidence behind q103's nprobe=6 spec and the
+BASELINE.md ANN recall section.
 
 Usage: python tools/ann_recall.py [sf_dir] [--curve]
 """
@@ -47,10 +48,9 @@ def curve(spark, sf_dir: str) -> None:
     exact-L2 top-k."""
     from etl_transparencia_sergipe_spark.operators.similarity import (
         _train_sample,
-        ivfpq_residual_refine_topk,
-        ivfpq_residual_topk,
-        ivfpq_residual_train,
+        ivf_adc_search,
         l2_topk,
+        train_quantizers,
     )
     from etl_transparencia_sergipe_spark.plans._helpers import load
 
@@ -62,7 +62,7 @@ def curve(spark, sf_dir: str) -> None:
     emb = (load(spark, "embeddings", sf_dir)
            .select("vec_id", "embedding").cache())
     X = _train_sample(emb, "vec_id", "embedding", 65536)
-    consts = ivfpq_residual_train(X, n_cells=16, m=8, ksub=16, seed=42)
+    consts = train_quantizers(X, n_cells=16, m=8, ksub=16, residual=True)
     exact = topk_sets(l2_topk(emb, k=5).collect())
 
     def recall(df) -> float:
@@ -75,12 +75,10 @@ def curve(spark, sf_dir: str) -> None:
           f"(n_cells=16 m=8 ksub=16 r={r}, trained once)")
     print("nprobe  frac_codes_read  adc_recall@5  refined_recall@5")
     for nprobe in (1, 2, 4, 6, 8, 16):
-        adc = recall(ivfpq_residual_topk(
-            emb, k=5, n_cells=16, nprobe=nprobe, m=8, ksub=16,
-            constants=consts))
-        ref = recall(ivfpq_residual_refine_topk(
-            emb, k=5, r=r, n_cells=16, nprobe=nprobe, m=8, ksub=16,
-            constants=consts))
+        adc = recall(ivf_adc_search(emb, k=5, nprobe=nprobe,
+                                    residual=True, **consts))
+        ref = recall(ivf_adc_search(emb, k=5, nprobe=nprobe,
+                                    residual=True, r=r, **consts))
         print(f"{nprobe:>6}  {nprobe / 16:>15.3f}  {adc:>12.3f}  "
               f"{ref:>16.3f}")
 

@@ -4,7 +4,8 @@ The q38/q39/q97/q107 oracles all need converged connected-component
 labels over the documents near-dup graph — a pure function of (corpus
 parquet, pairs SQL) that costs ~127 s at sf1 and blows the local gate's
 900 s per-query watchdog at sf10. plans/cc_oracle.cc_labels_duck
-persists the converged labels under .scratch/cc_oracle_cache keyed by
+persists the converged labels under the artifacts state dir
+(quantizer_store.state_dir("cc_oracle_cache")) keyed by
 corpus file identity + pairs SQL; this tool pays that build ONCE,
 outside any watchdog, so every later gate run probes prebuilt oracle
 state (round-9 VERDICT item 3). Everything here is DuckDB-computed —
