@@ -11,18 +11,24 @@ with new batches ASSIGN-ONLY encoded against the stored constants —
 plus a drift self-report that tells the operator when that stops being
 a good idea.
 
-Index layout (plain parquet, no pickles — the quantizer_store format):
+Index layout: an epoch store (operators/epoch_store.py) of encoded
+rows [vec_id, c0..c{m-1}] with ``cell`` as the inner hive partition,
+plus the quantizer (plain parquet, no pickles — the quantizer_store
+format) inside the zone it encodes:
 
-    <path>/_quantizer.parquet    cmat (n_cells, dim), books (m, ksub,
-                                 dsub), baseline_resid (1, 1): the
-                                 training sample's mean squared
-                                 coarse-residual norm
-    <path>/cell=N/part-*.parquet encoded rows [vec_id, c0..c{m-1}]
+    <path>/_compacted/_quantizer.parquet   cmat (n_cells, dim), books
+                                           (m, ksub, dsub),
+                                           baseline_resid (1, 1): the
+                                           training sample's mean
+                                           squared coarse-residual norm
+    <path>/_compacted/cell=N/part-*.parquet       built / folded codes
+    <path>/ingest_batch=E/cell=N/part-*.parquet   appended epochs
 
-``cell`` is a hive partition: a search probing ``nprobe`` of
-``n_cells`` cells prunes the scan to those directories — the ADC pass
-reads nprobe/n_cells of the codes, which is the IVF contract realized
-at the storage layer (no filter evaluation at all, just listing).
+Build, rebuild and compaction are each one epoch_store swap, so the
+quantizer and its codes become visible together. A search probing
+``nprobe`` of ``n_cells`` cells prunes both scans to those cell
+directories — the ADC pass reads nprobe/n_cells of the codes, which is
+the IVF contract realized at the storage layer.
 
 Drift self-report: appends return mean ||x - c(x)||^2 of the new batch
 vs the training baseline. A ratio near 1 means the stored centroids
@@ -44,7 +50,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_transparencia_sergipe_spark.operators import quantizer_store
+from etl_transparencia_sergipe_spark.operators import (
+    epoch_store,
+    quantizer_store,
+)
 from etl_transparencia_sergipe_spark.operators.similarity import (
     _query_matrix,
     _rank_topk,
@@ -58,15 +67,26 @@ from etl_transparencia_sergipe_spark.operators.similarity import (
 )
 
 
-def _quantizer_path(path: str) -> str:
-    return path.rstrip("/") + "/_quantizer.parquet"
+_QUANTIZER = "_quantizer.parquet"
+
+
+def _save_quantizer(zone: str, cmat, books, baseline: float) -> None:
+    import numpy as np
+    from pathlib import Path
+
+    quantizer_store._save(Path(zone) / _QUANTIZER,
+                          {"cmat": cmat, "books": books,
+                           "baseline_resid": np.array([[baseline]])})
 
 
 def _load_quantizer(path: str):
     import numpy as np
     from pathlib import Path
 
-    arrays = quantizer_store._load(Path(_quantizer_path(path)))
+    zone = epoch_store.zone_path(SparkSession.active(), path)
+    if zone is None:
+        raise FileNotFoundError(f"no built ANN index at {path}")
+    arrays = quantizer_store._load(Path(zone) / _QUANTIZER)
     return (np.asarray(arrays["cmat"]), np.asarray(arrays["books"]),
             float(arrays["baseline_resid"][0][0]))
 
@@ -81,20 +101,36 @@ def _encode(df: DataFrame, cmat, books, id_col: str,
             .withColumnRenamed("cell_dist", "resid_sq"))
 
 
+def _swap(spark: SparkSession, path: str, cmat, books, baseline: float,
+          upto_epoch: int | None = None,
+          replace: DataFrame | None = None) -> None:
+    """The index's one epoch_store swap: one file per cell, the
+    quantizer written into the new zone."""
+    epoch_store.compact(
+        spark, path, upto_epoch, sort_by=["cell"], partition_by=["cell"],
+        n_files=int(cmat.shape[0]), replace=replace,
+        before_swap=lambda zone: _save_quantizer(zone, cmat, books,
+                                                 baseline))
+
+
 def build_ivfpq_index(corpus: DataFrame, path: str, n_cells: int = 16,
                       m: int = 8, ksub: int = 16, seed: int = 42,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding",
-                      constants=None, base_epoch: int | None = None) -> dict:
-    """Train (or adopt ``constants``) and encode the corpus into a fresh
-    index at ``path``. Returns the drift baseline record.
+                      constants=None) -> dict:
+    """Train (or adopt ``constants``) and encode the corpus into the
+    index at ``path``, replacing whatever it held — live epochs
+    included. Returns the drift baseline record.
 
-    ``base_epoch`` selects the epoch-partitioned layout
-    (``ingest_batch=<base_epoch>/cell=N``) used by the streaming ingest
-    sink (streaming/ann_stream.py), whose replays need partition-scoped
-    overwrite; the default flat ``cell=N`` layout is unchanged (q106).
-    Search reads either tree identically — it prunes on ``cell``
-    wherever partition discovery finds it."""
+    This is also the REBUILD that answers the drift signal (round-7
+    VERDICT item 4: appends self-report drift > 2 as "retrain
+    warranted"): retrain on the CURRENT corpus sample, re-encode every
+    vector, one swap. Same corpus + same seed => bit-identical
+    quantizer and codes (kmeans init is seeded, the training sample is
+    hash-ordered), so an in-distribution rebuild leaves search results
+    unchanged (tests/test_ann_rebuild.py pins that). Run it between
+    stream runs: a checkpoint that replays an already-re-encoded epoch
+    would duplicate its rows."""
     import numpy as np
 
     X = _train_sample(corpus, id_col, vec_col, 65536)
@@ -108,251 +144,68 @@ def build_ivfpq_index(corpus: DataFrame, path: str, n_cells: int = 16,
     # sample under these centroids (same sequential math as encode)
     dist, cell, _ = encode_vectors(X, cmat, residual=True)
     baseline = float(dist[np.arange(len(X)), cell].mean())
-
-    from pathlib import Path
-
-    # encoded rows first — the overwrite clears the directory; the
-    # quantizer artifact lands after, and its absence marks a
-    # half-built index (loads fail loudly instead of serving stale)
     enc = _encode(corpus, cmat, books, id_col, vec_col).drop("resid_sq")
-    if base_epoch is None:
-        enc.write.mode("overwrite").partitionBy("cell").parquet(path)
-    else:
-        (enc.withColumn("ingest_batch", F.lit(int(base_epoch)))
-         .write.mode("overwrite")
-         .partitionBy("ingest_batch", "cell").parquet(path))
-    quantizer_store._save(
-        Path(_quantizer_path(path)),
-        {"cmat": cmat, "books": books,
-         "baseline_resid": np.array([[baseline]])})
-    return {"baseline_resid_sq": baseline, "n_cells": int(n_cells)}
+    _swap(corpus.sparkSession, path, cmat, books, baseline, replace=enc)
+    return {"baseline_resid_sq": baseline, "n_cells": int(cmat.shape[0])}
 
 
-def _index_layout(spark: SparkSession, path: str) -> str:
-    """'epoch' if the index tree is epoch-partitioned
-    (``ingest_batch=*/cell=*``, the streaming-sink layout), else 'flat'
-    (``cell=*``, the q106 batch layout)."""
-    from etl_transparencia_sergipe_spark.operators.sigstore import _fs
-
-    fs, hpath, jvm = _fs(spark, path.rstrip("/"))
-    for status in fs.listStatus(hpath):
-        if status.getPath().getName().startswith("ingest_batch="):
-            return "epoch"
-    return "flat"
-
-
-def append_ivfpq_index(batch: DataFrame, path: str,
+def append_ivfpq_index(batch: DataFrame, path: str, epoch: int,
                        id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       epoch: int | None = None) -> dict:
+                       vec_col: str = "embedding") -> dict:
     """Assign-only append: encode ``batch`` against the STORED quantizer
-    (no retrain, no re-encode of existing rows) and append into the
-    cell partitions. Returns the drift self-report:
-    {batch_resid_sq, baseline_resid_sq, drift_ratio} — ratio >> 1 says
-    the incoming distribution has left the trained centroids and a
-    rebuild is warranted.
-
-    Layout guard (round-7 ADVICE): an index built with
-    ``base_epoch=...`` is epoch-partitioned (``ingest_batch=N/cell=M``);
-    appending the flat ``cell=M`` layout under the same root would mix
-    partition depths and every later ``spark.read.parquet(path)`` fails
-    with "conflicting directory structures" — corrupting the index. The
-    layout is detected from the existing tree: an epoch-partitioned
-    index REQUIRES ``epoch`` (the batch lands in its own
-    ``ingest_batch=<epoch>`` partition); a flat index REJECTS it.
-    """
+    (no retrain, no re-encode of existing rows) as live epoch ``epoch``
+    — a replay overwrites its own partitions (cell assignment is
+    deterministic under the stored quantizer). Returns the drift
+    self-report: {n_rows, batch_resid_sq, baseline_resid_sq,
+    drift_ratio} — ratio >> 1 says the incoming distribution has left
+    the trained centroids and a rebuild is warranted. An empty batch
+    writes nothing and reports n_rows 0."""
     from etl_transparencia_sergipe_spark.caching import persist_scoped
-
-    layout = _index_layout(batch.sparkSession, path)
-    if layout == "epoch" and epoch is None:
-        raise ValueError(
-            f"index at {path} is epoch-partitioned (ingest_batch=*); "
-            "pass epoch=<n> so the append lands in its own partition "
-            "(a flat cell=* append would corrupt the tree)")
-    if layout == "flat" and epoch is not None:
-        raise ValueError(
-            f"index at {path} is flat (cell=*); epoch={epoch} would mix "
-            "partition depths — omit epoch for flat indexes")
 
     cmat, books, baseline = _load_quantizer(path)
     enc = _encode(batch, cmat, books, id_col, vec_col) \
         .transform(persist_scoped)
     try:
-        batch_resid = enc.agg(F.avg("resid_sq")).collect()[0][0]
-        out = enc.drop("resid_sq")
-        if epoch is None:
-            out.write.mode("append").partitionBy("cell").parquet(path)
-        else:
-            (out.withColumn("ingest_batch", F.lit(int(epoch)))
-             .write.mode("append")
-             .partitionBy("ingest_batch", "cell").parquet(path))
+        # one job for the whole drift aggregate (count + mean fused);
+        # the persisted encode then feeds the write
+        stats = enc.agg(F.count("*").alias("n"),
+                        F.avg("resid_sq").alias("r")).collect()[0]
+        if stats["n"]:
+            epoch_store.write(enc.drop("resid_sq"), path, epoch,
+                              partition_by=["cell"])
     finally:
         enc.unpersist()
+    batch_resid = float(stats["r"] or 0.0)
     return {
-        "batch_resid_sq": float(batch_resid),
+        "n_rows": int(stats["n"]),
+        "batch_resid_sq": batch_resid,
         "baseline_resid_sq": baseline,
-        "drift_ratio": float(batch_resid) / baseline,
+        "drift_ratio": batch_resid / baseline,
     }
 
 
 def compact_ann_index(spark: SparkSession, path: str,
                       upto_epoch: int | None = None) -> dict:
-    """Fold ingest epochs of an epoch-partitioned index into the
-    base epoch — the LSM compaction posture (operators/sigstore.py
-    compact_banded_store) applied to the vector index.
+    """Fold live epochs below ``upto_epoch`` (None: all) into the zone
+    with ONE file per cell — the LSM compaction posture applied to the
+    vector index. Streaming appends write <= n_cells small files per
+    epoch; after many epochs the cell scan pays per-file open cost.
+    Codes are immutable — this moves rows, it never re-encodes — so
+    search results are bit-identical across folds. Pass the stream's
+    last COMMITTED epoch so anything it can replay stays live (replay
+    and crash contract: epoch_store).
 
-    Streaming appends write ≤ n_cells small files per epoch; after many
-    epochs the cell scan pays per-file open cost. Compaction rewrites
-    the codes into ``ingest_batch=-1/cell=N`` with ONE file per cell,
-    preserving search results bit-identically (codes are immutable —
-    this moves rows, it never re-encodes).
+    Returns {"n_rows", "n_files_before", "n_files_after"}."""
+    import pathlib
 
-    ``upto_epoch`` (round-7 ADVICE, mirrors compact_banded_store): fold
-    only epochs STRICTLY BELOW it; epochs >= upto_epoch stay live as
-    their own partitions. This is the safe mode to run alongside a
-    streaming sink whose checkpoint may replay its most recent epoch:
-    a replayed epoch that was already folded into ingest_batch=-1
-    would be re-written by the sink's dynamic overwrite and every row
-    of that epoch duplicated — and search_ivfpq_index has no distinct,
-    so duplicate neighbors consume shortlist/top-k slots silently.
-    Pass the stream's last COMMITTED epoch (readable from the
-    checkpoint's offsets directory) so anything it can replay is never
-    folded. The still-live epochs are carried into the new tree by a
-    read+rewrite (they are recent micro-batches, so small), keeping the
-    all-or-nothing root swap below intact. Default (None) folds
-    everything — correct only between stream runs with a clean
-    checkpoint (the original contract).
+    def _count_files():
+        return sum(1 for p in pathlib.Path(path).rglob("part-*.parquet"))
 
-    Concurrency contract: run between stream runs (availableNow batch
-    cycles), never while a sink is writing. Crash
-    safety favors LOUD over wrong: the new tree is fully written to
-    ``<path>_compact_tmp`` (quantizer artifact included) before a
-    root-level two-step rename swap, so a crash leaves either the old
-    tree,
-    or a missing root with the old tree at ``<path>_compact_old`` —
-    searches fail loudly instead of seeing duplicates, and the next
-    compact_ann_index call repairs the swap before proceeding. A
-    transactional manifest (Iceberg/Delta) is the production upgrade;
-    plain parquet + rename keeps the engine dependency-free.
-
-    Returns {"n_rows", "n_files_before", "n_files_after"}.
-    """
-    from pathlib import Path
-
-    from etl_transparencia_sergipe_spark.operators.sigstore import _fs
-
-    root = path.rstrip("/")
-    fs, hpath, jvm = _fs(spark, root)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    old = HPath(root + "_compact_old")
-    # crash repair: a previous compaction died between the two renames
-    if not fs.exists(hpath) and fs.exists(old):
-        fs.rename(old, hpath)
-
-    def _count_files(p):
-        it, n = fs.listFiles(HPath(p), True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    n_before = _count_files(root)
-    cmat, books, baseline = _load_quantizer(root)
-    m = books.shape[0]
-    codes = spark.read.parquet(root)
-    fold = codes if upto_epoch is None else codes.filter(
-        F.col("ingest_batch") < int(upto_epoch))
-    tmp = root + "_compact_tmp"
-    fs.delete(HPath(tmp), True)
-    # one task per cell -> one file per cell dir
-    (fold.selectExpr("vec_id", *[f"c{mm}" for mm in range(m)], "cell")
-     .repartition(int(cmat.shape[0]), "cell")
-     .withColumn("ingest_batch", F.lit(-1))
-     .write.partitionBy("ingest_batch", "cell").parquet(tmp))
-    if upto_epoch is not None:
-        # carry the still-live epochs (>= upto_epoch, replay-reachable)
-        # into the new tree unchanged — rewritten rather than moved so
-        # the root swap stays all-or-nothing (partition pruning makes
-        # this a scan of only those epoch directories)
-        live = codes.filter(F.col("ingest_batch") >= int(upto_epoch))
-        (live.selectExpr("vec_id", *[f"c{mm}" for mm in range(m)],
-                         "ingest_batch", "cell")
-         .write.mode("append")
-         .partitionBy("ingest_batch", "cell").parquet(tmp))
-    import numpy as np
-
-    quantizer_store._save(
-        Path(tmp) / "_quantizer.parquet",
-        {"cmat": cmat, "books": books,
-         "baseline_resid": np.array([[baseline]])})
-    n_rows = spark.read.parquet(tmp).count()
-
-    if fs.exists(old):
-        fs.delete(old, True)
-    fs.rename(hpath, old)
-    fs.rename(HPath(tmp), hpath)
-    fs.delete(old, True)
-    return {"n_rows": int(n_rows), "n_files_before": int(n_before),
-            "n_files_after": int(_count_files(root))}
-
-
-def rebuild_ann_index(corpus: DataFrame, path: str, n_cells: int = 16,
-                      m: int = 8, ksub: int = 16, seed: int = 42,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> dict:
-    """Act on the drift signal: retrain the quantizer on the CURRENT
-    corpus sample, re-encode every vector, and atomically swap the new
-    tree in (round-7 VERDICT item 4 — append_ivfpq_index self-reports
-    drift > 2 as "retrain warranted"; this is the operation that
-    answers it).
-
-    The swap reuses compact_ann_index's two-rename protocol AND its
-    marker names (``_compact_tmp`` / ``_compact_old``), so a crash mid-
-    rebuild is repaired by the same logic: either the old tree is still
-    at the root, or the root is missing and the old tree sits at
-    ``_compact_old`` (compact_ann_index and the next rebuild both
-    repair that before proceeding). Searches never see a half-rebuilt
-    index.
-
-    Layout is preserved: an epoch-partitioned index rebuilds into the
-    folded base epoch (``ingest_batch=-1``) — a rebuild re-encodes
-    everything, so per-epoch provenance of old batches is spent. Same
-    concurrency contract as compaction: run between stream runs; a
-    checkpoint that replays an already-re-encoded epoch would duplicate
-    its rows.
-
-    Determinism: same corpus + same seed => bit-identical quantizer and
-    codes (kmeans init is seeded, the training sample is hash-ordered),
-    so an in-distribution rebuild leaves search results unchanged
-    (tests/test_ann_index.py pins that).
-
-    Returns {"baseline_resid_sq", "n_cells", "layout"}.
-    """
-    from pathlib import Path as _P  # noqa: F401 (parity with build)
-
-    from etl_transparencia_sergipe_spark.operators.sigstore import _fs
-
-    spark = corpus.sparkSession
-    root = path.rstrip("/")
-    fs, hpath, jvm = _fs(spark, root)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    old = HPath(root + "_compact_old")
-    # crash repair: a previous compaction/rebuild died mid-swap
-    if not fs.exists(hpath) and fs.exists(old):
-        fs.rename(old, hpath)
-    layout = _index_layout(spark, root)
-    tmp = root + "_compact_tmp"
-    fs.delete(HPath(tmp), True)
-    report = build_ivfpq_index(
-        corpus, tmp, n_cells=n_cells, m=m, ksub=ksub, seed=seed,
-        id_col=id_col, vec_col=vec_col,
-        base_epoch=-1 if layout == "epoch" else None)
-    if fs.exists(old):
-        fs.delete(old, True)
-    fs.rename(hpath, old)
-    fs.rename(HPath(tmp), hpath)
-    fs.delete(old, True)
-    return {**report, "layout": layout}
+    n_before = _count_files()
+    cmat, books, baseline = _load_quantizer(path)
+    _swap(spark, path, cmat, books, baseline, upto_epoch)
+    return {"n_rows": int(epoch_store.read(spark, path).count()),
+            "n_files_before": n_before, "n_files_after": _count_files()}
 
 
 def maybe_rebuild_ann_index(spark: SparkSession, index_path: str,
@@ -369,7 +222,7 @@ def maybe_rebuild_ann_index(spark: SparkSession, index_path: str,
     ratio = float(last[0]["drift_ratio"]) if last else 0.0
     if not last or ratio <= threshold:
         return {"rebuilt": False, "drift_ratio": ratio}
-    report = rebuild_ann_index(corpus, index_path, **rebuild_kw)
+    report = build_ivfpq_index(corpus, index_path, **rebuild_kw)
     return {"rebuilt": True, "drift_ratio": ratio, **report}
 
 
@@ -397,7 +250,7 @@ def search_ivfpq_index(corpus: DataFrame, path: str, k: int = 5,
         lut_rows, "query_id bigint, cell bigint, l array<double>")
     probed = sorted({int(c) for _, c, _ in lut_rows})
 
-    codes = (corpus.sparkSession.read.parquet(path)
+    codes = (epoch_store.read(corpus.sparkSession, path)
              .filter(F.col("cell").isin(probed))
              .selectExpr("vec_id AS neighbor_id", "cell",
                          *[f"c{mm}" for mm in range(m)]))

@@ -13,13 +13,16 @@ against one doc per CLUSTER it collides with, never per member, so
 batch-verify cost is ~linear in batch size regardless of how dense the
 historical duplicate structure is.
 
-State (built once per corpus era, the q81 storage posture):
+State (built once per corpus era, the q81 storage posture), three
+epoch stores (operators/epoch_store.py) that a stream keeps growing:
 
-    <path>/labels/   parquet [node, canonical_id]  — every old doc's
-                     cluster label (singletons label themselves)
+    <path>/labels/   [node, canonical_id]  — every doc's cluster label
+                     (singletons label themselves)
     <path>/sigs/     banded MinHash signature store
                      (operators/sigstore.py layout) of CANONICAL docs
                      ONLY — the band join's old side
+    <path>/texts/    [doc_id, text] of canonical docs — the exact verify
+                     reads candidates from here, never the corpus
 
 Probe: band-join the new batch against the canonical store
 (probe_signature_store — O(batch) broadcast, store side pruned), then
@@ -52,12 +55,20 @@ from etl_transparencia_sergipe_spark.operators.components import (
 from etl_transparencia_sergipe_spark.operators.dedup import (
     jaccard_verify_pairs,
     minhash_lsh_pairs,
+    minhash_signatures,
 )
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.sigstore import (
+    append_banded_store,
+    banded_signatures,
     build_signature_store,
+    compact_banded_store,
     probe_signature_store,
-    read_banded_store,
 )
+
+# sort key of each plain state table's zone: the sink's candidate-id In
+# filter prunes row groups on it (sigs cluster on band_hash, sigstore's)
+_KEYS = {"labels": "node", "texts": "doc_id"}
 
 
 def _labels_path(path: str) -> str:
@@ -74,8 +85,7 @@ def _texts_path(path: str) -> str:
 
 def build_canonical_state(docs_old: DataFrame, id_col: str, text_col: str,
                           path: str, k: int = 16, bands: int = 4,
-                          n: int = 3, threshold: float = 0.4,
-                          base_epoch: int | None = None) -> dict:
+                          n: int = 3, threshold: float = 0.4) -> dict:
     """Cluster the OLD corpus once and persist the contraction state.
 
     1. near-dup pairs (banded MinHash LSH + exact verify — the q31
@@ -83,36 +93,14 @@ def build_canonical_state(docs_old: DataFrame, id_col: str, text_col: str,
     2. connected components -> labels [node, canonical_id] where the
        canonical IS the component label (min member id); docs in no
        pair label themselves;
-    3. the banded signature store of canonical docs only.
+    3. the banded signature store and the texts of canonical docs only.
 
     The full text scan happens HERE, once; every later batch probe
     reads the canonical band index + the candidate canonicals' text.
+    Each table is written as its store's zone (a full replacement), so
+    a stream's epoch 0 probes it and absorbs beside it.
     Returns {"n_docs", "n_canonicals"}.
-
-    ``base_epoch`` selects the STREAMING layout (the ann_index
-    base_epoch contract): labels, signatures, and — additionally — the
-    canonical docs' TEXT are written under
-    ``ingest_batch=<base_epoch>`` partitions, so the ingest sink
-    (streaming/canonical_stream.py) can (a) probe/relabel against
-    partitions strictly below its epoch (replay determinism) and
-    (b) dynamic-overwrite its own epoch partition on replay. The texts
-    table exists only in this layout: it makes the state self-
-    contained — the exact verify reads candidate canonicals' text from
-    the state, never rescanning the corpus.
-
-    ``base_epoch`` must be NEGATIVE (convention: -1). foreachBatch
-    epochs start at 0, and the ingest sink probes partitions with
-    ``ingest_batch < epoch`` then dynamic-overwrites its OWN epoch
-    partition — a state built at base_epoch=0 would be invisible to the
-    epoch-0 probe and then silently destroyed by epoch 0's overwrite
-    (round-8 ADVICE: silent data loss, guarded loudly here).
     """
-    if base_epoch is not None and int(base_epoch) >= 0:
-        raise ValueError(
-            f"base_epoch must be < 0 (got {base_epoch}): streaming "
-            "epochs start at 0 and the sink's dynamic overwrite of its "
-            "own ingest_batch partition would destroy a base written "
-            "at a non-negative epoch")
     spark = docs_old.sparkSession
     pairs = minhash_lsh_pairs(docs_old, id_col, text_col, k=k,
                               bands=bands, threshold=threshold, n=n)
@@ -122,85 +110,37 @@ def build_canonical_state(docs_old: DataFrame, id_col: str, text_col: str,
                .withColumn("component", F.col("node")))
     labels = (cc.unionByName(singles)
               .withColumnRenamed("component", "canonical_id"))
-    if base_epoch is None:
-        labels.write.mode("overwrite").parquet(_labels_path(path))
-    else:
-        (labels.withColumn("ingest_batch", F.lit(int(base_epoch)))
-         .write.mode("overwrite").partitionBy("ingest_batch")
-         .parquet(_labels_path(path)))
+    epoch_store.compact(spark, _labels_path(path), replace=labels,
+                        sort_by=[_KEYS["labels"]])
 
-    labels = spark.read.parquet(_labels_path(path))
+    labels = epoch_store.read(spark, _labels_path(path))
     canon_ids = (labels.select(F.col("canonical_id").alias(id_col))
                  .distinct())
     canon_docs = docs_old.join(canon_ids, id_col, "left_semi")
-    if base_epoch is None:
-        build_signature_store(canon_docs, id_col, text_col,
-                              _sigs_path(path), k=k, n=n, bands=bands)
-    else:
-        from etl_transparencia_sergipe_spark.operators.dedup import (
-            minhash_signatures,
-        )
-        from etl_transparencia_sergipe_spark.operators.sigstore import (
-            banded_signatures,
-            write_banded_store,
-        )
-
-        sig = minhash_signatures(canon_docs, id_col, text_col, k=k, n=n)
-        write_banded_store(
-            banded_signatures(sig, k, bands)
-            .withColumn("ingest_batch", F.lit(int(base_epoch))),
-            _sigs_path(path), partition_by=["ingest_batch"])
-        (canon_docs.select(F.col(id_col).alias("doc_id"),
-                           F.col(text_col).alias("text"))
-         .withColumn("ingest_batch", F.lit(int(base_epoch)))
-         .write.mode("overwrite").partitionBy("ingest_batch")
-         .parquet(_texts_path(path)))
+    build_signature_store(canon_docs, id_col, text_col, _sigs_path(path),
+                          k=k, n=n, bands=bands)
+    epoch_store.compact(
+        spark, _texts_path(path),
+        replace=canon_docs.select(F.col(id_col).alias("doc_id"),
+                                  F.col(text_col).alias("text")),
+        sort_by=[_KEYS["texts"]])
     return {"n_docs": int(labels.count()),
             "n_canonicals": int(canon_ids.count())}
 
 
-def read_state_table(spark: SparkSession, table_path: str) -> DataFrame:
-    """Zone-aware read of a canonical-state table (labels / texts):
-    union of the live ``ingest_batch=N`` partitions and the hidden
-    ``_compacted`` zone :func:`compact_canonical_state` folds them
-    into. Delegates to the sigstore reader — the two-zone layout is
-    identical; only the sort clustering differs."""
-    return read_banded_store(spark, table_path)
-
-
 def compact_canonical_state(spark: SparkSession, path: str,
                             upto_epoch: int, n_files: int = 8) -> None:
-    """LSM-compact all three canonical-state tables (round-9 VERDICT
-    item 4): fold every committed ``ingest_batch < upto_epoch``
-    partition into each table's clustered ``_compacted`` zone —
-    signatures band_hash-clustered (the probe's pushed-In zone maps),
-    labels/texts id-clustered (the sink's candidate-id In filter prunes
-    row groups the same way). Bounded file counts under continuous
-    ingestion; probes and replays are unchanged because every reader is
-    zone-aware (read_banded_store / read_state_table) and
-    ``ingest_batch`` survives as a regular column inside the zones, so
-    the ``< epoch`` replay filter still applies row-level.
-
-    Call only with ``upto_epoch`` <= the stream's last COMMITTED epoch
-    (the ingest sink passes its current epoch id at batch START, when
-    everything below it is committed) — a replay-reachable epoch must
-    stay live so the sink's dynamic partition overwrite rewrites it
-    in place. Crash safety is _fold_store's two-rename protocol per
-    table; the narrow duplicate window is absorbed by the probe's
-    pair-level distinct and by replay overwrite, same contract as the
-    signature store.
-    """
-    from etl_transparencia_sergipe_spark.operators.sigstore import (
-        _fold_store,
-        compact_banded_store,
-    )
-
+    """LSM-compact the three state tables (round-9 VERDICT item 4):
+    fold every live ``ingest_batch < upto_epoch`` epoch into each
+    table's zone — signatures band_hash-clustered (the probe's pushed-In
+    zone maps), labels/texts id-clustered (the sink's candidate-id In
+    filter prunes row groups the same way). Each table is its own epoch
+    store with its own swap (replay and crash contract: epoch_store)."""
     compact_banded_store(spark, _sigs_path(path), upto_epoch,
                          n_files=n_files)
-    _fold_store(spark, _labels_path(path), upto_epoch, ["node"],
-                n_files=n_files)
-    _fold_store(spark, _texts_path(path), upto_epoch, ["doc_id"],
-                n_files=n_files)
+    for table, key in _KEYS.items():
+        epoch_store.compact(spark, f"{path.rstrip('/')}/{table}",
+                            upto_epoch, sort_by=[key], n_files=n_files)
 
 
 def probe_canonical_state(spark: SparkSession, path: str,
@@ -222,9 +162,8 @@ def probe_canonical_state(spark: SparkSession, path: str,
     new docs and the canonical docs must be rows of it — for the
     registered query it is simply the documents table; the streaming
     sink passes the state's own texts table plus the batch).
-    ``ingest_batch_lt`` restricts an epoch-partitioned canonical store
-    to partitions strictly below the given epoch (replay determinism —
-    the probe_signature_store contract).
+    ``ingest_batch_lt`` restricts the canonical store to epochs strictly
+    below the given one (the epoch_store replay contract).
     """
     cand = (
         probe_signature_store(spark, _sigs_path(path), new_docs,
@@ -244,26 +183,23 @@ def probe_canonical_state(spark: SparkSession, path: str,
 
 def absorb_batch(spark: SparkSession, path: str, docs_all: DataFrame,
                  new_docs: DataFrame, id_col: str, text_col: str,
-                 k: int = 16, bands: int = 4, n: int = 3,
+                 epoch: int, k: int = 16, bands: int = 4, n: int = 3,
                  threshold: float = 0.4,
-                 epoch: int | None = None,
                  matches: DataFrame | None = None) -> DataFrame:
-    """Probe, then fold the batch into the state — the production loop.
+    """Probe, then fold the batch into the state as epoch ``epoch`` —
+    the production loop.
 
     Matched new docs adopt their best-match cluster's canonical (max
     jaccard, ties to the smallest canonical id — deterministic);
     unmatched new docs become their own canonicals: their labels row
-    points at themselves and their signatures (and, in the streaming
-    layout, their text) enter the canonical store so later batches can
-    match them. Matched docs' signatures are NOT appended — that is
-    the contraction invariant (one signature set per cluster, forever).
+    points at themselves and their signatures and text enter the
+    canonical store so later batches can match them. Matched docs'
+    signatures are NOT appended — that is the contraction invariant
+    (one signature set per cluster, forever).
 
-    ``epoch`` (streaming layout, build_canonical_state(base_epoch=...)):
-    the probe reads only state partitions < epoch, and every write is a
-    DYNAMIC OVERWRITE of the batch's own ``ingest_batch=<epoch>``
-    partition — a replayed epoch converges bit-identically instead of
-    appending duplicates (the sigstore_stream contract). Without it the
-    writes are plain appends (the single-driver batch loop).
+    The probe reads only state epochs below ``epoch`` and every write
+    replaces the epoch's own partition (epoch_store replay contract), so
+    a replayed epoch converges bit-identically.
 
     ``matches``: a caller that already probed (the streaming sink
     persists one probe and shares it between the matches table and the
@@ -272,19 +208,11 @@ def absorb_batch(spark: SparkSession, path: str, docs_all: DataFrame,
 
     Returns the batch's new labels [node, canonical_id].
     """
-    from etl_transparencia_sergipe_spark.operators.dedup import (
-        minhash_signatures,
-    )
-    from etl_transparencia_sergipe_spark.operators.sigstore import (
-        banded_signatures,
-        write_banded_store,
-    )
-
     if matches is None:
         matches = probe_canonical_state(
             spark, path, docs_all, new_docs, id_col, text_col, k=k,
             bands=bands, n=n, threshold=threshold,
-            ingest_batch_lt=None if epoch is None else int(epoch))
+            ingest_batch_lt=int(epoch))
     best = (matches
             .withColumn("_r", F.row_number().over(
                 W.partitionBy("new_id")
@@ -298,27 +226,14 @@ def absorb_batch(spark: SparkSession, path: str, docs_all: DataFrame,
     fresh_canon = new_docs.join(
         unmatched.selectExpr(f"node AS {id_col}"), id_col, "left_semi")
     sig = minhash_signatures(fresh_canon, id_col, text_col, k=k, n=n)
-    banded = banded_signatures(sig, k, bands)
 
-    if epoch is None:
-        new_labels.write.mode("append").parquet(_labels_path(path))
-        write_banded_store(banded, _sigs_path(path), mode="append",
-                           n_files=1)
-    else:
-        (new_labels.withColumn("ingest_batch", F.lit(int(epoch)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("ingest_batch").parquet(_labels_path(path)))
-        write_banded_store(
-            banded.withColumn("ingest_batch", F.lit(int(epoch))),
-            _sigs_path(path), partition_by=["ingest_batch"], n_files=1)
-        (fresh_canon.select(F.col(id_col).alias("doc_id"),
-                            F.col(text_col).alias("text"))
-         .withColumn("ingest_batch", F.lit(int(epoch)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("ingest_batch").parquet(_texts_path(path)))
-    return (read_state_table(spark, _labels_path(path))
+    epoch_store.write(new_labels, _labels_path(path), epoch)
+    append_banded_store(banded_signatures(sig, k, bands), _sigs_path(path),
+                        epoch)
+    epoch_store.write(fresh_canon.select(F.col(id_col).alias("doc_id"),
+                                         F.col(text_col).alias("text")),
+                      _texts_path(path), epoch)
+    return (epoch_store.read(spark, _labels_path(path))
             .select("node", "canonical_id")
             .join(new_docs.selectExpr(f"{id_col} AS node"), "node",
                   "left_semi"))

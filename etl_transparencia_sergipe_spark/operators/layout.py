@@ -31,9 +31,11 @@ from pyspark.sql import DataFrame, functions as F
 def sorted_write(df: DataFrame, path: str, sort_cols: list[str],
                  n_files: int = 8,
                  rows_per_group: int | None = None,
-                 options: dict | None = None) -> None:
+                 options: dict | None = None,
+                 partition_by: list[str] | None = None) -> None:
     """Write ``df`` range-clustered on ``sort_cols`` into ``n_files``
-    parquet files with tight per-row-group min/max stats."""
+    parquet files with tight per-row-group min/max stats (hive
+    partitioned by ``partition_by`` when given)."""
     w = (df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
          .sortWithinPartitions(*sort_cols)
          .write.mode("overwrite"))
@@ -42,6 +44,8 @@ def sorted_write(df: DataFrame, path: str, sort_cols: list[str],
                      str(max(64 * 1024, rows_per_group * 64)))
     for k, v in (options or {}).items():
         w = w.option(k, v)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
     w.parquet(path)
 
 

@@ -581,6 +581,7 @@ _Q81_AGREE = " + ".join(
 def q81_sigstore_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from etl_transparencia_sergipe_spark.operators import epoch_store
     from etl_transparencia_sergipe_spark.operators.sigstore import (
         STORE_FORMAT,
         build_signature_store,
@@ -595,7 +596,7 @@ def q81_sigstore_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = (f"v{STORE_FORMAT}_" + sf_dir.strip("/").replace("/", "_")
            + f"_{st.st_size}_{int(st.st_mtime)}")
     store = str(state_dir(f"sigstore_{tag}"))
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
+    if not epoch_store.ready(spark, store):
         # one-time full scan of the historical corpus (in production:
         # per-batch at ingest time); every later run is probe-only
         build_signature_store(docs.filter(~is_new), "doc_id", "text",
@@ -748,6 +749,7 @@ def _q107_oracle_py(con):
 def q107_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from etl_transparencia_sergipe_spark.operators import epoch_store
     from etl_transparencia_sergipe_spark.operators.canonical import (
         build_canonical_state,
         probe_canonical_state,
@@ -764,8 +766,8 @@ def q107_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = (f"v{STORE_FORMAT}_" + sf_dir.strip("/").replace("/", "_")
            + f"_{st.st_size}_{int(st.st_mtime)}")
     store = str(state_dir(f"canonstore_{tag}"))
-    if not (os.path.exists(os.path.join(store, "labels", "_SUCCESS"))
-            and os.path.exists(os.path.join(store, "sigs", "_SUCCESS"))):
+    if not all(epoch_store.ready(spark, os.path.join(store, t))
+               for t in ("labels", "sigs", "texts")):
         # one-time cluster + canonical-store build over the historical
         # corpus (in production: maintained incrementally by
         # absorb_batch); every later run is probe-only

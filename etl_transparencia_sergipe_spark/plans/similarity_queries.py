@@ -745,7 +745,7 @@ def _served_incremental_index(spark: SparkSession, sf_dir: str):
     s = _Q106_SPEC
     src = f"{sf_dir}/embeddings.parquet"
     key = hashlib.sha256(json.dumps(
-        [quantizer_store.STORE_VERSION, "ann_index_v1",
+        [quantizer_store.STORE_VERSION, "ann_index_v2",
          quantizer_store._fingerprint(src),
          {k: s[k] for k in ("n_cells", "m", "ksub", "split_mod")}],
         sort_keys=True, default=str).encode()).hexdigest()[:24]
@@ -761,7 +761,7 @@ def _served_incremental_index(spark: SparkSession, sf_dir: str):
     root.mkdir(parents=True, exist_ok=True)
     build_ivfpq_index(base, str(path), n_cells=s["n_cells"], m=s["m"],
                       ksub=s["ksub"], seed=42)
-    report = append_ivfpq_index(batch, str(path))
+    report = append_ivfpq_index(batch, str(path), epoch=0)
     tmp = path / "_meta.json.tmp"
     tmp.write_text(json.dumps(report))
     os.replace(tmp, meta)

@@ -8,21 +8,20 @@ the same way streaming/sigstore_stream.py wraps operators/sigstore.py:
 
     embeddings file stream
         -> foreachBatch:
-             1. load the stored quantizer (small parquet artifact,
-                written atomically by quantizer_store — presence means
-                committed; a missing artifact fails loudly instead of
-                training a divergent quantizer mid-stream)
-             2. assign-only encode the micro-batch (the exact q102
-                encode math, zero training)
-             3. write the codes under ingest_batch=<epoch>/cell=<N>
-                with dynamic partition overwrite — a replayed epoch
-                rewrites ITS OWN partitions instead of duplicating rows
-                (cell assignment is deterministic under the stored
-                quantizer, so a replay converges bit-identically)
-             4. append the drift self-report [batch_id, n_rows,
-                batch_resid_sq, baseline_resid_sq, drift_ratio] under
-                batch_id=<epoch>, same overwrite discipline — the
-                retrain signal is monitored continuously, not polled
+             1. assign-only encode the micro-batch against the stored
+                quantizer (the exact q102 encode math, zero training; a
+                missing quantizer fails loudly instead of training a
+                divergent one mid-stream) and write the codes as the
+                index's epoch <epoch> (append_ivfpq_index)
+             2. write the drift self-report [n_rows, batch_resid_sq,
+                baseline_resid_sq, drift_ratio] under batch_id=<epoch>
+                — the retrain signal is monitored continuously, not
+                polled
+
+Replay, compaction cadence and crash repair follow the epoch store
+contract (operators/epoch_store.py); cell assignment is deterministic
+under the stored quantizer, so a replayed epoch converges
+bit-identically.
 
 Reference parity: the reference's incremental month-skip ("already
 scraped?" check against what exists on disk —
@@ -32,130 +31,51 @@ quantizer artifact as the immutable trained state.
 
 Scale shape at 100 TB: per micro-batch the cost is O(batch) — one
 mapInPandas encode pass over the batch's vectors plus a 1-row drift
-aggregate; nothing rescans the existing index (the sigstore-v2
-O(batch)-not-O(store) rule). The index grows only by partition
-directories; the search path (ann_index.search_ivfpq_index) reads it
-with cell-partition pruning regardless of how many ingest batches the
-tree accumulated, and compaction of old epochs is the same
-rewrite-preserving operation the signature store uses.
+aggregate; nothing rescans the existing index. The search path
+(ann_index.search_ivfpq_index) reads it with cell-partition pruning
+regardless of how many epochs the store holds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.ann_index import (
-    _encode,
-    _load_quantizer,
+    append_ivfpq_index,
+    compact_ann_index,
 )
-
-
-def embeddings_stream(spark: SparkSession, emb_dir: str,
-                      max_files_per_trigger: int = 1) -> DataFrame:
-    """embeddings-shaped parquet dir as a file stream (one file per
-    micro-batch by default — each file is an ingest lot of vectors)."""
-    schema = spark.read.parquet(emb_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
-    )
+from etl_transparencia_sergipe_spark.streaming.pipeline import (
+    overwrite_batch,
+)
 
 
 def ann_ingest_sink(index_path: str, drift_path: str,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     compact_every: int | None = 32):
-    """foreachBatch sink: assign-only encode + epoch-partitioned write.
+    """foreachBatch sink: assign-only encode + epoch write + drift log.
 
-    Requires an index built with ``build_ivfpq_index(...,
-    base_epoch=...)`` (the epoch-partitioned layout) at ``index_path``;
-    the stored quantizer is the immutable trained state every epoch
-    encodes against.
-
-    ``compact_every`` (round-9 VERDICT item 4): every N epochs the sink
-    folds committed ingest epochs into the base partition
-    (ann_index.compact_ann_index) with ``upto_epoch = <current
-    epoch>`` — at batch START everything below the current epoch is
-    checkpoint-committed and can never replay, so the fold is
-    replay-safe, and the epoch being processed stays live for its own
-    dynamic overwrite. Running compaction at batch start makes a crash
-    mid-compaction self-healing: the cadence is a pure function of the
-    epoch id, so the replayed epoch re-enters the same
-    compact_ann_index call, whose first step repairs an interrupted
-    root swap. Search results are bit-identical across folds (codes
-    are moved, never re-encoded — test-pinned). None disables.
-    """
+    Requires an index built with ``build_ivfpq_index`` at
+    ``index_path``; its stored quantizer is the immutable trained state
+    every epoch encodes against. Every ``compact_every`` epochs (None
+    disables) the committed epochs are folded into the index's zone
+    first (compact_ann_index: codes move, never re-encode, so search
+    results are bit-identical across folds)."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from etl_transparencia_sergipe_spark.caching import persist_scoped
-        from etl_transparencia_sergipe_spark.operators.ann_index import (
-            compact_ann_index,
-        )
-
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        if compact_every and epoch > 0 and epoch % compact_every == 0:
+        if epoch_store.compaction_due(epoch, compact_every):
             compact_ann_index(spark, index_path, upto_epoch=epoch)
-        cmat, books, baseline = _load_quantizer(index_path)
-        enc = _encode(batch_df, cmat, books, id_col, vec_col) \
-            .transform(persist_scoped)
-        # unpersist in finally (round-7 ADVICE): if a write throws and
-        # Spark replays the epoch, a success-path-only unpersist leaks
-        # the cached partitions — cache pressure accumulating across
-        # replayed epochs of a long-running stream
-        try:
-            # one job for the whole drift aggregate (count + mean
-            # fused); the persisted encode then feeds the writes below
-            stats = enc.agg(F.count("*").alias("n"),
-                            F.avg("resid_sq").alias("r")).collect()[0]
-            n_rows = int(stats["n"])
-            if n_rows == 0:
-                return
-            batch_resid = float(stats["r"])
-            # partition-scoped overwrite: replaying epoch N rewrites
-            # only ingest_batch=N/cell=* (deterministic cell assignment
-            # under the stored quantizer -> identical partition set on
-            # every replay)
-            (enc.drop("resid_sq")
-             .withColumn("ingest_batch", F.lit(int(epoch_id)))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("ingest_batch", "cell")
-             .parquet(index_path))
-            drift = spark.createDataFrame(
-                [(int(epoch_id), int(n_rows), batch_resid, baseline,
-                  batch_resid / baseline)],
-                "batch_id bigint, n_rows bigint, batch_resid_sq double, "
-                "baseline_resid_sq double, drift_ratio double")
-            (drift.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(drift_path))
-        finally:
-            enc.unpersist()
+        report = append_ivfpq_index(batch_df, index_path, epoch,
+                                    id_col=id_col, vec_col=vec_col)
+        if report["n_rows"] == 0:
+            return
+        drift = spark.createDataFrame(
+            [(report["n_rows"], report["batch_resid_sq"],
+              report["baseline_resid_sq"], report["drift_ratio"])],
+            "n_rows bigint, batch_resid_sq double, "
+            "baseline_resid_sq double, drift_ratio double")
+        overwrite_batch(drift, drift_path, epoch)
 
     return write_batch
-
-
-def run_ann_ingest(spark: SparkSession, emb_dir: str, index_path: str,
-                   drift_path: str, checkpoint_dir: str,
-                   max_files_per_trigger: int = 1,
-                   id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Drive the vector-ingestion stream to completion (availableNow).
-
-    The grown index is directly servable by
-    ``ann_index.search_ivfpq_index`` afterwards — search is
-    layout-agnostic (it selects vec_id/cell/codes and prunes on the
-    cell partition wherever it sits in the directory tree)."""
-    stream = embeddings_stream(spark, emb_dir, max_files_per_trigger)
-    q = (
-        stream.writeStream
-        .foreachBatch(ann_ingest_sink(index_path, drift_path,
-                                      id_col=id_col, vec_col=vec_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

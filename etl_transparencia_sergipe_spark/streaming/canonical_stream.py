@@ -12,25 +12,20 @@ canonical contraction deletes. This sink runs the contracted loop
     documents file stream
         -> foreachBatch:
              1. probe the micro-batch against CANONICAL signatures from
-                state partitions strictly below this epoch (one
+                state epochs strictly below this one (one
                 candidate per (new doc, colliding cluster) — never per
                 member); exact-Jaccard verify reads candidate
                 canonicals' text from the state's own texts table, so
                 the historical corpus is NEVER rescanned;
-             2. write the verified matches under batch_id=<epoch>
-                (dynamic partition overwrite — replay rewrites, never
-                duplicates);
+             2. write the verified matches under batch_id=<epoch>;
              3. absorb: matched docs adopt their best cluster's label,
                 unmatched docs become new canonicals — labels,
-                signatures, and text land in the batch's own
-                ingest_batch=<epoch> partitions with the same dynamic
-                overwrite discipline.
+                signatures and text land in epoch <epoch> of the
+                state's three stores.
 
-Replay determinism: every read the epoch depends on is partition-
-filtered to < epoch (immutable by the time a replay runs), and every
-write is an overwrite of the epoch's own partitions — a crashed and
-replayed epoch converges bit-identically (the sigstore_stream
-contract; tests/test_canonical_stream.py pins it).
+Replay, compaction cadence and crash repair follow the epoch store
+contract (operators/epoch_store.py); tests/test_canonical_stream.py
+pins that a replayed epoch converges bit-identically.
 
 Cross-batch-only contract (shared with sigstore_stream): duplicates
 WITHIN one micro-batch each become canonicals — intra-batch dedup is
@@ -44,17 +39,24 @@ matters (duplicate-heavy streams).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.canonical import (
+    _sigs_path,
     _texts_path,
     absorb_batch,
     compact_canonical_state,
-    read_state_table,
+)
+from etl_transparencia_sergipe_spark.operators.dedup import (
+    jaccard_verify_pairs,
 )
 from etl_transparencia_sergipe_spark.operators.sigstore import (
-    hadoop_store_ready,
+    probe_signature_store,
+)
+from etl_transparencia_sergipe_spark.streaming.pipeline import (
+    overwrite_batch,
 )
 
 
@@ -65,45 +67,24 @@ def canonical_ingest_sink(state_path: str, matches_path: str,
                           pushdown_max_keys: int = 1024,
                           compact_every: int | None = 32):
     """foreachBatch sink: probe-verify-absorb against the canonical
-    state. Requires a state built with
-    ``build_canonical_state(..., base_epoch=...)`` (the epoch-
-    partitioned streaming layout with the texts table) — a missing or
-    half-built state fails loudly instead of silently minting every
-    arriving doc as a new canonical.
-
-    ``compact_every`` (round-9 VERDICT item 4): every N epochs the sink
-    LSM-compacts the state's three tables (compact_canonical_state)
-    with ``upto_epoch = <current epoch>`` — at batch START everything
-    below the current epoch is checkpoint-committed and can never
-    replay, while the current epoch stays live for its own dynamic
-    overwrite. Running it at batch start (not end) makes a crash
-    mid-compaction self-healing: the replayed epoch re-enters the same
-    compaction call, whose first step is the two-rename crash repair.
-    None disables (single-driver batch loops that compact manually).
+    state. Requires a state built with ``build_canonical_state`` — a
+    missing or half-built state fails loudly instead of silently
+    minting every arriving doc as a new canonical. Every
+    ``compact_every`` epochs (None disables) the committed epochs of the
+    three state tables are folded into their zones first.
     """
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from etl_transparencia_sergipe_spark.caching import persist_scoped
-        from etl_transparencia_sergipe_spark.operators.canonical import (
-            _sigs_path,
-        )
-        from etl_transparencia_sergipe_spark.operators.dedup import (
-            jaccard_verify_pairs,
-        )
-        from etl_transparencia_sergipe_spark.operators.sigstore import (
-            probe_signature_store,
-        )
 
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        if not hadoop_store_ready(spark, _texts_path(state_path)):
+        if not epoch_store.ready(spark, _texts_path(state_path)):
             raise RuntimeError(
                 f"canonical state at {state_path} is missing its texts "
-                "table — build it with build_canonical_state(..., "
-                "base_epoch=...) before starting the stream")
-        if compact_every and epoch > 0 and epoch % compact_every == 0:
-            # epochs < epoch are committed — fold them; the current
-            # epoch stays live (replay overwrites it in place)
+                "table — build it with build_canonical_state before "
+                "starting the stream")
+        if epoch_store.compaction_due(epoch, compact_every):
             compact_canonical_state(spark, state_path, upto_epoch=epoch)
         batch = batch_df.select(
             F.col(id_col).alias(id_col), F.col(text_col).alias(text_col))
@@ -128,7 +109,7 @@ def canonical_ingest_sink(state_path: str, matches_path: str,
             #    against the (persisted) candidate frame instead.
             cand_ids_df = cand.select("id_a").distinct()
             n_cand = cand_ids_df.limit(pushdown_max_keys + 1).count()
-            texts = (read_state_table(spark, _texts_path(state_path))
+            texts = (epoch_store.read(spark, _texts_path(state_path))
                      .filter(F.col("ingest_batch") < epoch))
             if n_cand <= pushdown_max_keys:
                 cand_ids = sorted(r[0] for r in cand_ids_df.collect())
@@ -151,45 +132,13 @@ def canonical_ingest_sink(state_path: str, matches_path: str,
                                    "id_a AS canonical_id", "jaccard")
                        .transform(persist_scoped))
             try:
-                (matches.withColumn("batch_id", F.lit(epoch))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id").parquet(matches_path))
+                overwrite_batch(matches, matches_path, epoch)
                 absorb_batch(spark, state_path, docs_all, batch, id_col,
-                             text_col, k=k, bands=bands, n=n,
-                             threshold=threshold, epoch=epoch,
-                             matches=matches)
+                             text_col, epoch, k=k, bands=bands, n=n,
+                             threshold=threshold, matches=matches)
             finally:
                 matches.unpersist()
         finally:
             cand.unpersist()
 
     return write_batch
-
-
-def run_canonical_ingest(spark: SparkSession, docs_dir: str,
-                         state_path: str, matches_path: str,
-                         checkpoint_dir: str,
-                         max_files_per_trigger: int = 1,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         threshold: float = 0.4):
-    """Drive the canonical-contraction ingest stream to completion
-    (availableNow). The state is directly probe-able by the batch path
-    afterwards (same layout, same probe operator)."""
-    from etl_transparencia_sergipe_spark.streaming.sigstore_stream import (
-        documents_stream,
-    )
-
-    stream = documents_stream(spark, docs_dir, max_files_per_trigger)
-    q = (
-        stream.writeStream
-        .foreachBatch(canonical_ingest_sink(state_path, matches_path,
-                                            id_col=id_col,
-                                            text_col=text_col,
-                                            threshold=threshold))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -1,8 +1,10 @@
-"""Streaming sources/sinks: parquet-backed event stream, memory-sink test
-harness, and the foreachBatch hive-partitioned sink that mirrors the
-reference's ``data/processed/{cidade}/{cidade}_royalties_{ano}_{mes}.csv``
-layout (aracaju_barra_pirambu_scraper.py:289-291) as
-``{sink}/event_type=*/event_date=*`` dynamic partitions.
+"""Streaming sources/sinks: parquet-backed event and file streams, the
+one availableNow foreachBatch driver the ingest sinks run under, a
+memory-sink test harness, and the foreachBatch hive-partitioned sink
+that mirrors the reference's
+``data/processed/{cidade}/{cidade}_royalties_{ano}_{mes}.csv`` layout
+(aracaju_barra_pirambu_scraper.py:289-291) as
+``{sink}/ingest_batch=*/event_type=*/event_date=*`` partitions.
 """
 
 from __future__ import annotations
@@ -35,6 +37,45 @@ def events_stream(spark: SparkSession, sf_dir: str,
     return normalize_event_ts(raw)
 
 
+def file_stream(spark: SparkSession, src_dir: str,
+                max_files_per_trigger: int = 1) -> DataFrame:
+    """A parquet directory as a file stream (one file per micro-batch by
+    default — each file is an ingest 'lote')."""
+    schema = spark.read.parquet(src_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+    )
+
+
+def ingest_files(spark: SparkSession, src_dir: str, sink,
+                 checkpoint_dir: str, max_files_per_trigger: int = 1):
+    """Drive the foreachBatch ``sink`` over every file of ``src_dir`` to
+    completion (availableNow); returns the finished query handle."""
+    q = (
+        file_stream(spark, src_dir, max_files_per_trigger).writeStream
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def overwrite_batch(df: DataFrame, path: str, epoch: int) -> None:
+    """Write one micro-batch's output rows under ``batch_id=<epoch>``,
+    replacing only that partition, so a replayed epoch rewrites its own
+    output (the epoch_store.write contract, for the sinks' flags,
+    matches and drift tables)."""
+    (df.withColumn("batch_id", F.lit(int(epoch)))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch_id")
+     .parquet(path))
+
+
 def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete"):
     """Drive a streaming frame to completion synchronously into a memory
     sink; returns the query handle (caller reads ``SELECT * FROM name``)."""
@@ -49,18 +90,17 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete"):
 
 
 def foreach_batch_partitioned_sink(out_dir: str):
-    """foreachBatch sink writing dynamic hive partitions by
-    (event_type, event_date) — idempotent per-partition overwrite is the
-    streaming analog of the reference re-running a month and overwriting
-    its CSV (file_utils.py:57)."""
+    """foreachBatch sink writing hive partitions by (event_type,
+    event_date) under each epoch's own ``ingest_batch`` partition
+    (epoch_store.write) — a replayed epoch overwrites only its own rows,
+    the streaming analog of the reference re-running a month and
+    overwriting its CSV (file_utils.py:57)."""
+    from etl_transparencia_sergipe_spark.operators import epoch_store
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df
-            .withColumn("event_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("event_type", "event_date")
-            .parquet(out_dir)
-        )
+        epoch_store.write(batch_df.withColumn("event_date",
+                                              F.to_date("ts")),
+                          out_dir, epoch_id,
+                          partition_by=["event_type", "event_date"])
 
     return write_batch

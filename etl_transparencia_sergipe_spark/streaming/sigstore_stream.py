@@ -7,33 +7,26 @@ continuous-ingestion posture a production corpus pipeline runs 24/7:
 
     documents file stream
         -> foreachBatch:
-             1. probe the micro-batch against the signature store
-                (flags = suspected near-dups of ANYTHING ingested before)
-             2. append the micro-batch's own signatures to the store,
-                partitioned by ingest batch id (idempotent on retry:
-                dynamic partition overwrite of THIS batch's partition)
-             3. write the flagged pairs to the flags table, partitioned
-                by batch id with the same dynamic-partition overwrite
-                (a replayed epoch rewrites its own flag partition; the
-                probe excludes the store's own-epoch partition so replay
-                is deterministic)
+             1. probe the micro-batch against the signature store's
+                epochs below this one (flags = suspected near-dups of
+                ANYTHING ingested before)
+             2. write the flagged pairs under batch_id=<epoch>
+             3. write the micro-batch's own banded signatures as the
+                store's epoch <epoch>
 
-Reference parity: the reference's incremental month-skip ("already
-scraped?" check against what exists on disk —
-``src/utils/file_utils.py:57``) is a presence test against persisted
-state; this is the same state-on-storage posture with content
-signatures instead of file names.
+Replay, compaction cadence and crash repair follow the epoch store
+contract (operators/epoch_store.py).
 
 Scale shape at 100 TB: per micro-batch the plan scans the batch's text
-ONCE for signatures; the store side is the banded layout
-(operators/sigstore.py v2) probed through a BROADCAST of the batch's
-bands with the batch's band keys pushed into the store scan as an In
-filter — per-batch cost is O(batch) work + O(matching row groups) I/O,
-flat as the store grows (round-6 VERDICT item 1; measured by
-tools/bench_streaming.py's store-growth sweep). State between batches
-lives in parquet, not in executor memory — the stream restarts from the
-checkpoint with zero state rebuild, and the store doubles as the batch
-path's input (one store serves both).
+ONCE for signatures; the store side is the banded layout probed through
+a BROADCAST of the batch's bands — per-batch cost is O(batch) work +
+O(matching row groups) I/O. Measured flat as the store grows: at sf1,
+781 docs a batch over 64 epochs, the first 8 batches averaged 3.26 s
+and the last 8 3.13 s (BASELINE.md, round 7). The probe's In pushdown
+stays off for micro-batches: its keys-collect added a serial job of
+about 1 s a batch at sf1. State between batches lives in parquet, not
+in executor memory — the stream restarts from the checkpoint with zero
+state rebuild, and the store doubles as the batch path's input.
 """
 
 from __future__ import annotations
@@ -41,27 +34,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.dedup import (
     minhash_signatures,
 )
 from etl_transparencia_sergipe_spark.operators.sigstore import (
+    append_banded_store,
     banded_signatures,
-    hadoop_store_ready,
+    compact_banded_store,
     probe_signature_store,
-    write_banded_store,
 )
-
-
-def documents_stream(spark: SparkSession, docs_dir: str,
-                     max_files_per_trigger: int = 1) -> DataFrame:
-    """documents-shaped parquet dir as a file stream (one file per
-    micro-batch by default — each file is an ingest 'lote')."""
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
+from etl_transparencia_sergipe_spark.streaming.pipeline import (
+    ingest_files,
+    overwrite_batch,
+)
 
 
 def sigstore_ingest_sink(store_path: str, flags_path: str,
@@ -73,32 +59,18 @@ def sigstore_ingest_sink(store_path: str, flags_path: str,
 
     Emits to ``flags_path`` rows [old_id, new_id, n_agree, batch_id] for
     every store x batch band collision with ``n_agree >= min_agree``
-    (n_agree/k estimates Jaccard; 8/16 ~ the 0.5 near-dup bar). Then
-    appends the batch's signatures to ``store_path`` under
-    ``ingest_batch=<epoch>`` so a replayed epoch overwrites its own
-    partition instead of duplicating rows (idempotent retry — the same
-    guarantee the reference gets from whole-month CSV overwrite).
-
-    ``compact_every`` (round-9 VERDICT item 4): every N epochs the sink
-    folds committed ``ingest_batch < <current epoch>`` partitions into
-    the band_hash-clustered ``_compacted`` zone (compact_banded_store)
-    at batch START — everything below the current epoch is checkpoint-
-    committed and can never replay; the epoch being processed stays
-    live for its own dynamic overwrite, and a crash mid-compaction is
-    self-healing because the replayed epoch re-enters the same
-    compaction call. None disables.
+    (n_agree/k estimates Jaccard; 8/16 ~ the 0.5 near-dup bar), then
+    writes the batch's signatures as the store's epoch. Every
+    ``compact_every`` epochs (None disables) the committed epochs are
+    folded into the store's band_hash-clustered zone first.
     """
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from etl_transparencia_sergipe_spark.caching import persist_scoped
-        from etl_transparencia_sergipe_spark.operators.sigstore import (
-            compact_banded_store,
-        )
 
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        if (compact_every and epoch > 0 and epoch % compact_every == 0
-                and hadoop_store_ready(spark, store_path)):
+        if epoch_store.compaction_due(epoch, compact_every):
             compact_banded_store(spark, store_path, upto_epoch=epoch)
         # ONE text scan per epoch: the persisted signature frame feeds
         # both the probe (passed through new_sig) and the banded append
@@ -108,62 +80,23 @@ def sigstore_ingest_sink(store_path: str, flags_path: str,
         # by an epoch replay must not leak the cached signature
         # partitions — state between batches lives in parquet only
         try:
-            _probe_and_append(spark, batch_df, sig, int(epoch_id))
+            if epoch_store.ready(spark, store_path):
+                # pushdown_max_keys=0 and broadcast_probe=True: an ingest
+                # micro-batch is a BULK probe that always fits in a
+                # broadcast (see the module docstring)
+                flags = (
+                    probe_signature_store(
+                        spark, store_path, batch_df, id_col, text_col,
+                        k=k, bands=bands, n=n, ingest_batch_lt=epoch,
+                        pushdown_max_keys=0, new_sig=sig,
+                        broadcast_probe=True)
+                    .filter(F.col("n_agree") >= min_agree)
+                )
+                overwrite_batch(flags, flags_path, epoch)
+            append_banded_store(banded_signatures(sig, k=k, bands=bands),
+                                store_path, epoch)
         finally:
             sig.unpersist()
-
-    def _probe_and_append(spark: SparkSession, batch_df: DataFrame,
-                          sig: DataFrame, epoch_id: int) -> None:
-        banded = banded_signatures(sig, k=k, bands=bands)
-
-        # Replay-safe probe: (a) readiness check goes through the Hadoop
-        # FileSystem API (correct for HDFS/S3, not just local disk) and
-        # requires a COMMITTED child entry — a crashed first-epoch write
-        # leaves the dir present with only _temporary, which bare
-        # exists() would treat as a probe-able store (round-5 ADVICE);
-        # (b) the store is filtered to ingest_batch < epoch_id so a
-        # replayed epoch whose store partition was already written never
-        # probes its own signatures (which would emit self-pairs and
-        # intra-batch pairs, breaking the cross-batch-only invariant);
-        # (c) flags are partitioned by batch_id and written with dynamic
-        # partition overwrite — a retry rewrites epoch N's flag
-        # partition instead of appending duplicates. The probe is
-        # deterministic given the (immutable) < epoch store state, so
-        # overwrite converges to the same content on every replay.
-        if hadoop_store_ready(spark, store_path):
-            # pushdown_max_keys=0: an ingest micro-batch is a BULK probe
-            # (thousands of band keys) — the static In pushdown is the
-            # point-probe tool and its keys-collect adds a serial job
-            # per batch (measured ~1 s at sf1); bulk probes are served
-            # by the broadcast join alone
-            flags = (
-                # broadcast_probe=True: a streaming micro-batch always
-                # fits in a broadcast (the O(batch) probe shape); bulk
-                # batch probes leave it to the auto-gate (round-7
-                # ADVICE)
-                probe_signature_store(spark, store_path, batch_df,
-                                      id_col, text_col, k=k, bands=bands,
-                                      n=n, ingest_batch_lt=int(epoch_id),
-                                      pushdown_max_keys=0, new_sig=sig,
-                                      broadcast_probe=True)
-                .filter(F.col("n_agree") >= min_agree)
-                .withColumn("batch_id", F.lit(int(epoch_id)))
-            )
-            (
-                flags.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(flags_path)
-            )
-
-        # partition-scoped overwrite: replaying epoch N rewrites only
-        # ingest_batch=N (dynamic partitionOverwriteMode, set per-write).
-        # The append is BANDED (operators/sigstore.py store layout v2):
-        # banding happens here, once, at O(batch) cost — the probe above
-        # then never re-hashes the store (round-6 VERDICT item 1)
-        write_banded_store(
-            banded.withColumn("ingest_batch", F.lit(int(epoch_id))),
-            store_path, partition_by=["ingest_batch"], n_files=1)
 
     return write_batch
 
@@ -176,18 +109,9 @@ def run_ingest_dedup(spark: SparkSession, docs_dir: str, store_path: str,
 
     Returns the finished query handle; the signature store and flags
     table are on disk afterwards — the store is directly probe-able by
-    the batch path (operators/sigstore.probe_signature_store reads it
-    modulo the ingest_batch partition column, which Spark prunes away
-    on the mh* column selection).
+    the batch path (operators/sigstore.probe_signature_store).
     """
-    stream = documents_stream(spark, docs_dir, max_files_per_trigger)
-    q = (
-        stream.writeStream
-        .foreachBatch(sigstore_ingest_sink(store_path, flags_path,
-                                           min_agree=min_agree))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return ingest_files(spark, docs_dir,
+                        sigstore_ingest_sink(store_path, flags_path,
+                                             min_agree=min_agree),
+                        checkpoint_dir, max_files_per_trigger)

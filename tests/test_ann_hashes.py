@@ -1,12 +1,15 @@
-"""The trained-ANN family hash-equals its DuckDB twins at sf0.001.
+"""The trained-ANN family and the store-backed dedup queries hash-equal
+their DuckDB twins at sf0.001.
 
 Each query's Spark result is hashed with the correctness gate's own
 ``canonical`` (order-insensitive, full-precision doubles) and compared
-with its ``oracle_py`` twin — the literal-constant SQL trained from the
-same deterministic sample — or, for q46, its static oracle SQL. The
-trained constants and q106's incremental index are built fresh under a
-per-test ``SPARK_GRAFT_ARTIFACTS``, so the search, the training and the
-index build all run, never a cached artifact.
+with its ``oracle_py`` twin — for the ANN family the literal-constant
+SQL trained from the same deterministic sample — or, where there is
+none, its static oracle SQL. Trained constants, q106's incremental
+index, q81's signature store, q107's canonical state and the CC oracle
+cache are all built fresh under a per-test ``SPARK_GRAFT_ARTIFACTS``,
+so the search, the training and every store build run, never a cached
+artifact.
 """
 
 from __future__ import annotations
@@ -29,6 +32,11 @@ ANN_FAMILY = [
     "q103_ivfpq_residual_refine_topk",
     "q106_incremental_ann_index",
 ]
+# the epoch stores' batch builds (operators/epoch_store.py)
+STORE_BACKED = [
+    "q81_sigstore_probe",
+    "q107_canonical_dedup",
+]
 
 
 def _canonical():
@@ -45,7 +53,7 @@ def canonical():
     return _canonical()
 
 
-@pytest.mark.parametrize("name", ANN_FAMILY)
+@pytest.mark.parametrize("name", ANN_FAMILY + STORE_BACKED)
 def test_spark_hash_equals_oracle(spark, sf_dir, tmp_path, monkeypatch,
                                   canonical, name):
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "quantizers"))
@@ -54,8 +62,9 @@ def test_spark_hash_equals_oracle(spark, sf_dir, tmp_path, monkeypatch,
     got = canonical(qd.build(spark, sf_dir).toPandas())
 
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/embeddings.parquet')")
+    for table in ("embeddings", "documents"):
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{table}.parquet')")
     want_df = (qd.oracle_py(con) if qd.oracle_py is not None
                else con.execute(qd.oracle).fetchdf())
     con.close()

@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.ann_index import (
     _load_quantizer,
     append_ivfpq_index,
@@ -37,7 +38,8 @@ def test_append_search_equals_rebuild_search(spark, emb, tmp_path):
     rebuilt = str(tmp_path / "idx_rebuilt")
 
     build_ivfpq_index(emb.filter(f"vec_id < {half}"), grown)
-    report = append_ivfpq_index(emb.filter(f"vec_id >= {half}"), grown)
+    report = append_ivfpq_index(emb.filter(f"vec_id >= {half}"), grown,
+                                epoch=0)
     # quantizer artifact reused: append encoded against the stored one
     cmat, books, baseline = _load_quantizer(grown)
     build_ivfpq_index(emb, rebuilt, constants=(cmat, books))
@@ -54,13 +56,15 @@ def test_append_rows_land_in_cell_partitions(spark, emb, tmp_path):
     path = str(tmp_path / "idx")
     n = emb.count()
     build_ivfpq_index(emb.filter(f"vec_id < {n // 2}"), path)
-    append_ivfpq_index(emb.filter(f"vec_id >= {n // 2}"), path)
-    idx = spark.read.parquet(path)
+    append_ivfpq_index(emb.filter(f"vec_id >= {n // 2}"), path, epoch=0)
+    idx = epoch_store.read(spark, path)
     assert idx.count() == n
     assert idx.select("vec_id").distinct().count() == n
-    # hive layout: cell=N dirs exist; search prunes on them
-    cells = [d for d in os.listdir(path) if d.startswith("cell=")]
-    assert len(cells) >= 2
+    # hive layout: cell=N dirs exist in the built zone and in the
+    # appended epoch; search prunes on them
+    for d in (epoch_store.zone_path(spark, path),
+              os.path.join(path, "ingest_batch=0")):
+        assert len([c for c in os.listdir(d) if c.startswith("cell=")]) >= 2
 
 
 def test_drift_report_flags_shifted_batch(spark, emb, tmp_path):
@@ -73,7 +77,7 @@ def test_drift_report_flags_shifted_batch(spark, emb, tmp_path):
         "vec_id",
         F.expr("transform(embedding, x -> x * CAST(3.0 AS FLOAT))")
         .alias("embedding"))
-    report = append_ivfpq_index(shifted, path)
+    report = append_ivfpq_index(shifted, path, epoch=0)
     assert report["drift_ratio"] > 2.0
     assert report["baseline_resid_sq"] > 0
 

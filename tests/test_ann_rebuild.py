@@ -1,8 +1,9 @@
 """Drift-driven index maintenance (operators/ann_index.py round-8
-additions): layout guard on append, upto_epoch-bounded compaction, and
-rebuild_ann_index — out-of-distribution appends degrade measured
-recall, a rebuild restores it, and in-distribution rebuilds leave
-search results bit-identical."""
+additions): epoch appends, upto_epoch-bounded compaction, and the
+rebuild (build_ivfpq_index over the current corpus) —
+out-of-distribution appends degrade measured recall, a rebuild
+restores it, and in-distribution rebuilds leave search results
+bit-identical."""
 
 from __future__ import annotations
 
@@ -11,13 +12,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.ann_index import (
     _load_quantizer,
     append_ivfpq_index,
     build_ivfpq_index,
     compact_ann_index,
     maybe_rebuild_ann_index,
-    rebuild_ann_index,
     search_ivfpq_index,
 )
 from etl_transparencia_sergipe_spark.operators.similarity import l2_topk
@@ -49,40 +50,28 @@ def _shifted(emb, lo, n):
         "transform(embedding, x -> x + CAST(3.0 AS FLOAT)) AS embedding")
 
 
-# --- layout guard (round-7 ADVICE) ----------------------------------------
+# --- epoch appends ---------------------------------------------------------
 
 
-def test_append_rejects_flat_write_into_epoch_layout(spark, emb, tmp_path):
-    """Appending the flat cell=* layout under an epoch-partitioned root
-    would mix partition depths and corrupt the index for every later
-    read — the guard fails loudly BEFORE writing."""
-    path = str(tmp_path / "idx")
-    n = emb.count()
-    build_ivfpq_index(emb.filter(f"vec_id < {n // 2}"), path, base_epoch=-1)
-    with pytest.raises(ValueError, match="epoch-partitioned"):
-        append_ivfpq_index(emb.filter(f"vec_id >= {n // 2}"), path)
-    # the tree is still readable (nothing was written)
-    assert spark.read.parquet(path).count() == n // 2
+def _zone_epochs(spark, index):
+    return sorted(r[0] for r in
+                  spark.read.parquet(epoch_store.zone_path(spark, index))
+                  .select("ingest_batch").distinct().collect())
 
 
 def test_append_with_epoch_lands_in_own_partition(spark, emb, tmp_path):
     path = str(tmp_path / "idx")
     n = emb.count()
-    build_ivfpq_index(emb.filter(f"vec_id < {n // 2}"), path, base_epoch=-1)
+    build_ivfpq_index(emb.filter(f"vec_id < {n // 2}"), path)
     report = append_ivfpq_index(emb.filter(f"vec_id >= {n // 2}"), path,
                                 epoch=0)
     assert 0.5 < report["drift_ratio"] < 1.5
-    idx = spark.read.parquet(path)
+    idx = epoch_store.read(spark, path)
     assert idx.count() == n
-    assert sorted(r[0] for r in
-                  idx.select("ingest_batch").distinct().collect()) == [-1, 0]
-
-
-def test_append_rejects_epoch_write_into_flat_layout(spark, emb, tmp_path):
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(emb, path)  # flat cell=* layout
-    with pytest.raises(ValueError, match="flat"):
-        append_ivfpq_index(emb.limit(5), path, epoch=3)
+    # the build is the zone, the append its own live epoch
+    assert epoch_store.live_epochs(spark, path) == [0]
+    assert spark.read.parquet(
+        epoch_store.zone_path(spark, path)).count() == n // 2
 
 
 # --- upto_epoch compaction (round-7 ADVICE) --------------------------------
@@ -100,7 +89,7 @@ def test_compaction_upto_epoch_keeps_replayable_epoch_live(spark, emb,
     n = emb.count()
     cut = n // 2
     mid = (cut + n) // 2
-    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index, base_epoch=-1)
+    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index)
     sink = ann_ingest_sink(index, drift)
     batch1 = emb.filter(f"vec_id >= {mid}")
     sink(emb.filter(f"vec_id >= {cut} AND vec_id < {mid}"), 0)
@@ -109,14 +98,13 @@ def test_compaction_upto_epoch_keeps_replayable_epoch_live(spark, emb,
     before = _rows(search_ivfpq_index(emb, index, k=5, r=100))
     report = compact_ann_index(spark, index, upto_epoch=1)
     assert report["n_rows"] == n
-    idx = spark.read.parquet(index)
-    assert sorted(r[0] for r in
-                  idx.select("ingest_batch").distinct().collect()) == [-1, 1]
+    assert _zone_epochs(spark, index) == [-1, 0]
+    assert epoch_store.live_epochs(spark, index) == [1]
     assert _rows(search_ivfpq_index(emb, index, k=5, r=100)) == before
 
     # the crashed stream replays epoch 1: row set must be unchanged
     sink(batch1, 1)
-    idx = spark.read.parquet(index)
+    idx = epoch_store.read(spark, index)
     assert idx.count() == n
     assert idx.select("vec_id").distinct().count() == n
     assert _rows(search_ivfpq_index(emb, index, k=5, r=100)) == before
@@ -129,14 +117,15 @@ def test_full_compaction_after_replayed_epoch_duplicates_nothing(spark, emb,
     index = str(tmp_path / "idx")
     n = emb.count()
     cut = n // 2
-    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index, base_epoch=-1)
+    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index)
     sink = ann_ingest_sink(index, str(tmp_path / "drift"))
     sink(emb.filter(f"vec_id >= {cut}"), 0)
     compact_ann_index(spark, index, upto_epoch=0)   # folds nothing new
     report = compact_ann_index(spark, index)        # full fold
     assert report["n_rows"] == n
-    idx = spark.read.parquet(index)
-    assert idx.select("ingest_batch").distinct().collect() == [(-1,)]
+    assert epoch_store.live_epochs(spark, index) == []
+    assert _zone_epochs(spark, index) == [-1, 0]
+    idx = epoch_store.read(spark, index)
     assert idx.select("vec_id").distinct().count() == n
 
 
@@ -159,8 +148,8 @@ def _recall(spark, corpus, index, query_pred, k=5, nprobe=4, r=20):
 def test_rebuild_restores_recall_after_drift(spark, emb, tmp_path):
     """Out-of-distribution appends degrade measured recall (the stored
     centroids never saw the shifted cluster, so cells stop
-    discriminating); rebuild_ann_index retrains on the CURRENT corpus
-    and restores it."""
+    discriminating); a rebuild retrains on the CURRENT corpus and
+    restores it."""
     index = str(tmp_path / "idx")
     n = emb.count()
     cut = n // 2
@@ -169,20 +158,21 @@ def test_rebuild_restores_recall_after_drift(spark, emb, tmp_path):
     corpus = base.unionByName(ood)
 
     build_ivfpq_index(base, index)
-    report = append_ivfpq_index(ood, index)
+    report = append_ivfpq_index(ood, index, epoch=0)
     assert report["drift_ratio"] > 2.0  # the retrain signal fired
 
     ood_pred = f"vec_id >= {n + cut} AND vec_id < {n + cut + 8}"
     degraded = _recall(spark, corpus, index, ood_pred)
     assert degraded <= 0.3, degraded   # cells stopped discriminating
 
-    rb = rebuild_ann_index(corpus, index)
-    assert rb["layout"] == "flat"
+    build_ivfpq_index(corpus, index)  # the rebuild
+    # the rebuild replaced the zone and folded the appended epoch away
+    assert epoch_store.live_epochs(spark, index) == []
     restored = _recall(spark, corpus, index, ood_pred)
     assert restored > degraded, (degraded, restored)
     assert restored >= 0.6, restored
     # the rebuilt tree is complete and consistent
-    idx = spark.read.parquet(index)
+    idx = epoch_store.read(spark, index)
     assert idx.count() == corpus.count()
 
 
@@ -193,7 +183,7 @@ def test_in_distribution_rebuild_is_bit_consistent(spark, emb, tmp_path):
     build_ivfpq_index(emb, index)
     before = _rows(search_ivfpq_index(emb, index, k=5, r=100))
     cmat0, books0, base0 = _load_quantizer(index)
-    rebuild_ann_index(emb, index)
+    build_ivfpq_index(emb, index)  # the rebuild
     cmat1, books1, base1 = _load_quantizer(index)
     assert (cmat0 == cmat1).all() and (books0 == books1).all()
     assert base0 == base1
@@ -203,13 +193,13 @@ def test_in_distribution_rebuild_is_bit_consistent(spark, emb, tmp_path):
 def test_maybe_rebuild_acts_on_streamed_drift_log(spark, emb, tmp_path):
     """The automated path: the ingest sink logs drift per epoch; the
     maintenance step reads the latest record and rebuilds only when it
-    crosses the threshold. Epoch layout is preserved (folded base)."""
+    crosses the threshold."""
     index = str(tmp_path / "idx")
     drift = str(tmp_path / "drift")
     n = emb.count()
     cut = n // 2
     base = emb.filter(f"vec_id < {cut}")
-    build_ivfpq_index(base, index, base_epoch=-1)
+    build_ivfpq_index(base, index)
     sink = ann_ingest_sink(index, drift)
 
     # in-distribution epoch: no rebuild
@@ -223,9 +213,9 @@ def test_maybe_rebuild_acts_on_streamed_drift_log(spark, emb, tmp_path):
     corpus = emb.select("vec_id", "embedding").unionByName(ood)
     out = maybe_rebuild_ann_index(spark, index, drift, corpus)
     assert out["rebuilt"] is True and out["drift_ratio"] > 2.0
-    assert out["layout"] == "epoch"
-    idx = spark.read.parquet(index)
+    idx = epoch_store.read(spark, index)
     assert idx.count() == corpus.count()
-    assert idx.select("ingest_batch").distinct().collect() == [(-1,)]
+    # the rebuild is one zone: both streamed epochs are folded away
+    assert epoch_store.live_epochs(spark, index) == []
     # served searches still work end-to-end on the rebuilt tree
     assert len(_rows(search_ivfpq_index(corpus, index, k=5, r=100))) > 0

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.ann_index import (
     _load_quantizer,
     build_ivfpq_index,
@@ -16,8 +17,8 @@ from etl_transparencia_sergipe_spark.operators.ann_index import (
 )
 from etl_transparencia_sergipe_spark.streaming.ann_stream import (
     ann_ingest_sink,
-    run_ann_ingest,
 )
+from etl_transparencia_sergipe_spark.streaming.pipeline import ingest_files
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,9 +50,9 @@ def grown(spark, emb, tmp_path_factory):
 
     index = str(base / "index")
     drift = str(base / "drift")
-    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index, base_epoch=-1)
-    run_ann_ingest(spark, str(stream_dir), index, drift,
-                   str(base / "ckpt"), max_files_per_trigger=1)
+    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index)
+    ingest_files(spark, str(stream_dir), ann_ingest_sink(index, drift),
+                 str(base / "ckpt"), max_files_per_trigger=1)
     return index, drift, str(stream_dir), n
 
 
@@ -65,11 +66,11 @@ def test_stream_grown_index_serves_full_corpus(spark, emb, grown,
     encode under the SAME (reused) quantizer — the ann_index equality,
     with the appends arriving through foreachBatch epochs."""
     index, _, _, n = grown
-    idx = spark.read.parquet(index)
+    idx = epoch_store.read(spark, index)
     assert idx.count() == n
     assert idx.select("vec_id").distinct().count() == n
-    # three epochs in the tree: base (-1) + two stream batches
-    assert idx.select("ingest_batch").distinct().count() == 3
+    # the built zone + two live stream epochs
+    assert epoch_store.live_epochs(spark, index) == [0, 1]
 
     cmat, books, _ = _load_quantizer(index)
     rebuilt = str(tmp_path / "rebuilt")
@@ -86,18 +87,18 @@ def test_epoch_replay_is_idempotent(spark, grown):
     drift table must come out bit-identical — dynamic partition
     overwrite rewrites ingest_batch=N/cell=*, never appends."""
     index, drift, stream_dir, _ = grown
-    idx_before = _rows(spark.read.parquet(index))
+    idx_before = _rows(epoch_store.read(spark, index))
     drift_before = _rows(spark.read.parquet(drift))
 
     batch1 = spark.read.parquet(os.path.join(stream_dir, "batch1.parquet"))
     some_id = batch1.select("vec_id").first()[0]
-    epoch = (spark.read.parquet(index)
+    epoch = (epoch_store.read(spark, index)
              .filter(f"vec_id = {some_id}")
              .select("ingest_batch").first()[0])
     sink = ann_ingest_sink(index, drift)
     sink(batch1, int(epoch))
 
-    assert _rows(spark.read.parquet(index)) == idx_before
+    assert _rows(epoch_store.read(spark, index)) == idx_before
     assert _rows(spark.read.parquet(drift)) == drift_before
 
 
@@ -117,8 +118,8 @@ def test_drift_logged_per_epoch_in_distribution(spark, grown):
 
 def test_compaction_preserves_search_and_merges_epochs(spark, emb,
                                                        tmp_path):
-    """compact_ann_index folds all ingest epochs into the base epoch:
-    search results bit-identical, one epoch left, fewer files."""
+    """compact_ann_index folds all ingest epochs into the zone: search
+    results bit-identical, no live epoch left, fewer files."""
     from etl_transparencia_sergipe_spark.operators.ann_index import (
         compact_ann_index,
     )
@@ -127,7 +128,7 @@ def test_compaction_preserves_search_and_merges_epochs(spark, emb,
     drift = str(tmp_path / "drift")
     n = emb.count()
     cut = n // 2
-    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index, base_epoch=-1)
+    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index)
     sink = ann_ingest_sink(index, drift)
     mid = (cut + n) // 2
     sink(emb.filter(f"vec_id >= {cut} AND vec_id < {mid}"), 0)
@@ -137,46 +138,20 @@ def test_compaction_preserves_search_and_merges_epochs(spark, emb,
     report = compact_ann_index(spark, index)
     after = _rows(search_ivfpq_index(emb, index, k=5, r=100))
     assert after == before
-    idx = spark.read.parquet(index)
+    idx = epoch_store.read(spark, index)
     assert idx.count() == n == report["n_rows"]
-    assert idx.select("ingest_batch").distinct().collect() == [(-1,)]
+    assert epoch_store.live_epochs(spark, index) == []
     assert report["n_files_after"] < report["n_files_before"]
     # append-after-compact still works: the quantizer artifact survived
     sink(emb.filter(f"vec_id >= {mid}").selectExpr(
         f"vec_id + {n} AS vec_id", "embedding"), 2)
-    assert spark.read.parquet(index).count() == n + (n - mid)
-
-
-def test_compaction_repairs_half_finished_swap(spark, emb, tmp_path):
-    """Crash window: a previous compaction renamed the root away but
-    died before moving the new tree in. The next compact_ann_index
-    call must first restore the old tree from <path>_compact_old, then
-    compact it — searches afterwards see the full corpus."""
-    import shutil
-
-    from etl_transparencia_sergipe_spark.operators.ann_index import (
-        compact_ann_index,
-    )
-
-    index = str(tmp_path / "idx")
-    n = emb.count()
-    cut = n // 2
-    build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index, base_epoch=-1)
-    sink = ann_ingest_sink(index, str(tmp_path / "drift"))
-    sink(emb.filter(f"vec_id >= {cut}"), 0)
-    expected = _rows(search_ivfpq_index(emb, index, k=5, r=100))
-
-    # simulate the crash: root swapped out, tmp tree lost
-    shutil.move(index, index + "_compact_old")
-    report = compact_ann_index(spark, index)
-    assert report["n_rows"] == n
-    assert _rows(search_ivfpq_index(emb, index, k=5, r=100)) == expected
+    assert epoch_store.read(spark, index).count() == n + (n - mid)
 
 
 def test_auto_compaction_growth_sweep(spark, emb, tmp_path):
     """Round-9 VERDICT item 4: the sink's own compact_every cadence
     keeps the epoch tree bounded across a 64-epoch growth sweep —
-    live partitions never exceed the cadence (+base), file count stays
+    live partitions never exceed the cadence, file count stays
     far below the uncompacted one-dir-per-epoch trajectory, search
     results are bit-identical to an uncompacted twin, and replaying
     the exact compaction-trigger epoch (the crash-repair path: the
@@ -188,8 +163,7 @@ def test_auto_compaction_growth_sweep(spark, emb, tmp_path):
     paths = {}
     for mode, every in (("auto", 16), ("off", None)):
         index = str(tmp_path / f"idx_{mode}")
-        build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index,
-                          base_epoch=-1)
+        build_ivfpq_index(emb.filter(f"vec_id < {cut}"), index)
         sink = ann_ingest_sink(index, str(tmp_path / f"drift_{mode}"),
                                compact_every=every)
         for e in range(epochs):
@@ -205,24 +179,20 @@ def test_auto_compaction_growth_sweep(spark, emb, tmp_path):
         return sum(1 for p in pathlib.Path(root).rglob("*.parquet"))
 
     auto, off = paths["auto"], paths["off"]
-    live = sorted(r[0] for r in spark.read.parquet(auto)
-                  .select("ingest_batch").distinct().collect())
-    # last fold at epoch 48 -> live epochs 48..63 plus the base fold
-    assert live == [-1] + list(range(48, 64))
-    off_parts = spark.read.parquet(off).select(
-        "ingest_batch").distinct().count()
-    assert off_parts == epochs + 1
+    # last fold at epoch 48 -> live epochs 48..63, the rest in the zone
+    assert epoch_store.live_epochs(spark, auto) == list(range(48, 64))
+    assert epoch_store.live_epochs(spark, off) == list(range(epochs))
     assert _nfiles(auto) < _nfiles(off) / 2
     # identical content and identical search results
-    assert spark.read.parquet(auto).count() == \
-        spark.read.parquet(off).count()
+    assert epoch_store.read(spark, auto).count() == \
+        epoch_store.read(spark, off).count()
     q = emb.filter("vec_id < 20")
     assert _rows(search_ivfpq_index(q, auto, k=5, r=100)) == \
         _rows(search_ivfpq_index(q, off, k=5, r=100))
     # replay the LAST compaction-trigger epoch (48): compaction re-runs
     # with the same upto_epoch, the epoch's own partitions are
     # dynamic-overwritten — the tree must converge bit-identically
-    before = _rows(spark.read.parquet(auto))
+    before = _rows(epoch_store.read(spark, auto))
     e = 48
     lo = cut + (e * per) % (n - cut - per)
     sink = ann_ingest_sink(auto, str(tmp_path / "drift_auto"),
@@ -230,7 +200,7 @@ def test_auto_compaction_growth_sweep(spark, emb, tmp_path):
     sink(emb.filter(f"vec_id >= {lo} AND vec_id < {lo + per}")
          .selectExpr(f"vec_id + {1000 + e * per} AS vec_id",
                      "embedding"), e)
-    assert _rows(spark.read.parquet(auto)) == before
+    assert _rows(epoch_store.read(spark, auto)) == before
 
 
 def test_search_prunes_cells_on_epoch_layout(spark, emb, grown):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.canonical import (
     absorb_batch,
     build_canonical_state,
@@ -44,7 +45,7 @@ def state(spark, tmp_path_factory):
 def test_state_labels_every_old_doc_and_stores_canonicals_only(
         spark, state):
     path, old, report = state
-    labels = spark.read.parquet(path + "/labels")
+    labels = epoch_store.read(spark, path + "/labels")
     assert labels.count() == old.count() == report["n_docs"]
     # the 6-clique contracts to one canonical (min id 0); singletons
     # label themselves
@@ -53,7 +54,7 @@ def test_state_labels_every_old_doc_and_stores_canonicals_only(
     assert lab[10] == 10 and lab[11] == 11
     assert report["n_canonicals"] == 3
     # the signature store holds ONLY canonical docs' rows
-    store_ids = {r[0] for r in spark.read.parquet(path + "/sigs")
+    store_ids = {r[0] for r in epoch_store.read(spark, path + "/sigs")
                  .select("doc_id").distinct().collect()}
     assert store_ids == {0, 10, 11}
 
@@ -96,12 +97,12 @@ def test_absorb_batch_labels_and_grows_store_by_unmatched_only(
               "stateful session window aggregation semantics in spark"),
     ])
     labels1 = absorb_batch(spark, path, old.unionByName(batch1), batch1,
-                           "doc_id", "text")
+                           "doc_id", "text", epoch=0)
     lab = {r["node"]: r["canonical_id"] for r in labels1.collect()}
     assert lab == {100: 0, 101: 101}
     # store grew by the unmatched doc only — matched docs never add
     # signatures (the contraction invariant)
-    store_ids = {r[0] for r in spark.read.parquet(path + "/sigs")
+    store_ids = {r[0] for r in epoch_store.read(spark, path + "/sigs")
                  .select("doc_id").distinct().collect()}
     assert store_ids == {0, 101}
 
@@ -116,7 +117,7 @@ def test_absorb_batch_labels_and_grows_store_by_unmatched_only(
     assert len(rows) == 1 and rows[0]["canonical_id"] == 101
     # full label table now covers everything absorbed
     all_lab = {r["node"]: r["canonical_id"]
-               for r in spark.read.parquet(path + "/labels").collect()}
+               for r in epoch_store.read(spark, path + "/labels").collect()}
     assert all_lab[100] == 0 and all_lab[101] == 101
 
 
@@ -176,7 +177,7 @@ def test_contraction_recall_trade_on_chain_clusters(spark, tmp_path):
     path = str(tmp_path / "state")
     build_canonical_state(old, "doc_id", "text", path)
     labels = {r["node"]: r["canonical_id"] for r in
-              spark.read.parquet(path + "/labels").collect()}
+              epoch_store.read(spark, path + "/labels").collect()}
     # precondition: the chain really is ONE cluster with canonical 0
     assert labels == {0: 0, 1: 0, 2: 0}
 

@@ -10,14 +10,15 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.canonical import (
     build_canonical_state,
     probe_canonical_state,
 )
 from etl_transparencia_sergipe_spark.streaming.canonical_stream import (
     canonical_ingest_sink,
-    run_canonical_ingest,
 )
+from etl_transparencia_sergipe_spark.streaming.pipeline import ingest_files
 
 _BASE = ("the quick brown fox jumps over the lazy dog near the old barn "
          "while rain falls softly on the quiet village road")
@@ -35,6 +36,13 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _snapshot(spark, state, matches):
+    """Sorted rows of the matches table and the three state stores."""
+    return [_rows(spark.read.parquet(matches))] + [
+        _rows(epoch_store.read(spark, f"{state}/{t}"))
+        for t in ("labels", "sigs", "texts")]
+
+
 @pytest.fixture()
 def streamed(spark, tmp_path):
     """State on a 4-doc clique + 1 singleton; TWO stream batches:
@@ -43,7 +51,7 @@ def streamed(spark, tmp_path):
                 + [(9, "lonely text about something else entirely "
                        "with no shared shingles anywhere here")])
     state = str(tmp_path / "state")
-    build_canonical_state(old, "doc_id", "text", state, base_epoch=-1)
+    build_canonical_state(old, "doc_id", "text", state)
 
     incoming = tmp_path / "incoming"
     incoming.mkdir()
@@ -60,8 +68,8 @@ def streamed(spark, tmp_path):
         shutil.rmtree(w)
 
     matches = str(tmp_path / "matches")
-    run_canonical_ingest(spark, str(incoming), state, matches,
-                         str(tmp_path / "ckpt"))
+    ingest_files(spark, str(incoming), canonical_ingest_sink(state, matches),
+                 str(tmp_path / "ckpt"))
     return state, matches, batches
 
 
@@ -78,35 +86,30 @@ def test_cross_batch_contraction_through_epochs(spark, streamed):
     assert not any(n in (101, 201) for n, _ in m)
 
     lab = {r["node"]: r["canonical_id"]
-           for r in spark.read.parquet(state + "/labels").collect()}
+           for r in epoch_store.read(spark, state + "/labels").collect()}
     assert lab[100] == 0 and lab[101] == 101
     assert lab[200] == 101 and lab[201] == 201
     # canonical store grew by UNMATCHED docs only
-    sig_ids = {r[0] for r in spark.read.parquet(state + "/sigs")
+    sig_ids = {r[0] for r in epoch_store.read(spark, state + "/sigs")
                .select("doc_id").distinct().collect()}
     assert sig_ids == {0, 9, 101, 201}
-    txt_ids = {r[0] for r in spark.read.parquet(state + "/texts")
+    txt_ids = {r[0] for r in epoch_store.read(spark, state + "/texts")
                .select("doc_id").distinct().collect()}
     assert txt_ids == {0, 9, 101, 201}
 
 
 def test_epoch_replay_is_idempotent(spark, streamed):
     state, matches, batches = streamed
-    before = [_rows(spark.read.parquet(p)) for p in
-              (matches, state + "/labels", state + "/sigs",
-               state + "/texts")]
+    before = _snapshot(spark, state, matches)
     sink = canonical_ingest_sink(state, matches)
     sink(batches[1], 1)  # replay the finished epoch 1
-    after = [_rows(spark.read.parquet(p)) for p in
-             (matches, state + "/labels", state + "/sigs",
-              state + "/texts")]
-    assert after == before
+    assert _snapshot(spark, state, matches) == before
 
 
 def test_batch_path_probes_the_stream_grown_state(spark, streamed):
     state, _, _ = streamed
     probe = _docs(spark, [(500, _NEW_B)])
-    texts = (spark.read.parquet(state + "/texts")
+    texts = (epoch_store.read(spark, state + "/texts")
              .selectExpr("doc_id", "text"))
     got = probe_canonical_state(spark, state,
                                 texts.unionByName(probe), probe,
@@ -120,27 +123,10 @@ def test_replay_semi_join_fallback_matches_in_pushdown(spark, streamed):
     forces that path on a replay — state and matches must come out
     bit-identical to the In-pushdown run."""
     state, matches, batches = streamed
-    before = [_rows(spark.read.parquet(p)) for p in
-              (matches, state + "/labels", state + "/sigs",
-               state + "/texts")]
+    before = _snapshot(spark, state, matches)
     sink = canonical_ingest_sink(state, matches, pushdown_max_keys=0)
     sink(batches[1], 1)
-    after = [_rows(spark.read.parquet(p)) for p in
-             (matches, state + "/labels", state + "/sigs",
-              state + "/texts")]
-    assert after == before
-
-
-def test_build_state_rejects_non_negative_base_epoch(spark, tmp_path):
-    """Round-8 ADVICE: base_epoch >= 0 would be silently excluded from
-    the epoch-0 probe and then destroyed by epoch 0's dynamic
-    overwrite — the builder must fail loudly instead."""
-    docs = _docs(spark, [(1, "any text")])
-    for bad in (0, 1):
-        with pytest.raises(ValueError, match="base_epoch"):
-            build_canonical_state(docs, "doc_id", "text",
-                                  str(tmp_path / f"s{bad}"),
-                                  base_epoch=bad)
+    assert _snapshot(spark, state, matches) == before
 
 
 def test_auto_compaction_growth_sweep(spark, tmp_path):
@@ -176,35 +162,42 @@ def test_auto_compaction_growth_sweep(spark, tmp_path):
                            "with no shared shingles anywhere here")])
         state = str(tmp_path / f"state_{mode}")
         matches = str(tmp_path / f"matches_{mode}")
-        build_canonical_state(old, "doc_id", "text", state, base_epoch=-1)
+        build_canonical_state(old, "doc_id", "text", state)
         sink = canonical_ingest_sink(state, matches, compact_every=every)
         for e in range(epochs):
             sink(_doc(spark, e), e)
         states[mode] = (state, matches)
 
     auto, off = states["auto"], states["off"]
-    # last fold at epoch 48: live dirs are 48..63. labels get a
-    # partition every epoch; sigs/texts only on UNMATCHED (odd/fresh)
-    # epochs — matched docs' signatures are never appended (the
-    # contraction invariant), so an all-matched epoch writes no dir.
+    # last fold at epoch 48: live dirs are 48..63, the zone holds the
+    # build and epochs 0..47. labels get a partition every epoch;
+    # sigs/texts only on UNMATCHED (odd/fresh) epochs — matched docs'
+    # signatures are never appended (the contraction invariant), so an
+    # all-matched epoch writes no dir. Uncompacted, the zone holds the
+    # build alone and every epoch stays live.
     expect_auto = {"labels": list(range(48, 64)),
                    "sigs": list(range(49, 64, 2)),
                    "texts": list(range(49, 64, 2))}
-    expect_off_n = {"labels": epochs + 1,
-                    "sigs": epochs // 2 + 1,
-                    "texts": epochs // 2 + 1}
+    expect_off = {"labels": list(range(epochs)),
+                  "sigs": list(range(1, epochs, 2)),
+                  "texts": list(range(1, epochs, 2))}
+
+    def _zone_epochs(root):
+        return sorted(r[0] for r in
+                      spark.read.parquet(epoch_store.zone_path(spark, root))
+                      .select("ingest_batch").distinct().collect())
+
     for table in ("labels", "sigs", "texts"):
         assert _dirs(f"{auto[0]}/{table}") == expect_auto[table], table
-        assert len(_dirs(f"{off[0]}/{table}")) == expect_off_n[table], table
+        assert _dirs(f"{off[0]}/{table}") == expect_off[table], table
+        assert _zone_epochs(f"{auto[0]}/{table}") == \
+            [-1] + [e for e in expect_off[table] if e < 48], table
+        assert _zone_epochs(f"{off[0]}/{table}") == [-1], table
     # content identical to the uncompacted twin
-    from etl_transparencia_sergipe_spark.operators.canonical import (
-        read_state_table,
-    )
-
     for table in ("labels", "texts"):
-        a = _rows(read_state_table(spark, f"{auto[0]}/{table}")
+        a = _rows(epoch_store.read(spark, f"{auto[0]}/{table}")
                   .drop("ingest_batch"))
-        b = _rows(spark.read.parquet(f"{off[0]}/{table}")
+        b = _rows(epoch_store.read(spark, f"{off[0]}/{table}")
                   .drop("ingest_batch"))
         assert a == b, table
     assert _rows(spark.read.parquet(auto[1])) == \
@@ -216,13 +209,10 @@ def test_auto_compaction_growth_sweep(spark, tmp_path):
     assert not any(100 + e in m for e in range(1, epochs, 2))
     # replay the trigger epoch (48): compaction re-runs with the same
     # upto_epoch, then the epoch dynamic-overwrites itself — converge
-    before = [_rows(read_state_table(spark, f"{auto[0]}/{t}"))
-              for t in ("labels", "sigs", "texts")]
+    before = _snapshot(spark, auto[0], auto[1])
     sink = canonical_ingest_sink(auto[0], auto[1], compact_every=16)
     sink(_doc(spark, 48), 48)
-    after = [_rows(read_state_table(spark, f"{auto[0]}/{t}"))
-             for t in ("labels", "sigs", "texts")]
-    assert after == before
+    assert _snapshot(spark, auto[0], auto[1]) == before
 
 
 def test_sink_requires_built_state(spark, tmp_path):
@@ -243,13 +233,14 @@ def test_canonical_sigs_store_compacts_with_sigstore_lsm(spark, streamed):
 
     state, _, batches = streamed
     probe = _docs(spark, [(500, _NEW_B), (501, _NEW_A)])
-    texts = (spark.read.parquet(state + "/texts")
+    texts = (epoch_store.read(spark, state + "/texts")
              .selectExpr("doc_id", "text"))
     before = _rows(probe_canonical_state(
         spark, state, texts.unionByName(probe), probe, "doc_id", "text"))
     assert len(before) == 2  # both streamed canonicals found
 
-    # fold base + epoch 0 (strictly below the last committed epoch 1)
+    # fold epoch 0 into the zone that holds the build (strictly below
+    # the last committed epoch 1)
     compact_banded_store(spark, state + "/sigs", upto_epoch=1)
     after = _rows(probe_canonical_state(
         spark, state, texts.unionByName(probe), probe, "doc_id", "text"))
@@ -261,7 +252,7 @@ def test_canonical_sigs_store_compacts_with_sigstore_lsm(spark, streamed):
     sink(batches[1], 1)
     # fresh read: the replay dynamic-overwrote texts/ingest_batch=1, so
     # the pre-replay DataFrame's file listing is stale by design
-    texts = (spark.read.parquet(state + "/texts")
+    texts = (epoch_store.read(spark, state + "/texts")
              .selectExpr("doc_id", "text"))
     assert _rows(probe_canonical_state(
         spark, state, texts.unionByName(probe), probe,

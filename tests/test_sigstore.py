@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.dedup import (
     minhash_signatures,
 )
@@ -108,12 +109,13 @@ def test_store_layout_prunes_row_groups(spark, split_corpus):
     keys = [r[0] for r in banded_signatures(
         minhash_signatures(new_docs, "doc_id", "text"))
         .select("band_hash").collect()]
-    stats = inset_skip_fraction(store, "band_hash", keys)
+    zone = epoch_store.zone_path(spark, store)
+    stats = inset_skip_fraction(zone, "band_hash", keys)
     assert stats["n_groups"] > 0
     # sanity of the metric itself: an all-keys probe skips nothing
-    full = [r[0] for r in spark.read.parquet(store)
+    full = [r[0] for r in epoch_store.read(spark, store)
             .select("band_hash").collect()]
-    assert inset_skip_fraction(store, "band_hash", full)[
+    assert inset_skip_fraction(zone, "band_hash", full)[
         "n_skippable"] == 0
 
 
@@ -171,7 +173,7 @@ def test_signatures_from_banded_roundtrip(spark, split_corpus):
     old_path, _, store = split_corpus
     raw = minhash_signatures(
         spark.read.parquet(old_path), "doc_id", "text")
-    back = signatures_from_banded(spark.read.parquet(store))
+    back = signatures_from_banded(epoch_store.read(spark, store))
     assert sorted(map(tuple, raw.collect())) == \
         sorted(map(tuple, back.collect()))
 
@@ -182,6 +184,6 @@ def test_store_build_is_idempotent(spark, split_corpus, tmp_path):
     old_docs = spark.read.parquet(old_path)
     build_signature_store(old_docs, "doc_id", "text", again)
     build_signature_store(old_docs, "doc_id", "text", again)  # overwrite
-    a = sorted(spark.read.parquet(store).collect())
-    b = sorted(spark.read.parquet(again).collect())
+    a = sorted(epoch_store.read(spark, store).collect())
+    b = sorted(epoch_store.read(spark, again).collect())
     assert a == b

@@ -11,6 +11,7 @@ import os
 
 import pytest
 
+from etl_transparencia_sergipe_spark.operators import epoch_store
 from etl_transparencia_sergipe_spark.operators.sigstore import (
     build_signature_store,
     probe_signature_store,
@@ -57,7 +58,7 @@ def _run(spark, docs_dir, tmp, tag):
 def test_stream_ingest_builds_full_store(spark, docs_batches, tmp_path):
     docs_dir, n = docs_batches
     store, _ = _run(spark, docs_dir, tmp_path, "full")
-    banded = spark.read.parquet(store)
+    banded = epoch_store.read(spark, store)
     # banded layout (store v2): one row per (doc, band), 4 bands
     assert banded.count() == 4 * n
     assert signatures_from_banded(banded).count() == n
@@ -68,7 +69,7 @@ def test_stream_ingest_builds_full_store(spark, docs_batches, tmp_path):
 def test_stream_flags_are_cross_batch_only(spark, docs_batches, tmp_path):
     docs_dir, _ = docs_batches
     store, flags = _run(spark, docs_dir, tmp_path, "flags")
-    sig = spark.read.parquet(store)
+    sig = epoch_store.read(spark, store)
     fl = spark.read.parquet(flags)
     if fl.count() == 0:
         pytest.skip("no near-dup pairs at this sf")
@@ -89,8 +90,8 @@ def test_stream_store_matches_batch_store(spark, docs_batches, tmp_path):
     batch_store = str(tmp_path / "store_batch")
     docs = spark.read.parquet(docs_dir)
     build_signature_store(docs, "doc_id", "text", batch_store)
-    a = spark.read.parquet(store).drop("ingest_batch")
-    b = spark.read.parquet(batch_store)
+    a = epoch_store.read(spark, store).drop("ingest_batch")
+    b = epoch_store.read(spark, batch_store).drop("ingest_batch")
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
@@ -114,15 +115,11 @@ def test_uncommitted_store_dir_is_not_probed(spark, docs_batches,
     inside) must count as ABSENT: the replayed first epoch skips the
     probe instead of failing parquet schema inference and wedging the
     stream (round-5 ADVICE, medium)."""
-    from etl_transparencia_sergipe_spark.operators.sigstore import (
-        hadoop_store_ready,
-    )
-
     docs_dir, _ = docs_batches
     store = tmp_path / "store_crashed"
     (store / "_temporary").mkdir(parents=True)
     flags = tmp_path / "flags_crashed"
-    assert not hadoop_store_ready(spark, str(store))
+    assert not epoch_store.ready(spark, str(store))
     batch0 = spark.read.parquet(os.path.join(docs_dir, "batch0.parquet"))
     sink = sigstore_ingest_sink(str(store), str(flags))
     sink(batch0, 0)  # replayed first epoch: must not raise
@@ -130,21 +127,19 @@ def test_uncommitted_store_dir_is_not_probed(spark, docs_batches,
     assert not os.path.exists(str(flags))
     # ... the batch's signatures were committed, and the store is now
     # ready for the next epoch
-    assert hadoop_store_ready(spark, str(store))
+    assert epoch_store.ready(spark, str(store))
     assert signatures_from_banded(
-        spark.read.parquet(str(store))).count() == batch0.count()
+        epoch_store.read(spark, str(store))).count() == batch0.count()
 
 
 def test_compaction_preserves_probe_and_readiness(spark, docs_batches,
                                                   tmp_path):
     """LSM compaction (operators/sigstore.compact_banded_store): folding
-    closed epochs into the clustered ``_compacted`` zone must change
+    closed epochs into the store's clustered zone must change
     neither probe results nor store readiness — and a FULLY compacted
     store (zero live partitions) stays probe-able and 'ready'."""
     from etl_transparencia_sergipe_spark.operators.sigstore import (
         compact_banded_store,
-        hadoop_store_ready,
-        read_banded_store,
     )
 
     docs_dir, n = docs_batches
@@ -156,8 +151,8 @@ def test_compaction_preserves_probe_and_readiness(spark, docs_batches,
     # partial compaction: epochs 0-1 fold, epoch 2 stays live
     compact_banded_store(spark, store, upto_epoch=2, n_files=2,
                          rows_per_group=64)
-    assert hadoop_store_ready(spark, store)
-    assert read_banded_store(spark, store).count() == 4 * n
+    assert epoch_store.ready(spark, store)
+    assert epoch_store.read(spark, store).count() == 4 * n
     mid = sorted(map(tuple, probe_signature_store(
         spark, store, probe_docs, "doc_id", "text").collect()))
     assert mid == before
@@ -169,12 +164,12 @@ def test_compaction_preserves_probe_and_readiness(spark, docs_batches,
     live_parts = [d for d in _os.listdir(store)
                   if d.startswith("ingest_batch=")]
     assert live_parts == []
-    assert hadoop_store_ready(spark, store)
+    assert epoch_store.ready(spark, store)
     after = sorted(map(tuple, probe_signature_store(
         spark, store, probe_docs, "doc_id", "text").collect()))
     assert after == before
     # ingest_batch survives as a data column (replay filter still works)
-    assert "ingest_batch" in read_banded_store(spark, store).columns
+    assert "ingest_batch" in epoch_store.read(spark, store).columns
     # the clustered zone's zone maps actually prune: a small probe's In
     # keys miss most row groups (the whole point of compacting)
     from etl_transparencia_sergipe_spark.operators.dedup import (
@@ -184,7 +179,6 @@ def test_compaction_preserves_probe_and_readiness(spark, docs_batches,
         inset_skip_fraction,
     )
     from etl_transparencia_sergipe_spark.operators.sigstore import (
-        _compacted_path,
         banded_signatures,
     )
     # one-doc probe: 4 band keys against >=8 clustered groups — most
@@ -193,7 +187,8 @@ def test_compaction_preserves_probe_and_readiness(spark, docs_batches,
     keys = [r[0] for r in banded_signatures(minhash_signatures(
         probe_docs.limit(1), "doc_id", "text"))
         .select("band_hash").collect()]
-    stats = inset_skip_fraction(_compacted_path(store), "band_hash", keys)
+    stats = inset_skip_fraction(epoch_store.zone_path(spark, store),
+                                "band_hash", keys)
     assert stats["n_groups"] >= 8
     assert stats["skip_fraction"] >= 0.3
 
@@ -209,7 +204,7 @@ def test_epoch_replay_is_idempotent(spark, docs_batches, tmp_path):
     """
     docs_dir, _ = docs_batches
     store, flags = _run(spark, docs_dir, tmp_path, "replay")
-    sig_before = spark.read.parquet(store)
+    sig_before = epoch_store.read(spark, store)
     n_before = sig_before.count()
     flags_before = spark.read.parquet(flags).collect()
     # replay one batch file through the sink under ITS original epoch id
@@ -220,7 +215,7 @@ def test_epoch_replay_is_idempotent(spark, docs_batches, tmp_path):
              .select("ingest_batch").first()[0])
     sink = sigstore_ingest_sink(store, flags)
     sink(batch2, int(epoch))
-    assert spark.read.parquet(store).count() == n_before
+    assert epoch_store.read(spark, store).count() == n_before
     fl_after = spark.read.parquet(flags)
     assert fl_after.filter("old_id = new_id").count() == 0
     assert sorted(map(tuple, fl_after.collect())) == \

@@ -100,6 +100,12 @@ def test_foreach_batch_partitioned_sink(spark, sf_dir):
         assert {"event_type", "event_date"} <= set(written.columns)
         n_parts = written.select("event_type", "event_date").distinct().count()
         assert n_parts > 1
+        # a replayed epoch overwrites its own rows instead of appending:
+        # the one events file was epoch 0; replay it twice
+        sink = foreach_batch_partitioned_sink(out)
+        for _ in range(2):
+            sink(src, 0)
+        assert spark.read.parquet(out).count() == src.count()
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
