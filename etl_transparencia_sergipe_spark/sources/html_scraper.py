@@ -8,17 +8,22 @@ after a details-control cell, each followed by a hidden detail ``<tr>``
 holding a nested ``<th>label:</th><td>value</td>`` table (labels like
 "Fonte de Recurso:" are normalized to snake_case column names,
 reference :183-189). This module renders reference-shaped month pages
-to disk, serves them over ``file://``, and parses them with stdlib
-``html.parser`` — the SAME ``fetch_fn`` seam the synthetic generator
-and a production HTTP fetcher use, so the whole pipeline (fan-out,
-retry, royalty filter, partitioned write) runs on real markup at zero
-dependency cost.
+to disk, serves them over ``file://`` and parses them in one pass of an
+anchored regex over the portal's row pairs; a page whose markup fails
+that pass's structural self-check is parsed by ``MonthPageParser``, a
+walk over stdlib ``html.parser`` events and the reference the fast pass
+is tested against. It is the SAME ``fetch_fn`` seam the synthetic
+generator and a production HTTP fetcher use, so the whole pipeline
+(fan-out, retry, royalty filter, partitioned write) runs on real markup
+at zero dependency cost.
 """
 
 from __future__ import annotations
 
+import functools
 import html
 import os
+import re
 from html.parser import HTMLParser
 from urllib.request import urlopen
 
@@ -95,7 +100,7 @@ def write_fixtures(root: str, cidades: list[str], anos: list[int],
 
 
 # ---------------------------------------------------------------------------
-# parsing (stdlib html.parser — no bs4/lxml in this container)
+# reference parsing (stdlib html.parser — no bs4/lxml dependency)
 # ---------------------------------------------------------------------------
 
 
@@ -134,7 +139,7 @@ class MonthPageParser(HTMLParser):
             self._cur_master, self._cur_detail = [], {}
         elif tag == "td" and not self._in_detail_table:
             if self._cur_master is not None \
-                    and "details-control" not in a.get("class", ""):
+                    and "details-control" not in (a.get("class") or ""):
                 self._cell = []
         elif self._in_detail_table and tag == "th":
             self._pending_key = []
@@ -177,7 +182,89 @@ class MonthPageParser(HTMLParser):
         self._cur_master = self._cur_detail = None
 
 
+# ---------------------------------------------------------------------------
+# fast path: one anchored regex pass over the row pairs
+# ---------------------------------------------------------------------------
+
+_TABLE_ID = "dataTables-Pagamentos"
+_TABLE_OPEN = f'<table id="{_TABLE_ID}"><tbody>'
+_TABLE_CLOSE = "</tbody></table>"
+_ROLE_ROW = 'role="row"'
+# one master row (details-control + 10 cells) and its hidden detail row
+# (4 label/value pairs), exactly as the portal renders them; a cell is
+# text only, so any tag, comment or extra attribute fails the match
+_ROW_PAIR = re.compile(
+    f'<tr {_ROLE_ROW}(?: class="[^"<>]*")?><td class="details-control"></td>'
+    + "<td>([^<]*)</td>" * len(MASTER_COLUMNS) + "</tr>"
+    '<tr class="detail-row"><td colspan="11">'
+    '<div class="table-responsive"><table><tbody>'
+    + "<tr><th>([^<]*)</th><td>([^<]*)</td></tr>" * len(DETAIL_COLUMNS)
+    + "</tbody></table></div></td></tr>")
+
+
+@functools.lru_cache(maxsize=256)
+def _row_keys(labels: tuple[str, ...]) -> tuple[str, ...] | None:
+    """Column names of a row pair whose detail ``<th>`` texts are
+    ``labels``, each label normalized as ``MonthPageParser`` does it;
+    None unless that gives 14 distinct non-empty names (an empty or
+    repeated key would drop or overwrite a value there)."""
+    keys = tuple(MASTER_COLUMNS) + tuple(
+        normalize_colname(html.unescape(s).strip().rstrip(":"))
+        for s in labels)
+    return keys if all(keys) and len(set(keys)) == len(keys) else None
+
+
+def _starts_a_tag(page: str, pos: int) -> bool:
+    """Whether ``html.parser``, fed ``page[:pos]``, stands between tokens
+    at ``pos`` (not inside a comment, a script or an unclosed tag), so a
+    start tag at ``pos`` is one ``MonthPageParser`` sees too."""
+    p = HTMLParser()
+    p.feed(page[:pos])
+    return p.cdata_elem is None and "<" not in p.rawdata
+
+
+def _anchored_rows(page: str) -> list[dict] | None:
+    """The rows of ``page`` in one pass of ``_ROW_PAIR``, or None when
+    the page fails the structural self-check:
+
+    - the page names ``#dataTables-Pagamentos`` once, in a start tag
+      that ``html.parser`` reads as one;
+    - consecutive matches tile the table's ``<tbody>`` with no gap, and
+      the last one ends at ``</tbody></table>``;
+    - the matches are as many as the ``role="row"`` rows from the table's
+      start to the end of the page;
+    - every row has 10 master and 4 distinct detail keys.
+
+    Cell text is ``html.unescape``d, then stripped: the order in which
+    ``MonthPageParser`` sees it.
+    """
+    start = page.find(_TABLE_OPEN)
+    if start < 0 or page.count(_TABLE_ID) != 1 \
+            or not _starts_a_tag(page, start):
+        return None
+    unescape, n = html.unescape, len(MASTER_COLUMNS)
+    rows = []
+    pos = start + len(_TABLE_OPEN)
+    while (m := _ROW_PAIR.match(page, pos)) is not None:
+        g = m.groups()
+        keys = _row_keys(g[n::2])
+        if keys is None:
+            return None
+        rows.append(dict(zip(keys, [unescape(v).strip()
+                                    for v in g[:n] + g[n + 1::2]])))
+        pos = m.end()
+    if not page.startswith(_TABLE_CLOSE, pos) \
+            or page.count(_ROLE_ROW, start) != len(rows):
+        return None
+    return rows
+
+
 def parse_month_page(page: str) -> list[dict]:
+    """Payment rows of a month page: the anchored one-pass extractor when
+    its self-check holds, else ``MonthPageParser``."""
+    rows = _anchored_rows(page)
+    if rows is not None:
+        return rows
     p = MonthPageParser()
     p.feed(page)
     p._flush()

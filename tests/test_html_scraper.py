@@ -1,17 +1,23 @@
 """Real HTML parsing through the fetch seam (sources/html_scraper.py):
-reference-shaped DataTables month pages served over file://, parsed with
-stdlib html.parser, run end-to-end through the DSv2 portal source, bound
-to ``html_fetch`` or pointed at the pages by option, with the royalty
-term filter."""
+reference-shaped DataTables month pages served over file://, parsed by
+the anchored one-pass extractor (held equal to the stdlib html.parser
+walk ``MonthPageParser`` on generated rows, and declining malformed
+pages to it), run end-to-end through the DSv2 portal source, bound to
+``html_fetch`` or pointed at the pages by option, with the royalty term
+filter."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from etl_transparencia_sergipe_spark.functions.normalize import term_filter
 from etl_transparencia_sergipe_spark.sources.html_scraper import (
+    MonthPageParser,
+    _anchored_rows,
     html_fetch,
     parse_month_page,
     render_month_page,
@@ -19,6 +25,8 @@ from etl_transparencia_sergipe_spark.sources.html_scraper import (
 )
 from etl_transparencia_sergipe_spark.sources.portal_datasource import load
 from etl_transparencia_sergipe_spark.sources.scraper_source import (
+    DETAIL_COLUMNS,
+    MASTER_COLUMNS,
     synthetic_fetch,
 )
 
@@ -113,3 +121,78 @@ def test_dsv2_html_end_to_end_royalty_filter(spark, html_base):
     # every surviving row is genuinely royalty-funded
     assert got["fonte_de_recurso"].map(
         lambda v: any(t in norm(v) for t in terms)).all()
+
+
+def _reference_rows(page: str) -> list[dict]:
+    p = MonthPageParser()
+    p.feed(page)
+    p._flush()
+    return p.rows
+
+
+def test_valueless_class_attribute_parses():
+    # html.parser reports ``<td class>`` as ("class", None)
+    page = ('<table id="dataTables-Pagamentos"><tbody><tr role="row">'
+            '<td class="details-control"></td><td class>X</td></tr>'
+            '</tbody></table>')
+    assert parse_month_page(page) == [{"orgao": "X"}]
+
+
+# cell text: accents, the five characters html.escape rewrites, and
+# whitespace that ``str.strip`` removes (NBSP rendered as ``&nbsp;``)
+_CELL_TEXT = st.text(st.one_of(
+    st.sampled_from(list("aZ09 .,:-/ÇçãéÍõü&<>\"'\n\t\xa0")),
+    st.characters(blacklist_categories=("Cs",))), max_size=12)
+
+
+@settings(deadline=None)
+@given(rows=st.lists(st.fixed_dictionaries(
+    {c: _CELL_TEXT for c in MASTER_COLUMNS + DETAIL_COLUMNS}), max_size=4),
+    nbsp_entity=st.booleans())
+def test_anchored_extractor_equals_reference_parser(rows, nbsp_entity):
+    page = render_month_page(pd.DataFrame(
+        rows, columns=MASTER_COLUMNS + DETAIL_COLUMNS))
+    if nbsp_entity:
+        page = page.replace("\xa0", "&nbsp;")
+    fast = _anchored_rows(page)
+    assert fast is not None  # parity must not pass by falling back
+    assert fast == _reference_rows(page)
+
+
+def _two_row_page() -> str:
+    rows = pd.DataFrame([[f"{c}{i}" for c in MASTER_COLUMNS + DETAIL_COLUMNS]
+                         for i in (1, 2)],
+                        columns=MASTER_COLUMNS + DETAIL_COLUMNS)
+    return render_month_page(rows)
+
+
+_OPEN = '<table id="dataTables-Pagamentos"><tbody>'
+
+
+@pytest.mark.parametrize("edit", [
+    pytest.param(lambda p: p.replace("<td>orgao1</td>", "", 1),
+                 id="master-row-9-cells"),
+    pytest.param(lambda p: p.replace(
+        "<tr><th>Função:</th><td>funcao1</td></tr>", "", 1),
+        id="detail-3-keys"),
+    pytest.param(lambda p: p.replace(
+        "<td>credor1</td>", "<td><b>credor</b>1</td>", 1),
+        id="nested-b"),
+    pytest.param(lambda p: p.replace(
+        '<tr class="detail-row">', '<tr class="detail-row" data-k="1">', 1),
+        id="detail-tr-extra-attribute"),
+    pytest.param(lambda p: p.replace(_OPEN, _OPEN + "<!-- page 1 -->"),
+                 id="comment-in-tbody"),
+    pytest.param(lambda p: p.replace(
+        "</body>", '<table><tbody><tr role="row">'
+        '<td class="details-control"></td><td>stray</td></tr>'
+        "</tbody></table></body>"), id="role-rows-in-later-table"),
+    pytest.param(lambda p: p.replace("dataTables-Pagamentos", "outra"),
+                 id="no-target-table"),
+    pytest.param(lambda p: p.replace("<body>", "<body><!-- ").replace(
+        "</body>", " --></body>"), id="table-inside-comment"),
+])
+def test_malformed_page_falls_back_to_reference_parser(edit):
+    page = edit(_two_row_page())
+    assert _anchored_rows(page) is None
+    assert parse_month_page(page) == _reference_rows(page)
