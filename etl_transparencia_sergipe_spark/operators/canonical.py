@@ -208,31 +208,49 @@ def absorb_batch(spark: SparkSession, path: str, docs_all: DataFrame,
 
     Returns the batch's new labels [node, canonical_id].
     """
+    from etl_transparencia_sergipe_spark.caching import (
+        checkpoint_rdd_id,
+        unpersist_rdd_ids,
+    )
+
     if matches is None:
         matches = probe_canonical_state(
             spark, path, docs_all, new_docs, id_col, text_col, k=k,
             bands=bands, n=n, threshold=threshold,
             ingest_batch_lt=int(epoch))
+    # The batch's best matches, and the batch rows tagged with them
+    # (null: unmatched), are computed once and checkpointed: all three
+    # writes read them. A plan-level cache would not hold — its plan
+    # scans the sigs and texts stores, so the sigs write invalidates it
+    # (Spark re-caches every cached plan that reads a path it writes)
+    # and the texts write re-ran the whole probe and verify.
     best = (matches
             .withColumn("_r", F.row_number().over(
                 W.partitionBy("new_id")
                 .orderBy(F.desc("jaccard"), F.asc("canonical_id"))))
             .filter("_r = 1")
-            .selectExpr("new_id AS node", "canonical_id"))
-    unmatched = (new_docs.selectExpr(f"{id_col} AS node")
-                 .join(best, "node", "left_anti")
-                 .withColumn("canonical_id", F.col("node")))
-    new_labels = best.unionByName(unmatched)
-    fresh_canon = new_docs.join(
-        unmatched.selectExpr(f"node AS {id_col}"), id_col, "left_semi")
-    sig = minhash_signatures(fresh_canon, id_col, text_col, k=k, n=n)
+            .selectExpr("new_id AS node", "canonical_id")
+            .localCheckpoint())
+    tagged = (new_docs.select(id_col, text_col)
+              .join(best.withColumnRenamed("node", id_col), id_col, "left")
+              .localCheckpoint())
+    try:
+        unmatched = tagged.filter(F.col("canonical_id").isNull())
+        new_labels = best.unionByName(unmatched.select(
+            F.col(id_col).alias("node"),
+            F.col(id_col).alias("canonical_id")))
+        fresh_canon = unmatched.filter(F.col(id_col).isNotNull())
+        sig = minhash_signatures(fresh_canon, id_col, text_col, k=k, n=n)
 
-    epoch_store.write(new_labels, _labels_path(path), epoch)
-    append_banded_store(banded_signatures(sig, k, bands), _sigs_path(path),
-                        epoch)
-    epoch_store.write(fresh_canon.select(F.col(id_col).alias("doc_id"),
-                                         F.col(text_col).alias("text")),
-                      _texts_path(path), epoch)
+        epoch_store.write(new_labels, _labels_path(path), epoch)
+        append_banded_store(banded_signatures(sig, k, bands),
+                            _sigs_path(path), epoch)
+        epoch_store.write(fresh_canon.select(F.col(id_col).alias("doc_id"),
+                                             F.col(text_col).alias("text")),
+                          _texts_path(path), epoch)
+    finally:
+        unpersist_rdd_ids(spark, {checkpoint_rdd_id(best),
+                                  checkpoint_rdd_id(tagged)})
     return (epoch_store.read(spark, _labels_path(path))
             .select("node", "canonical_id")
             .join(new_docs.selectExpr(f"{id_col} AS node"), "node",
