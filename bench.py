@@ -6,8 +6,8 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Bench set selection (round 5 — full-surface coverage, r4 VERDICT item
 1: regressions outside the 31-query headline set were invisible):
 - default: EVERY registered query (95; the 88 oracle-backed ones get a
-  DuckDB ratio via tools/bench_paired.py, the 7 rows-only ones are
-  Spark-timed only)
+  DuckDB ratio from the driver, the 7 rows-only ones are Spark-timed
+  only)
 - SPARK_GRAFT_BENCH_SET=headline: the historical 31-query headline set
 - SPARK_GRAFT_BENCH_QUERIES=q31_...,q33_...: explicit comma list (used
   for the sf1 >=1s tier)
@@ -290,16 +290,15 @@ def main() -> None:
             # The explicit GC replaces the periodic timer (see session
             # build above): reference-tracked cleanup (old shuffle files,
             # broadcasts) runs NOW, on an emptied heap, not mid-query.
-            # min_passes=1 keeps the healthy-disk boundary identical to
-            # the historical single System.gc(); under disk pressure it
-            # escalates to the settle loop — a single GC hint loses the
-            # shuffle-deletion relay race and the backlog compounds
-            # (round-12: the sf10 heavy tier ENOSPC'd 76 GiB in 14 min
-            # through the single-hint boundary).
+            # On a healthy disk the boundary is the historical single
+            # System.gc(); under disk pressure it escalates to the settle
+            # loop — a single GC hint loses the shuffle-deletion relay
+            # race and the backlog compounds (round-12: the sf10 heavy
+            # tier ENOSPC'd 76 GiB in 14 min through the single-hint
+            # boundary).
             release_all(spark)
             reclaim_disk(spark, floor_free_gib=float(
-                os.environ.get("SPARK_GRAFT_BENCH_DISK_FLOOR_GIB", "30")),
-                min_passes=1)
+                os.environ.get("SPARK_GRAFT_BENCH_DISK_FLOOR_GIB", "30")))
         timings[name] = runs[0]
         warm[name] = (round(statistics.median(runs[1:]), 3)
                       if n_warm >= 1 else runs[0])

@@ -41,47 +41,46 @@ def persist_scoped(df: DataFrame,
     return df.persist(level)
 
 
-def reclaim_disk(spark: SparkSession, floor_free_gib: float = 30.0,
-                 max_wait_s: float = 60.0, min_passes: int = 2) -> None:
-    """Drive dead shuffle files to actual DELETION before the next query
-    writes (round-11, diagnosed by the sf10 ENOSPC sweep; hoisted here
-    from tools/bench_resilient.py in round 12 after plain bench.py hit
-    the same ENOSPC on the sf10 heavy tier): shuffle cleanup is a
-    four-stage relay — Python refs dropped (cycles need an explicit
-    gc.collect(); py4j detach only runs from __del__) -> JVM GC collects
-    the detached Datasets, making their AQE-materialized
-    ShuffleDependencies weakly reachable -> ContextCleaner's reference
-    queue drains -> ASYNC file deletion. A single System.gc() hint with
-    no settle time loses the race against the next query's writes, and
-    the backlog compounds across a long tier (measured: 42 GiB of
-    shuffle ids 29-492 still on disk mid-sweep, flat across boundaries).
+# the settle loop's cap: past it the next query runs on whatever is free
+_RECLAIM_MAX_WAIT_S = 60.0
 
-    ``min_passes=2`` (the bench_resilient sweep posture) always settles
-    two GC passes, then keeps nudging while free disk is under
-    ``floor_free_gib`` up to ``max_wait_s``. ``min_passes=1`` (the
-    bench.py boundary posture) is the zero-cost fast path: one GC hint
-    and an immediate disk check — identical to the historical boundary
-    when disk is healthy, escalating to the settle loop only under
-    pressure. Boundary time is not query time either way.
+
+def reclaim_disk(spark: SparkSession, floor_free_gib: float) -> None:
+    """Drive dead shuffle files to actual DELETION before the next query
+    writes (round-11, diagnosed by the sf10 ENOSPC sweep; bench.py runs
+    it between queries since round 12, when it hit the same ENOSPC on
+    the sf10 heavy tier): shuffle cleanup is a four-stage relay — Python
+    refs dropped (cycles need an explicit gc.collect(); py4j detach only
+    runs from __del__) -> JVM GC collects the detached Datasets, making
+    their AQE-materialized ShuffleDependencies weakly reachable ->
+    ContextCleaner's reference queue drains -> ASYNC file deletion. A
+    single System.gc() hint with no settle time loses the race against
+    the next query's writes, and the backlog compounds across a long
+    tier (measured: 42 GiB of shuffle ids 29-492 still on disk
+    mid-sweep, flat across boundaries).
+
+    One GC hint and an immediate disk check: identical to a single
+    System.gc() when disk is healthy. While free disk stays under
+    ``floor_free_gib`` it keeps nudging, 3 s apart, for at most 8 hints
+    or ``_RECLAIM_MAX_WAIT_S``. Boundary time is not query time.
     """
     import gc
     import shutil
     import time as _t
 
     gc.collect()
-    deadline = _t.time() + max_wait_s
-    for i in range(8):
+    deadline = _t.time() + _RECLAIM_MAX_WAIT_S
+    for _ in range(8):
         try:
             spark.sparkContext._jvm.System.gc()
         except Exception:  # noqa: BLE001 — py4j teardown races
             return
-        if i + 1 >= min_passes:
-            try:
-                free_gib = shutil.disk_usage("/tmp").free / 2**30
-            except OSError:
-                return
-            if free_gib >= floor_free_gib or _t.time() > deadline:
-                return
+        try:
+            free_gib = shutil.disk_usage("/tmp").free / 2**30
+        except OSError:
+            return
+        if free_gib >= floor_free_gib or _t.time() > deadline:
+            return
         _t.sleep(3.0)
 
 

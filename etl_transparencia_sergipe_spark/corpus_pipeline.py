@@ -104,10 +104,11 @@ def compact_parquet(spark: SparkSession, path: str,
     per-row-group min/max) — compaction is THE moment layout is free,
     since the data is being rewritten anyway; a later range predicate
     on the sort key then skips row groups instead of scanning them
-    (measured: tools/bench_layout.py / BASELINE.md round-6 layout
-    section). ``zorder_cols`` instead interleaves multiple keys
-    (operators/layout.py zorder_write) for pruning on every listed
-    column. Mutually exclusive.
+    (measured at sf1, BASELINE.md round-6 layout section: 86% of the
+    orders row groups skipped for q94's date filter, 83% of lineitem's
+    for a narrow ship-date range). ``zorder_cols`` instead interleaves
+    multiple keys (operators/layout.py zorder_write) for pruning on
+    every listed column. Mutually exclusive.
 
     Returns {"files_before", "files_after", "bytes", "rows"}.
     """

@@ -27,8 +27,8 @@ from __future__ import annotations
 # (cheap `LIMIT 0`); a probe failure falls through to a rebuild. Within
 # one connection the cache assumes same-SQL => same data — callers that
 # re-register the testdata views over different files on a live
-# connection must call ``clear_cc_cache()`` (tools/bench_oracle.py:50
-# does exactly this between scale factors).
+# connection must call ``clear_cc_cache()`` (e.g. between scale
+# factors).
 _CC_CACHE: dict[tuple[int, str], str] = {}
 
 
@@ -48,15 +48,10 @@ def clear_cc_cache() -> None:
 # DuckDB-computed only (never written from Spark results), keyed by the
 # documents parquet's path+size+mtime AND the pairs SQL, so any change
 # to data or formulation rebuilds. tools/build_cc_oracle_cache.py
-# prebuilds it outside the watchdog.
+# prebuilds it outside the watchdog. With the cache warm a CC-family
+# oracle is a parquet read, so its wall says nothing of the clustering
+# cost; time that against a fresh state dir ($SPARK_GRAFT_ARTIFACTS).
 _DISK_CACHE_ROOT = None  # None = the artifacts state dir; tests override
-
-# The disk cache exists for the CORRECTNESS gate (oracle walls past the
-# sf10 watchdog are the oracle's cost, not the engine's). BENCH runs
-# must measure the oracle actually doing the clustering work — with the
-# cache on, a CC-family oracle collapses to a parquet read and every
-# ratio against it is meaningless. tools/bench_oracle.py sets False.
-DISK_CACHE_ENABLED = True
 
 
 def _disk_cache_root() -> str:
@@ -125,7 +120,7 @@ def cc_labels_duck(con, pairs_sql: str, max_iter: int = 64,
         del _CC_CACHE[k]
 
     disk_path = (os.path.join(_disk_cache_root(), f"{disk_tag}.parquet")
-                 if disk_tag and DISK_CACHE_ENABLED else None)
+                 if disk_tag else None)
     if disk_path and os.path.exists(disk_path):
         con.execute(f"CREATE OR REPLACE TEMP TABLE _cc_labels AS "
                     f"SELECT * FROM read_parquet('{disk_path}')")

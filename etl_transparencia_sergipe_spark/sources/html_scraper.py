@@ -111,7 +111,10 @@ class MonthPageParser(HTMLParser):
     ``#dataTables-Pagamentos`` with the first cell a details-control;
     the FOLLOWING sibling row holds the detail table whose ``<th>`` text
     is normalized with ``normalize_colname`` (accent-fold + snake_case),
-    exactly like aracaju_barra_pirambu_scraper.py:183-189.
+    exactly like aracaju_barra_pirambu_scraper.py:183-189. A master row
+    with fewer than 10 cells raises ``ValueError``, as the reference's
+    positional cell reads (:199-204) fail there: mapping its cells in
+    order would shift every later value into the wrong column.
     """
 
     def __init__(self):
@@ -176,6 +179,10 @@ class MonthPageParser(HTMLParser):
 
     def _flush(self):
         if self._cur_master:
+            if len(self._cur_master) < len(MASTER_COLUMNS):
+                raise ValueError(
+                    f"master row with {len(self._cur_master)} cells, "
+                    f"expected {len(MASTER_COLUMNS)}")
             row = dict(zip(MASTER_COLUMNS, self._cur_master))
             row.update(self._cur_detail or {})
             self.rows.append(row)

@@ -18,6 +18,9 @@ from etl_transparencia_sergipe_spark.functions import (
     parse_ptbr_money,
     term_filter,
 )
+from etl_transparencia_sergipe_spark.functions.normalize import (
+    normalized_columns,
+)
 
 # Strings mirroring the reference corpus (fonte_de_recurso values,
 # FIXTURES.md F1) plus edge cases.
@@ -91,7 +94,7 @@ def test_br_date_parse(spark):
     assert got == ["2024-01-31", "2023-12-26", None]
 
 
-def test_normalize_colname():
+def test_normalize_colname(spark):
     # detail-label -> snake_case (aracaju_barra_pirambu_scraper.py:183-189)
     assert normalize_colname("Fonte de Recurso") == "fonte_de_recurso"
     assert normalize_colname("Natureza Despesa:") == "natureza_despesa"
@@ -99,6 +102,13 @@ def test_normalize_colname():
     # NFKD decomposes 'º' to 'o' — matches the observed column name 'no_doc'
     # (OSR_aracaju_barra__pirambu.ipynb cell-32 output)
     assert normalize_colname("Nº Doc") == "no_doc"
+    # P2 dynamic projection: every column renamed, ``mapping`` wins
+    df = spark.createDataFrame([(1, 2, 3)],
+                               ["Fonte de Recurso", "Nº Doc", "Ação"])
+    assert normalized_columns(df).columns == [
+        "fonte_de_recurso", "no_doc", "acao"]
+    assert normalized_columns(df, {"Ação": "acao_orcamentaria"}).columns \
+        == ["fonte_de_recurso", "no_doc", "acao_orcamentaria"]
 
 
 def test_sentences_builtin_vs_regex_twin(spark):

@@ -4,9 +4,12 @@ the anchored one-pass extractor (held equal to the stdlib html.parser
 walk ``MonthPageParser`` on generated rows, and declining malformed
 pages to it), run end-to-end through the DSv2 portal source, bound to
 ``html_fetch`` or pointed at the pages by option, with the royalty term
-filter."""
+filter. A master row missing a cell is a parse error, so its page becomes
+a ``fetch_error`` row rather than a payment with shifted columns."""
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 import pytest
@@ -103,7 +106,6 @@ def test_dsv2_html_end_to_end_royalty_filter(spark, html_base):
     # synthetic rows the pages were rendered from
     want = _expected()
     want = want[want["cidade"] == "aracaju"]
-    import re
     import unicodedata
 
     def norm(s: str) -> str:
@@ -133,9 +135,11 @@ def _reference_rows(page: str) -> list[dict]:
 def test_valueless_class_attribute_parses():
     # html.parser reports ``<td class>`` as ("class", None)
     page = ('<table id="dataTables-Pagamentos"><tbody><tr role="row">'
-            '<td class="details-control"></td><td class>X</td></tr>'
-            '</tbody></table>')
-    assert parse_month_page(page) == [{"orgao": "X"}]
+            '<td class="details-control"></td><td class>X</td>'
+            + "<td>v</td>" * (len(MASTER_COLUMNS) - 1)
+            + "</tr></tbody></table>")
+    assert parse_month_page(page) == [
+        dict(zip(MASTER_COLUMNS, ["X"] + ["v"] * (len(MASTER_COLUMNS) - 1)))]
 
 
 # cell text: accents, the five characters html.escape rewrites, and
@@ -170,8 +174,6 @@ _OPEN = '<table id="dataTables-Pagamentos"><tbody>'
 
 
 @pytest.mark.parametrize("edit", [
-    pytest.param(lambda p: p.replace("<td>orgao1</td>", "", 1),
-                 id="master-row-9-cells"),
     pytest.param(lambda p: p.replace(
         "<tr><th>Função:</th><td>funcao1</td></tr>", "", 1),
         id="detail-3-keys"),
@@ -196,3 +198,36 @@ def test_malformed_page_falls_back_to_reference_parser(edit):
     page = edit(_two_row_page())
     assert _anchored_rows(page) is None
     assert parse_month_page(page) == _reference_rows(page)
+
+
+def _drop_first_master_cell(page: str) -> str:
+    """``page`` with the ``orgao`` cell of its first row removed."""
+    return re.sub(r'(<td class="details-control"></td>)<td>[^<]*</td>',
+                  r"\1", page, count=1)
+
+
+def test_master_row_missing_a_cell_raises():
+    # zipping 9 cells onto the 10 master columns would shift every value
+    # after the gap one column left and pass the row on as a payment
+    page = _drop_first_master_cell(_two_row_page())
+    assert _anchored_rows(page) is None
+    with pytest.raises(ValueError, match="master row with 9 cells"):
+        parse_month_page(page)
+
+
+def test_page_with_short_master_row_becomes_fetch_error(spark, tmp_path):
+    base = write_fixtures(str(tmp_path), CIDADES, ANOS, MESES)
+    bad = tmp_path / "aracaju_2024_2.html"
+    bad.write_text(_drop_first_master_cell(bad.read_text(encoding="utf-8")),
+                   encoding="utf-8")
+    got = load(spark, CIDADES, ANOS, MESES, html_fetch(base)).toPandas()
+    damaged = (got["cidade"] == "aracaju") & (got["mes"] == 2)
+    assert damaged.sum() == 1
+    assert got.loc[damaged, "fetch_error"].str.startswith("ValueError").all()
+    assert got.loc[~damaged, "fetch_error"].isna().all()
+    want = _expected()
+    want = want[~((want["cidade"] == "aracaju") & (want["mes"] == 2))]
+    key = ["cidade", "ano", "mes", "empenho", "processo"]
+    pd.testing.assert_frame_equal(
+        got[~damaged].sort_values(key).reset_index(drop=True)[want.columns],
+        want.sort_values(key).reset_index(drop=True), check_dtype=False)

@@ -1,6 +1,9 @@
-"""ML parity (A4-A6), multimodal plumbing, and df.observe metrics (D7)."""
+"""ML parity (A4-A6), multimodal plumbing, df.observe metrics (D7) and
+task-tagged logging (D8)."""
 
 from __future__ import annotations
+
+import logging
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,7 +13,10 @@ from etl_transparencia_sergipe_spark.ml import (
     kmeans_clusters,
     scaler_stats,
 )
-from etl_transparencia_sergipe_spark.observability import observed
+from etl_transparencia_sergipe_spark.observability import (
+    observed,
+    task_log_context,
+)
 from etl_transparencia_sergipe_spark.sources.catalog import load_table
 from etl_transparencia_sergipe_spark.sources.multimodal import (
     decode_image,
@@ -114,3 +120,9 @@ def test_observe_metrics(spark, sf_dir):
     n = df.count()  # action drives the plan; observation rides along
     assert obs.get["n_rows"] == n
     assert obs.get["sum_qty"] > 0
+
+
+def test_task_log_context_tags_records(caplog):
+    caplog.set_level(logging.INFO, logger="etl_transparencia_sergipe_spark")
+    task_log_context("t1").info("page fetched")
+    assert [r.task_id for r in caplog.records] == ["t1"]

@@ -1,0 +1,68 @@
+"""The repository scripts that stay (no Spark session): the helpers the
+benchmark imports from ``bench.py`` and ``tools/check_correctness.py``
+resolve, every ``tools/<name>.py`` the docs cite exists, and QUERIES.md
+is what ``tools/gen_query_catalog.py`` renders from the registry."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import re
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+
+
+@pytest.fixture
+def tools_path(monkeypatch):
+    # the import path perfbench/run.py sets up
+    for p in (ROOT, ROOT / "tools"):
+        monkeypatch.syspath_prepend(str(p))
+
+
+def _perfbench_imports() -> dict[str, set[str]]:
+    """{module: names} of perfbench's ``from bench/check_correctness
+    import ...`` statements."""
+    out: dict[str, set[str]] = {}
+    for f in (ROOT / "perfbench").glob("*.py"):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.ImportFrom) \
+                    and node.module in ("bench", "check_correctness"):
+                out.setdefault(node.module, set()).update(
+                    a.name for a in node.names)
+    return out
+
+
+def test_perfbench_helper_imports_resolve(tools_path):
+    wanted = _perfbench_imports()
+    assert set(wanted) == {"bench", "check_correctness"}
+    for module, names in wanted.items():
+        mod = importlib.import_module(module)
+        missing = sorted(n for n in names if not hasattr(mod, n))
+        assert not missing, f"{module} lacks {missing}"
+
+
+@pytest.mark.parametrize("doc", ["README.md", ".claude/skills/verify/SKILL.md",
+                                 "PLANS.md"])
+def test_cited_tools_exist(doc):
+    cited = set(re.findall(r"tools/(\w+\.py)", (ROOT / doc).read_text()))
+    assert cited
+    assert sorted(n for n in cited if not (ROOT / "tools" / n).exists()) == []
+
+
+def test_queries_md_matches_registry():
+    # rendered in a fresh interpreter, as the script runs: the extended
+    # tier keeps registration order, which follows the order in which
+    # the process first imported the plan modules
+    out = subprocess.run(
+        [sys.executable, "-c", "import gen_query_catalog as g; "
+         "print(g.MARKER); print(g.render_table())"],
+        cwd=ROOT / "tools", capture_output=True, text=True, timeout=300,
+        check=True).stdout
+    marker, table = out.split("\n", 1)
+    above = (ROOT / "QUERIES.md").read_text().split(marker, 1)[0]
+    assert above.rstrip("\n") == table.rstrip("\n")

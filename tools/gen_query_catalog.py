@@ -1,4 +1,7 @@
-"""Regenerate QUERIES.md from the registry docs (one row per query)."""
+"""Regenerate QUERIES.md from the registry docs (one row per query).
+
+Usage: python tools/gen_query_catalog.py
+"""
 
 from __future__ import annotations
 
@@ -9,8 +12,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from etl_transparencia_sergipe_spark.plans import registry
 
+OUT = Path(__file__).resolve().parent.parent / "QUERIES.md"
+# hand-maintained prose (e.g. the streaming end-to-end walkthrough)
+# lives below the marker and survives regeneration
+MARKER = "<!-- hand-maintained below -->"
 
-def main() -> None:
+
+def render_table() -> str:
+    """QUERIES.md above ``MARKER``: the header and one row per query."""
     registry._ensure_loaded()
     lines = [
         "# QUERIES — the registered surface (generated from plans/registry.py docs)",
@@ -43,14 +52,14 @@ def main() -> None:
         "(W = driver certification window, E = extended tier — all",
         "oracle-checked every round in CORRECTNESS_LOCAL.md.)",
     ]
-    out = Path(__file__).resolve().parent.parent / "QUERIES.md"
-    # hand-maintained prose (e.g. the streaming end-to-end walkthrough)
-    # lives below the marker and survives regeneration
-    marker = "<!-- hand-maintained below -->"
-    tail = ""
-    if out.exists() and marker in out.read_text():
-        tail = "\n\n" + marker + out.read_text().split(marker, 1)[1]
-    out.write_text("\n".join(lines) + tail + "\n")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    text = render_table()
+    if OUT.exists() and MARKER in OUT.read_text():
+        text += "\n\n" + MARKER + OUT.read_text().split(MARKER, 1)[1]
+    OUT.write_text(text.rstrip("\n") + "\n")
     print(f"wrote {len(registry.REGISTRY)} rows")
 
 

@@ -20,7 +20,7 @@ deterministic per-copy perturbation (+k*1e-3 on one vec_id-dependent
 dimension): identical twins would make every ANN method trivially
 recover the exact top-k (all four ANN queries hashed identically at sf1
 in round 3), while near-twins make recall@k a real measurement
-(tools/ann_recall.py records it).
+(BASELINE.md records it per ANN query).
 
 Correctness at sf1 is still a fair gate: Spark and the DuckDB oracle read
 the SAME files, whatever their provenance.
