@@ -5,9 +5,9 @@ Selenium fetch -> royalty term filter -> master+detail projection -> monthly
 CSV -> yearly glob/concat consolidation (main.py:38-60;
 aracaju_barra_pirambu_scraper.py:317-351; file_utils.py:22-57).
 
-Spark re-expression: portal source scan (one partition per page, fetched
-as Arrow) -> filter(P4) -> select(P1+P2) + F6 money cast ->
-write.partitionBy(cidade, ano, mes).
+Spark re-expression: portal source scan (one Arrow batch per page, the
+pages packed into one partition per core) -> filter(P4) -> select(P1+P2)
++ F6 money cast -> write.partitionBy(cidade, ano, mes).
 The consolidation step DISAPPEARS: a partitioned table read with partition
 pruning IS the consolidated view — no physical concat at any scale.
 """

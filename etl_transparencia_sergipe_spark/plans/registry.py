@@ -16,6 +16,7 @@ Determinism rules (so engine and oracle hash-match bit-for-bit):
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -396,31 +397,34 @@ HEADLINE_50: tuple[str, ...] = (
 )
 
 
+# The modules that register queries, in the order of the extended tier.
+_PLAN_MODULES = (
+    "relational", "relational2", "textops", "dedup_queries",
+    "similarity_queries", "streaming_queries", "ml_queries",
+    "curation_queries", "event_analytics", "dq_audit",
+)
+
+
 def _ensure_loaded() -> None:
     """Import every module that registers queries (import side effect),
     then rebuild the registry in contract order: HEADLINE_50 first, the
-    extended tier after, each tier in original registration order."""
+    extended tier after, ordered by the builder's module in
+    ``_PLAN_MODULES`` and by registration order within a module — the
+    same order whichever plan module a process imported first."""
     global _LOADED
     if _LOADED:
         return
-    from etl_transparencia_sergipe_spark.plans import (  # noqa: F401
-        relational,
-        relational2,
-        textops,
-        dedup_queries,
-        similarity_queries,
-        streaming_queries,
-        ml_queries,
-        curation_queries,
-        event_analytics,
-        dq_audit,
-    )
+    for m in _PLAN_MODULES:
+        importlib.import_module(f"{__package__}.{m}")
 
     missing = [n for n in HEADLINE_50 if n not in REGISTRY]
     if missing:
         raise RuntimeError(f"HEADLINE_50 names not registered: {missing}")
+    rank = {f"{__package__}.{m}": i for i, m in enumerate(_PLAN_MODULES)}
     ordered = {n: REGISTRY[n] for n in HEADLINE_50}
-    ordered.update({n: q for n, q in REGISTRY.items() if n not in ordered})
+    ordered.update({q.name: q for q in sorted(
+        (q for n, q in REGISTRY.items() if n not in ordered),
+        key=lambda q: rank[q.build.__module__])})
     REGISTRY.clear()
     REGISTRY.update(ordered)
     _LOADED = True

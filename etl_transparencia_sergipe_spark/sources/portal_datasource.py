@@ -3,19 +3,22 @@
 S1/S3/S4 as a first-class source) — the only portal ingest path.
 
 ``spark.read.format("transparencia_portal")`` exposes the portal as a
-proper table: one input partition per (cidade, ano, mes) page — the
-reference's thread-grid (aracaju_barra_pirambu_scraper.py:328-344) becomes
-Spark's partition planning, with no grid DataFrame or shuffle —
-and equality filters on the partition dimensions are PUSHED INTO
+proper table over the (cidade, ano, mes) page grid. The grid is packed into
+at most ``max_partitions`` contiguous runs of pages (one page a partition
+without the option; :func:`load` passes the session's default parallelism)
+— the reference's fixed worker pool over the task grid
+(aracaju_barra_pirambu_scraper.py:328-344) becomes Spark's partition
+planning, with no grid DataFrame or shuffle — and equality filters on the
+partition dimensions are PUSHED INTO
 PLANNING: ``WHERE ano = 2024 AND cidade = 'aracaju'`` prunes the task
 grid before any fetch happens, the engine analog of the reference
 composing year/month into the request URL (pacatuba_scraper.py:332-335).
 
 Each partition calls the source's ``fetch_fn`` (tasks frame -> rows
 frame, the seam ``synthetic_fetch``, ``html_fetch`` and a production
-HTTP fetcher share) once, with bounded retry (D3, reference :97-147);
-a page that still fails yields one row with ``fetch_error`` set instead
-of failing the task, which feeds the two-pass retry (D4) in
+HTTP fetcher share) once per page, with bounded retry (D3, reference
+:97-147); a page that still fails yields one row with ``fetch_error`` set
+instead of failing the task, which feeds the two-pass retry (D4) in
 ``pipelines.run_with_retry``. Every page reaches Spark as one Arrow
 record batch. :func:`load` binds any ``fetch_fn`` to a read.
 
@@ -121,8 +124,10 @@ def _grid_options(options: dict) -> tuple[list[str], list[int], list[int]]:
 
 
 class TaskPartition(InputPartition):
-    def __init__(self, cidade: str, ano: int, mes: int):
-        self.cidade, self.ano, self.mes = cidade, ano, mes
+    """A contiguous run of (cidade, ano, mes) pages of the grid."""
+
+    def __init__(self, pages: list[tuple[str, int, int]]):
+        self.pages = pages
 
 
 class PortalReader(DataSourceReader):
@@ -135,6 +140,11 @@ class PortalReader(DataSourceReader):
         # fetcher stops requesting pages once max_rows rows were yielded.
         self.max_rows = int(options["max_rows"]) if "max_rows" in options \
             else None
+        # every Python task pays a fixed worker set-up (about 0.11 s on a
+        # 4-vCPU VM, most of it importlib.invalidate_caches), so a read
+        # packs its pages into one task per core rather than one per page
+        self.max_partitions = int(options["max_partitions"]) \
+            if "max_partitions" in options else None
 
     def pushFilters(self, filters):
         """Equality, ``In``, and range filters on (cidade, ano, mes) prune
@@ -182,14 +192,18 @@ class PortalReader(DataSourceReader):
         return True
 
     def partitions(self):
-        return [
-            TaskPartition(c, a, m)
-            for c in self.cidades for a in self.anos for m in self.meses
-        ]
+        """The pruned grid, in grid order, as at most ``max_partitions``
+        contiguous runs whose sizes differ by at most one page."""
+        grid = [(c, a, m)
+                for c in self.cidades for a in self.anos for m in self.meses]
+        n = min(len(grid), self.max_partitions or len(grid))
+        return [TaskPartition(grid[i * len(grid) // n:
+                                   (i + 1) * len(grid) // n])
+                for i in range(n)]
 
     def read(self, partition: TaskPartition) -> Iterator[pa.RecordBatch]:
-        yield fetch_page(self.fetch_fn, partition.cidade, partition.ano,
-                         partition.mes, self.max_rows)
+        for cidade, ano, mes in partition.pages:
+            yield fetch_page(self.fetch_fn, cidade, ano, mes, self.max_rows)
 
 
 class PortalStreamReader(SimpleDataSourceStreamReader):
@@ -255,7 +269,7 @@ def load(spark, cidades: list[str], anos: list[int],
          meses: list[int] | None, fetch_fn: FetchFn) -> DataFrame:
     """Read the (cidade, ano, mes) grid through the portal source with
     ``fetch_fn`` as its page fetcher (all twelve months when ``meses`` is
-    None).
+    None), in at most ``defaultParallelism`` partitions.
 
     The fetcher rides on a subclass registered under a name of its own,
     so concurrent reads with different fetchers never see each other's;
@@ -274,6 +288,7 @@ def load(spark, cidades: list[str], anos: list[int],
     BoundPortalDataSource.fetch_blob = cloudpickle.dumps(fetch_fn)
     spark.dataSource.register(BoundPortalDataSource)
     reader = (spark.read.format(name)
+              .option("max_partitions", spark.sparkContext.defaultParallelism)
               .option("cidades", ",".join(cidades))
               .option("anos", ",".join(map(str, anos))))
     if meses:

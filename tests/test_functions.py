@@ -7,6 +7,9 @@ from __future__ import annotations
 import re
 import unicodedata
 
+import duckdb
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from etl_transparencia_sergipe_spark.functions import (
@@ -20,6 +23,7 @@ from etl_transparencia_sergipe_spark.functions import (
 )
 from etl_transparencia_sergipe_spark.functions.normalize import (
     normalized_columns,
+    term_filter_sql,
 )
 
 # Strings mirroring the reference corpus (fonte_de_recurso values,
@@ -63,6 +67,77 @@ def test_term_filter_matches_reference_any_contains(spark):
     ]
     assert got == want
     assert sum(got) == 4  # 17200000+royalties, royalties petroleo, 15300000, royaltypetroleo
+
+
+# Values built from pieces that make and break royalty matches: words
+# split by punctuation the normalize step deletes ("royal-ty"), accents,
+# stray whitespace; terms with regex metacharacters, which must match as
+# literals. \v and \x1c-\x1f stay out: Java, RE2 and Python disagree on
+# whether they are \s.
+_PIECES = st.sampled_from([
+    "royal", "ty", "ties", "Royal-ty", "ROYAL", "PETRÓ", "petró", "leo",
+    "Petróleo", "1530", "0000", "17200000", "0120000", "roy.lty", "a+b",
+    "(pe", "1|5", "ação", " ", "  ", "\t", "\n", "-", ".", "(", ")", "+",
+    "|", ";", "R$", "ç",
+])
+_VALUE = st.one_of(st.none(), st.lists(_PIECES, max_size=6).map("".join))
+_TERM = st.one_of(
+    st.sampled_from(ROYALTY_TERMS + ("roy.lty", "petr.leo", "a+b", "(pe",
+                                     "1|5", "ty|pe", "royal ty")),
+    st.text(alphabet="royaltiespc015.+(|) \t", min_size=1, max_size=5))
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(_VALUE, min_size=1, max_size=12),
+       st.lists(_TERM, min_size=1, max_size=5).map(tuple), st.booleans())
+def test_term_filter_matches_reference_and_duckdb_twin(spark, values, terms,
+                                                       pre_normalized):
+    """``term_filter`` keeps exactly the rows the reference keeps, and its
+    DuckDB twin ``term_filter_sql`` gives the same answer row for row;
+    null stays null in both engines."""
+    def want(v):
+        if v is None:
+            return None
+        n = v if pre_normalized else reference_normalizar(v)
+        return any(t in n for t in terms)
+
+    df = spark.createDataFrame(list(enumerate(values)), "i int, v string")
+    got = [r.m for r in df.orderBy("i").select(
+        term_filter("v", terms, pre_normalized).alias("m")).collect()]
+    assert got == [want(v) for v in values]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE t (i INT, v VARCHAR)")
+        con.executemany("INSERT INTO t VALUES (?, ?)",
+                        list(enumerate(values)))
+        twin = [m for (m,) in con.execute(
+            f"SELECT {term_filter_sql('v', terms, pre_normalized)} "
+            "FROM t ORDER BY i").fetchall()]
+    finally:
+        con.close()
+    assert twin == got
+
+
+def _filter_conditions(df) -> list[str]:
+    """SQL of every Filter condition in ``df``'s optimized plan."""
+    out, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Filter":
+            out.append(node.condition().sql())
+        children = node.children()
+        todo += [children.apply(i) for i in range(children.size())]
+    return out
+
+
+def test_royalty_filter_normalizes_each_row_once(spark):
+    """The royalty pipeline's Filter evaluates the normalize step once per
+    row: one regexp_replace, not one per term."""
+    from etl_transparencia_sergipe_spark.pipelines import royalties_pipeline
+
+    conds = _filter_conditions(
+        royalties_pipeline(spark, ["aracaju"], [2024], [1]))
+    assert sum(c.count("regexp_replace(") for c in conds) == 1, conds
 
 
 def test_money_parse(spark):

@@ -1,5 +1,7 @@
-"""Custom Python Data Source: partition-per-task planning + equality
-filter pushdown pruning the task grid before any fetch."""
+"""Custom Python Data Source: the (cidade, ano, mes) page grid planned as
+input partitions (one page each on a direct read, packed one run of pages
+a core through ``load``) + equality filter pushdown pruning the grid
+before any fetch."""
 
 from __future__ import annotations
 
@@ -90,8 +92,8 @@ def test_matches_synthetic_fetch(spark, portal):
 
 
 def test_max_rows_bounds_each_partition(spark, portal):
-    """max_rows: the per-partition fetch bound a pushed LIMIT would give
-    (the Python DSv2 API has no limit-pushdown hook)."""
+    """max_rows: the per-page fetch bound a pushed LIMIT would give (the
+    Python DSv2 API has no limit-pushdown hook)."""
     full_per_part = (
         portal.load().groupBy("cidade", "ano", "mes").count().collect())
     assert all(r["count"] > 2 for r in full_per_part)
@@ -106,3 +108,61 @@ def test_max_rows_bounds_each_partition(spark, portal):
     per_part = capped.groupBy("cidade", "ano", "mes").count().collect()
     assert len(per_part) == 12
     assert all(r["count"] == 2 for r in per_part)
+
+
+def test_load_packs_pages_one_partition_a_core(spark):
+    """``load`` over 2 cidades x 12 meses plans min(24, defaultParallelism)
+    partitions and fetches every page exactly once."""
+    from etl_transparencia_sergipe_spark.sources.scraper_source import (
+        synthetic_fetch,
+    )
+
+    sc = spark.sparkContext
+    cidades = ["aracaju", "pacatuba"]
+    fetched = {(c, m): sc.accumulator(0)
+               for c in cidades for m in range(1, 13)}
+
+    def counted(tasks):
+        for c, m in zip(tasks["cidade"], tasks["mes"]):
+            fetched[(c, m)].add(1)
+        return synthetic_fetch(tasks)
+
+    df = portal_datasource.load(spark, cidades, [2024], None, counted)
+    assert df.rdd.getNumPartitions() == min(24, sc.defaultParallelism)
+    assert df.count() > 0
+    assert {k: a.value for k, a in fetched.items()} \
+        == {k: 1 for k in fetched}
+
+
+def test_failed_page_inside_a_packed_partition(spark, monkeypatch):
+    """A page that always fails gives one fetch_error row, and the pages
+    that share its partition give the rows a one-page-per-partition read
+    gives."""
+    from pyspark import SparkContext
+
+    from etl_transparencia_sergipe_spark.sources.scraper_source import (
+        synthetic_fetch,
+    )
+
+    def dead_march(tasks):
+        if (tasks["mes"] == 3).any():
+            raise RuntimeError("portal timeout")
+        return synthetic_fetch(tasks)
+
+    def read(parallelism: int):
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: parallelism))
+        df = portal_datasource.load(spark, ["aracaju"], [2024], None,
+                                    dead_march)
+        return df.rdd.getNumPartitions(), sorted(
+            df.collect(), key=lambda r: [str(v) for v in r])
+
+    n_packed, packed = read(1)
+    n_single, single = read(12)
+    assert (n_packed, n_single) == (1, 12)
+    errors = [r for r in packed if r.fetch_error is not None]
+    assert [(r.mes, r.fetch_error) for r in errors] \
+        == [(3, "RuntimeError: portal timeout")]
+    assert {r.mes for r in packed if r.fetch_error is None} \
+        == set(range(1, 13)) - {3}
+    assert packed == single

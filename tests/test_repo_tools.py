@@ -1,7 +1,8 @@
 """The repository scripts that stay (no Spark session): the helpers the
 benchmark imports from ``bench.py`` and ``tools/check_correctness.py``
-resolve, every ``tools/<name>.py`` the docs cite exists, and QUERIES.md
-is what ``tools/gen_query_catalog.py`` renders from the registry."""
+resolve, every ``tools/<name>.py`` the docs cite exists, QUERIES.md is
+what ``tools/gen_query_catalog.py`` renders from the registry, and the
+registry's order does not depend on import order."""
 
 from __future__ import annotations
 
@@ -54,15 +55,23 @@ def test_cited_tools_exist(doc):
     assert sorted(n for n in cited if not (ROOT / "tools" / n).exists()) == []
 
 
-def test_queries_md_matches_registry():
-    # rendered in a fresh interpreter, as the script runs: the extended
-    # tier keeps registration order, which follows the order in which
-    # the process first imported the plan modules
+def test_queries_md_matches_registry(tools_path):
+    import gen_query_catalog as g
+
+    above = (ROOT / "QUERIES.md").read_text().split(g.MARKER, 1)[0]
+    assert above.rstrip("\n") == g.render_table().rstrip("\n")
+
+
+def test_registry_order_ignores_import_order():
+    # a fresh interpreter that imports a plan module before the registry
+    # gets the extended tier in the same order as this process
+    from etl_transparencia_sergipe_spark.plans.registry import queries
+
     out = subprocess.run(
-        [sys.executable, "-c", "import gen_query_catalog as g; "
-         "print(g.MARKER); print(g.render_table())"],
-        cwd=ROOT / "tools", capture_output=True, text=True, timeout=300,
+        [sys.executable, "-c",
+         "import etl_transparencia_sergipe_spark.plans.relational2; "
+         "from etl_transparencia_sergipe_spark.plans.registry import "
+         "queries; print(*queries(), sep=chr(10))"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
         check=True).stdout
-    marker, table = out.split("\n", 1)
-    above = (ROOT / "QUERIES.md").read_text().split(marker, 1)[0]
-    assert above.rstrip("\n") == table.rstrip("\n")
+    assert out.split() == list(queries())
