@@ -87,9 +87,11 @@ def term_filter(col: Column | str, terms: tuple[str, ...] = ROYALTY_TERMS,
 
 def term_filter_sql(expr: str, terms: tuple[str, ...] = ROYALTY_TERMS,
                     pre_normalized: bool = False) -> str:
-    """DuckDB twin of :func:`term_filter`."""
+    """DuckDB twin of :func:`term_filter`. The pattern is a SQL string
+    literal, so each ``'`` in a term is doubled."""
     inner = expr if pre_normalized else normalize_text_sql(expr)
-    return f"regexp_matches({inner}, '{_term_pattern(terms)}')"
+    pattern = _term_pattern(terms).replace("'", "''")
+    return f"regexp_matches({inner}, '{pattern}')"
 
 
 class _NormTable(dict):

@@ -10,11 +10,22 @@ cluster, then overridden down for local[N] testing:
   on a real cluster AQE coalesces from a high initial number.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for any pandas-UDF path.
+- Task-running Python workers fork from ``_worker_daemon``
+  (``spark.python.daemon.module``), which takes Spark's ``pyspark.zip``,
+  py4j zip and ``spark-core`` jar off the worker path when the installed
+  pyspark is the same version. PySpark calls ``importlib.invalidate_caches()``
+  in every task, and with those archives on the path that call re-read
+  about 27k zip entries: 0.10-0.13 s a task on a 4-vCPU VM, under
+  0.1 ms without them. The package's parent directory is appended to
+  ``spark.executorEnv.PYTHONPATH`` so workers find the daemon module
+  from any cwd. Spark's data-source planner round trips still start
+  ``pyspark.daemon`` itself and keep paying the cost.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -34,6 +45,10 @@ def get_spark(app_name: str = "etl-transparencia-sergipe-spark",
     partitions, matching the driver's bench contract.
     """
     cores = _default_parallelism()
+    conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(filter(None, (
+        conf.pop("spark.executorEnv.PYTHONPATH", ""),
+        str(Path(__file__).resolve().parent.parent))))
     builder = (
         SparkSession.builder
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]"))
@@ -82,8 +97,11 @@ def get_spark(app_name: str = "etl-transparencia-sergipe-spark",
         # layout.py measures the skip fraction) and is what modern lake
         # formats mandate anyway
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.python.daemon.module",
+                "etl_transparencia_sergipe_spark._worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

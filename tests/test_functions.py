@@ -78,13 +78,13 @@ _PIECES = st.sampled_from([
     "royal", "ty", "ties", "Royal-ty", "ROYAL", "PETRÓ", "petró", "leo",
     "Petróleo", "1530", "0000", "17200000", "0120000", "roy.lty", "a+b",
     "(pe", "1|5", "ação", " ", "  ", "\t", "\n", "-", ".", "(", ")", "+",
-    "|", ";", "R$", "ç",
+    "|", ";", "R$", "ç", "'", "d'agua",
 ])
 _VALUE = st.one_of(st.none(), st.lists(_PIECES, max_size=6).map("".join))
 _TERM = st.one_of(
     st.sampled_from(ROYALTY_TERMS + ("roy.lty", "petr.leo", "a+b", "(pe",
-                                     "1|5", "ty|pe", "royal ty")),
-    st.text(alphabet="royaltiespc015.+(|) \t", min_size=1, max_size=5))
+                                     "1|5", "ty|pe", "royal ty", "d'agua")),
+    st.text(alphabet="royaltiespc015.+(|)' \t", min_size=1, max_size=5))
 
 
 @settings(max_examples=30, deadline=None)
@@ -116,6 +116,19 @@ def test_term_filter_matches_reference_and_duckdb_twin(spark, values, terms,
     finally:
         con.close()
     assert twin == got
+
+
+def test_term_filter_sql_quotes_apostrophes():
+    """A term with an apostrophe (a place name such as ``d'agua``) stays
+    inside the DuckDB string literal."""
+    con = duckdb.connect()
+    try:
+        got = [con.execute("SELECT " + term_filter_sql(v, ("d'agua",), True)
+                           ).fetchone()[0]
+               for v in ("'olho d''agua'", "'dagua'")]
+    finally:
+        con.close()
+    assert got == [True, False]
 
 
 def _filter_conditions(df) -> list[str]:

@@ -1,8 +1,9 @@
 """The repository scripts that stay (no Spark session): the helpers the
 benchmark imports from ``bench.py`` and ``tools/check_correctness.py``
 resolve, every ``tools/<name>.py`` the docs cite exists, QUERIES.md is
-what ``tools/gen_query_catalog.py`` renders from the registry, and the
-registry's order does not depend on import order."""
+what ``tools/gen_query_catalog.py`` renders from the registry, the
+registry's order does not depend on import order, and importing the
+package does not import pyspark."""
 
 from __future__ import annotations
 
@@ -75,3 +76,17 @@ def test_registry_order_ignores_import_order():
         cwd=ROOT, capture_output=True, text=True, timeout=300,
         check=True).stdout
     assert out.split() == list(queries())
+
+
+def test_package_import_leaves_pyspark_out():
+    # Spark's Python daemon imports the package before
+    # ``_worker_daemon`` can take Spark's archives off the path
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, etl_transparencia_sergipe_spark; "
+         "print('pyspark' in sys.modules); "
+         "from etl_transparencia_sergipe_spark import get_spark; "
+         "print(get_spark.__module__)"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+        check=True).stdout
+    assert out.split() == ["False", "etl_transparencia_sergipe_spark.session"]
